@@ -235,17 +235,18 @@ object Mining extends Family {
   // undirected edge connects parts bought together in >= 2 distinct orders
   // (the support floor removes the single-co-occurrence noise that
   // dominates pair volume — 1.2M raw pairs -> 3.6k signal edges at sf0.1).
-  // Runs [[graft.ops.PageRank.runFixedPoint]]: every quantity a BIGINT in
-  // 1e-15 units, every division integral — bit-identical across engines,
-  // so a fixed 5-iteration power loop IS DuckDB-expressible as 5 unrolled
-  // CTEs (r0..r5) with `//` floor division, and the entry carries a full
-  // rows+schema+hash oracle (the IEEE/HALF_UP variants that blocked an
-  // oracle in earlier rounds are gone). The graph is symmetric by
-  // construction, so neither side needs dangling-mass handling; decimal
-  // [[graft.ops.PageRank.run]] remains the float-output variant, spec-
-  // covered in PageRankSpec (closed forms, mass conservation, dangling).
-  // Scale ledger: O(iters x |E|) network, per-round lineage cut, driver
-  // scalars limited to |V|; identical plan shape to the decimal variant.
+  // Runs [[graft.ops.PageRank.run]], the one fixed-point loop, with unit
+  // edge weights (W_u is then the out-degree, so `(r div W_u) * 1` is the
+  // oracle's `r // deg`): every quantity a BIGINT in 1e-15 units, damping
+  // the constant 85/100, every division integral — bit-identical across
+  // engines, so a fixed 5-iteration power loop IS DuckDB-expressible as 5
+  // unrolled CTEs (r0..r5) with `//` floor division, and the entry carries
+  // a full rows+schema+hash oracle. The graph is symmetric by
+  // construction, so neither side needs dangling-mass handling; the loop's
+  // closed forms, mass conservation and dangling redistribution are
+  // spec-covered in PageRankSpec.
+  // Scale ledger: O(iters x |E|) network, lineage cut every 3 rounds,
+  // driver scalars limited to |V|.
   private val pagerank = Q(
     "graph_pagerank_parts",
     Some {
@@ -286,7 +287,8 @@ object Mining extends Family {
       .filter(col("n_orders") >= 2)
     val edges = sup.select(col("part_a").as("src"), col("part_b").as("dst"))
       .union(sup.select(col("part_b").as("src"), col("part_a").as("dst")))
-    graft.ops.PageRank.runFixedPoint(edges, iters = 5)
+      .withColumn("w", lit(1L))
+    graft.ops.PageRank.run(edges, iters = 5)
       .orderBy(col("rank_fp").desc, col("node"))
       .limit(20)
       .select(col("node").as("part"), col("rank_fp"), col("rank"))

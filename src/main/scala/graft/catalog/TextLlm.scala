@@ -1042,8 +1042,9 @@ object TextLlm extends Family {
   // cards / topic drift alongside tfidf_top_terms (which needs a document
   // grouping; TextRank works corpus-global).
   //
-  // Exactness: [[graft.ops.PageRank.runFixedPointWeighted]] — 1e15-scaled
-  // integer fixed-point, truncate-before-multiply edge contributions, so
+  // Exactness: [[graft.ops.PageRank.run]], the one fixed-point loop —
+  // 1e15-scaled integers, damping the constant 85/100,
+  // truncate-before-multiply edge contributions `(r div W_u) * w`, so
   // five power iterations are bit-identical to the oracle's five unrolled
   // integer CTEs (the graph_pagerank_parts discipline on a text graph).
   // Scale shape: graph build is one corpus-linear bigram aggregate
@@ -1098,7 +1099,7 @@ object TextLlm extends Family {
       .filter(col("w") >= 2)
     val edges = pw.select(col("a").as("src"), col("b").as("dst"), col("w"))
       .union(pw.select(col("b").as("src"), col("a").as("dst"), col("w")))
-    graft.ops.PageRank.runFixedPointWeighted(edges, iters = 5)
+    graft.ops.PageRank.run(edges, iters = 5)
       .orderBy(col("rank_fp").desc, col("node"))
       .limit(20)
       .select(col("node").as("term"), col("rank_fp"), col("rank"))

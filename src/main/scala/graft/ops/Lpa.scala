@@ -44,35 +44,11 @@ object Lpa {
     require(rounds >= 1)
     // adjacency is consumed every round; labels are consumed twice per
     // round (join + next seed) — lineage cut keeps round r from
-    // re-executing rounds 1..r-1 per consumer.
-    // Hash-partition the adjacency by the join key ONCE (the PageRank
-    // discipline): localCheckpoint preserves the partitioning, so every
-    // round's nbr-keyed join re-shuffles only the node-sized label side —
-    // the edge-width adjacency is exchange-free across all rounds. The
-    // partition COUNT tracks |E| (500k rows per partition, capped at the
-    // session's shuffle parallelism) so a small graph's rounds don't pay
-    // conf-many near-empty tasks.
-    val spark = edges.sparkSession
-    val adj0 = edges
+    // re-executing rounds 1..r-1 per consumer. The adjacency is
+    // materialized once, keyed on the join column (see Partitioned).
+    val adj = Partitioned.byKey(edges
       .select(col("u").as("m"), col("v").as("nbr"))
-      .unionAll(edges.select(col("v").as("m"), col("u").as("nbr")))
-      .localCheckpoint()
-    // Scale-adaptive: below one shuffle-partition's worth of adjacency
-    // (500k rows) the per-round exchange is trivia and the extra
-    // repartition + checkpoint materialization would COST more than it
-    // saves (measured: +0.15 s per LPA cell at sf0.1) — keep the plain
-    // checkpoint. Past it, pre-partitioning pays once and every round's
-    // edge-width exchange disappears. The |adj| count reads the
-    // already-materialized checkpoint, not the upstream derivation.
-    val cnt = adj0.count()
-    val adj =
-      if (cnt < 500000L) adj0
-      else {
-        val parts = math.min(
-          spark.sessionState.conf.numShufflePartitions.toLong,
-          cnt / 500000L + 1).toInt
-        adj0.repartition(parts, col("nbr")).localCheckpoint()
-      }
+      .unionAll(edges.select(col("v").as("m"), col("u").as("nbr"))), "nbr")
     // seed labels are consumed exactly once (round 1's join), so they ride
     // round 1's plan instead of paying their own materialization job
     var labels = adj.select(col("m").as("node")).distinct()

@@ -1,35 +1,40 @@
 package graft.ops
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /**
- * Distributed PageRank over an edge list (`src`, `dst`) — the standard
- * power-iteration formulation with damping and dangling-mass redistribution:
+ * Distributed weighted PageRank over an edge list (`src`, `dst`, `w`) — the
+ * power iteration with damping d = 85/100 and dangling-mass redistribution,
+ * contributions split along edge WEIGHTS (the TextRank form, Mihalcea &
+ * Tarau 2004):
  *
- *   rank'(v) = (1-d)/N + d * ( Σ_{u→v} rank(u)/deg(u)  +  danglingMass/N )
+ *   rank'(v) = (1-d)/N + d * ( Σ_{u→v} (w_uv / W_u) * rank(u) + danglingMass/N )
  *
- * Built the same way as [[Components]]: declarative DataFrame joins per
- * round, `localCheckpoint` to cut lineage (plan depth stays O(1) per
- * iteration instead of O(iterations)), driver-side scalars limited to
- * metadata (node count and dangling-node existence once, dangling mass per
- * round — and only when dangling nodes exist).
+ * with W_u the weighted out-degree. Unit weights give classic PageRank:
+ * W_u is then the out-degree and `(r div W_u) * 1 == r div deg`.
  *
- * All iteration arithmetic is DECIMAL(38,18), not double: decimal sums are
- * exact and order-independent, so the result is bit-identical across reruns
- * and partitionings — double partial-aggregation order varies with
- * scheduling and would wobble ranks at the ulp level, flipping near-tie
- * orderings downstream (the [[graft.ops.Exact]] discipline, applied to an
- * iterative operator). The output casts to double once at the end.
+ * Fixed-point arithmetic: every quantity is a BIGINT in units of 1/1e15
+ * and every division is integral floor division. The result is
+ * bit-identical across engines, partitionings and summation orders —
+ * integer sums commute exactly — which makes the operator
+ * DuckDB-oracle-checkable as unrolled integer CTEs. The per-edge
+ * contribution is `(r div W_u) * w_uv`: truncate BEFORE the weight
+ * multiply, so the product is bounded by r for any weight. Floor division
+ * leaks ≤ 1 unit of mass per node per round — a relative error
+ * ~|V|·iters/1e15, far below any ranking-relevant difference.
  *
- * Scale shape per iteration: ONE src-keyed join (edges × ranks — both sides
- * hash-partitioned on the same key, so a pre-partitioned edge table makes
- * this exchange-free on the edge side) and ONE dst-keyed aggregate. Total
- * network cost is O(iterations × |E|), the canonical Pregel-equivalent plan;
- * no step depends on |V| fitting anywhere central.
+ * Overflow ledger (ANSI mode throws rather than wraps, so this is a
+ * correctness precondition, not a style note): ranks sum to ≤ Scale, so a
+ * contribution sum is ≤ Scale = 1e15; the damping product is
+ * ≤ DampNum·Scale = 8.5e16; both far under Long.MaxValue ≈ 9.2e18.
+ *
+ * Scale shape per iteration: ONE src-keyed join (edges × ranks; the edge
+ * side is materialized once by [[Partitioned.byKey]]) and ONE dst-keyed
+ * aggregate. `localCheckpoint` every [[CheckpointEvery]] rounds keeps plan
+ * depth O(1); driver-side scalars are limited to |V| once and the dangling
+ * mass per round (only when dangling nodes exist). Total network cost is
+ * O(iterations × |E|); no step depends on |V| fitting anywhere central.
  *
  * Reference provenance: graph analytics is beyond the reference's declared
  * surface (`/root/reference/README.md:23-33` stops at funnels); this extends
@@ -37,151 +42,22 @@ import org.apache.spark.sql.types.DecimalType
  */
 object PageRank {
 
-  // Rank storage is DECIMAL(28,18), damping DECIMAL(8,6) — narrow enough
-  // that Spark's decimal-precision rules keep every product/sum under
-  // precision 38 WITHOUT the silent scale-6 truncation a (38,18)x(38,18)
-  // multiply triggers (DecimalPrecision caps overflowing results at
-  // MINIMUM_ADJUSTED_SCALE=6, a 1e-6 mass leak per iteration).
-  private val Dec = DecimalType(28, 18)
-  private val DampDec = DecimalType(8, 6)
+  // Both oracle SQLs hard-code these: 85/100 damping, 1e15 units.
+  private val DampNum = 85L
+  private val DampDen = 100L
+  private val Scale = 1000000000000000L
+  private val CheckpointEvery = 3
 
   /**
-   * @param edges  directed edges (`src`, `dst`); parallel edges count once
-   *               (dedup upstream if needed)
-   * @param iters  fixed power iterations (10-20 converges for web-like
-   *               graphs at d=0.85)
-   * @return (`node`, `rank`) — doubles summing to 1 over all nodes
+   * @param edges directed (`src`, `dst`, `w`) with int64 weights ≥ 1;
+   *              parallel edges count once (dedup upstream if needed)
+   * @param iters fixed power iterations
+   * @return (`node`, `rank_fp` BIGINT units, `rank` double = rank_fp/1e15)
    */
-  def run(edges: DataFrame, iters: Int, damping: Double = 0.85,
-          checkpointEvery: Int = 3): DataFrame = {
+  def run(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    require(checkpointEvery >= 1, s"checkpointEvery must be >= 1: $checkpointEvery")
-    require(damping > 0 && damping < 1, s"damping must be in (0,1): $damping")
-    // Hash-partition edges by the join key ONCE: localCheckpoint preserves
-    // the partitioning, so every iteration's src-keyed join re-shuffles
-    // only the (small, changing) rank side — the (large, static) edge side
-    // is exchange-free across all iterations, and the degree aggregate
-    // below it is map-side. The partition COUNT tracks |E| (500k edges per
-    // partition, capped at the session's shuffle parallelism): a small
-    // graph's iterations then don't pay conf-many near-empty tasks per
-    // round × iters, while a large graph keeps full parallelism. The |E|
-    // count reads the already-materialized checkpoint, not the upstream
-    // edge derivation.
-    val spark = edges.sparkSession
-    val e0 = edges.select(col("src"), col("dst")).localCheckpoint()
-    val eCnt = e0.count()
-    // Scale-adaptive (the Lpa dial): below one shuffle-partition's worth
-    // of edges the per-iteration exchange is trivia and the extra
-    // repartition + checkpoint materialization costs more than it saves —
-    // keep the plain checkpoint. Past it, pre-partitioning by the join
-    // key pays once and every iteration's edge-width exchange disappears.
-    val e =
-      if (eCnt < 500000L) e0
-      else {
-        val parts = math.min(
-          spark.sessionState.conf.numShufflePartitions.toLong,
-          eCnt / 500000L + 1).toInt
-        e0.repartition(parts, col("src")).localCheckpoint()
-      }
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
-    val n = nodes.count() // metadata scalar: |V|, once
-    require(n > 0, "empty graph")
-    // valueOf(double) goes through Double.toString — 0.85 stays "0.85",
-    // not its binary-double expansion
-    val d = JBigDecimal.valueOf(damping)
-    require(d.scale <= 6, s"damping needs <= 6 decimal digits: $damping")
-    val nBig = JBigDecimal.valueOf(n)
-    val base = JBigDecimal.ONE.subtract(d).divide(nBig, 18, RoundingMode.HALF_UP)
-    // Dangling-node existence is a property of the GRAPH, not the ranks —
-    // and it is already decided by two counts we have for free: a dangling
-    // node is one with no out-edges, so some exist iff |V| > |{src}| =
-    // deg's row count (deg is checkpointed; counting it reads the
-    // materialized RDD). This replaces the old left_anti isEmpty probe,
-    // which ran the anti-join once to test emptiness and — on graphs that
-    // DO have dangling nodes — a second time for the checkpoint
-    // materialization. Symmetric graphs (every undirected edge emitted
-    // both ways, e.g. the co-purchase graph) skip the per-iteration
-    // dangling-mass aggregate entirely.
-    val hasDangling = n > deg.count()
-    val danglingNodes =
-      if (hasDangling)
-        nodes.join(deg.withColumnRenamed("src", "node"), Seq("node"), "left_anti")
-          .localCheckpoint()
-      else null
-    var ranks = nodes.withColumn("rank",
-      lit(JBigDecimal.ONE.divide(nBig, 18, RoundingMode.HALF_UP)).cast(Dec))
-    for (i <- 1 to iters) {
-      // dangling nodes (no out-edges) leak their mass — redistribute it
-      // uniformly; 1-row exact-decimal aggregate per round (only when
-      // dangling nodes exist), same cost class as Components' probe
-      val danglingOverN =
-        if (!hasDangling) JBigDecimal.ZERO
-        else {
-          val m = ranks.join(danglingNodes, Seq("node"), "left_semi")
-            .agg(coalesce(sum(col("rank")), lit(0).cast(Dec)))
-            .first().getDecimal(0)
-          m.divide(nBig, 18, RoundingMode.HALF_UP)
-        }
-      val contribs = e
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .join(deg, Seq("src"))
-        .select(col("dst").as("node"),
-          (col("rank") / col("deg")).cast(Dec).as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).cast(Dec).as("contrib"))
-      ranks = nodes
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base).cast(Dec) + lit(d).cast(DampDec) *
-            (coalesce(col("contrib"), lit(0).cast(Dec))
-              + lit(danglingOverN).cast(Dec))).cast(Dec).as("rank"))
-      if (i % checkpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
-    }
-    ranks.select(col("node"), col("rank").cast("double").as("rank"))
-  }
-
-  /**
-   * Fixed-point PageRank: identical power iteration, but every quantity is
-   * a BIGINT in units of 1/`scale` and every division is integral floor
-   * division. The result is bit-identical across engines, partitionings,
-   * and summation orders — integer sums commute exactly — which makes the
-   * operator DuckDB-oracle-checkable (the [[run]] decimal variant is
-   * deterministic within Spark but its HALF_UP division points can't be
-   * reproduced portably in SQL). Floor division leaks ≤1 unit of mass per
-   * node per round — at scale=1e15 a relative error ~|V|·iters/1e15,
-   * far below any ranking-relevant difference.
-   *
-   * Overflow ledger (ANSI mode throws rather than wraps, so this is a
-   * correctness precondition, not a style note): ranks sum to ≤ scale, so
-   * a contribution sum is ≤ scale = 1e15; the damping product is
-   * ≤ dampNum·scale = 8.5e16; both far under Long.MaxValue ≈ 9.2e18.
-   *
-   * @param edges directed (`src`, `dst`); parallel edges count once
-   * @param scale fixed-point denominator (rank 1.0 == `scale` units)
-   * @return (`node`, `rank_fp` BIGINT units, `rank` double = rank_fp/scale)
-   */
-  def runFixedPoint(edges: DataFrame, iters: Int, dampNum: Long = 85,
-                    dampDen: Long = 100, scale: Long = 1000000000000000L,
-                    checkpointEvery: Int = 3): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampNum > 0 && dampNum < dampDen, s"damping must be in (0,1): $dampNum/$dampDen")
-    require(scale <= 1000000000000000L, "scale beyond 1e15 risks damping-product overflow")
-    val spark = edges.sparkSession
-    val e0 = edges.select(col("src"), col("dst")).localCheckpoint()
-    // scale-adaptive pre-partitioning — see run()
-    val eCnt = e0.count()
-    val e =
-      if (eCnt < 500000L) e0
-      else {
-        val parts = math.min(
-          spark.sessionState.conf.numShufflePartitions.toLong,
-          eCnt / 500000L + 1).toInt
-        e0.repartition(parts, col("src")).localCheckpoint()
-      }
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg")).localCheckpoint()
+    val e = Partitioned.byKey(edges.select(col("src"), col("dst"), col("w")), "src")
+    val deg = e.groupBy(col("src")).agg(sum(col("w")).as("wdeg")).localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
@@ -190,115 +66,35 @@ object PageRank {
     require(n > 0, "empty graph")
     // Scala Long `/` truncates toward zero == floor for the non-negative
     // operands here; mirrors SQL `x div y` / DuckDB `x // y` exactly.
-    val base = scale * (dampDen - dampNum) / dampDen / n
-    // dangling existence from counts already on hand (|V| vs deg's row
-    // count — deg is checkpointed, so its count reads the materialized
-    // RDD): no isEmpty probe job, and the anti-join below executes exactly
-    // once, only on graphs that have dangling nodes — see run()
-    val hasDangling = n > deg.count()
+    val base = Scale * (DampDen - DampNum) / DampDen / n
+    // A dangling node has no out-edges, so some exist iff |V| > deg's row
+    // count (deg is checkpointed; counting it reads the materialized RDD):
+    // no isEmpty probe job, and the anti-join runs once, only on graphs
+    // that have dangling nodes. Symmetric graphs (every undirected edge
+    // emitted both ways) skip the per-round dangling-mass aggregate.
     val danglingNodes =
-      if (hasDangling)
-        nodes.join(deg.withColumnRenamed("src", "node"), Seq("node"), "left_anti")
-          .localCheckpoint()
-      else null
-    var ranks = nodes.withColumn("r", lit(scale / n))
+      if (n == deg.count()) None
+      else Some(nodes.join(deg.withColumnRenamed("src", "node"), Seq("node"), "left_anti")
+        .localCheckpoint())
+    var ranks = nodes.withColumn("r", lit(Scale / n))
     for (i <- 1 to iters) {
-      val danglingOverN =
-        if (!hasDangling) 0L
-        else ranks.join(danglingNodes, Seq("node"), "left_semi")
-          .agg(coalesce(sum(col("r")), lit(0L))).first().getLong(0) / n
+      val danglingOverN = danglingNodes.fold(0L)(dn =>
+        ranks.join(dn, Seq("node"), "left_semi")
+          .agg(coalesce(sum(col("r")), lit(0L))).first().getLong(0) / n)
       val contribs = e
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
         .join(deg, Seq("src"))
-        .select(col("dst").as("node"), expr("r div deg").as("c"))
+        .select(col("dst").as("node"), expr("(r div wdeg) * w").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
       // SQL `div` (integral), NOT Column./ — Divide on longs returns DOUBLE
       ranks = nodes
         .join(contribs, Seq("node"), "left")
         .select(col("node"),
-          expr(s"$base + ($dampNum * (coalesce(contrib, 0) + $danglingOverN)) div $dampDen")
+          expr(s"$base + ($DampNum * (coalesce(contrib, 0) + $danglingOverN)) div $DampDen")
             .as("r"))
-      if (i % checkpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
+      if (i % CheckpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
     }
     ranks.select(col("node"), col("r").as("rank_fp"),
-      (col("r").cast("double") / lit(scale.toDouble)).as("rank"))
-  }
-
-  /**
-   * Weighted fixed-point power iteration (the TextRank form, Mihalcea &
-   * Tarau 2004): contributions split along edge WEIGHTS instead of the
-   * out-degree —
-   *
-   *   rank'(v) = (1-d)/N + d * Σ_{u→v} (w_uv / W_u) * rank(u)
-   *
-   * with W_u the weighted out-degree. Same exact-integer discipline as
-   * [[runFixedPoint]]: per-edge contribution is `(r div W_u) * w_uv` —
-   * truncate BEFORE the weight multiply, so the product is bounded by r
-   * (no overflow for any weight) and the arithmetic stays bit-identical
-   * to the oracle's unrolled `(r // wdeg) * w` CTEs. The truncation loss
-   * is ≤ w/W per edge of a 1e15-scaled rank — noise Σ-bounded far below
-   * rank spacing. Scale shape identical to the unweighted form:
-   * O(iters × |E|), edge side exchange-free across rounds.
-   *
-   * @param edges directed (`src`, `dst`, `w`) with int64 weights ≥ 1
-   */
-  def runFixedPointWeighted(edges: DataFrame, iters: Int, dampNum: Long = 85,
-                            dampDen: Long = 100,
-                            scale: Long = 1000000000000000L,
-                            checkpointEvery: Int = 3): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(dampNum > 0 && dampNum < dampDen, s"damping must be in (0,1): $dampNum/$dampDen")
-    require(scale <= 1000000000000000L, "scale beyond 1e15 risks damping-product overflow")
-    val spark = edges.sparkSession
-    val e0 = edges.select(col("src"), col("dst"), col("w")).localCheckpoint()
-    // scale-adaptive pre-partitioning — see run()
-    val eCnt = e0.count()
-    val e =
-      if (eCnt < 500000L) e0
-      else {
-        val parts = math.min(
-          spark.sessionState.conf.numShufflePartitions.toLong,
-          eCnt / 500000L + 1).toInt
-        e0.repartition(parts, col("src")).localCheckpoint()
-      }
-    val deg = e.groupBy(col("src")).agg(sum(col("w")).as("wdeg")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
-    val n = nodes.count()
-    require(n > 0, "empty graph")
-    val base = scale * (dampDen - dampNum) / dampDen / n
-    // dangling existence from counts already on hand (|V| vs deg's row
-    // count — deg is checkpointed, so its count reads the materialized
-    // RDD): no isEmpty probe job, and the anti-join below executes exactly
-    // once, only on graphs that have dangling nodes — see run()
-    val hasDangling = n > deg.count()
-    val danglingNodes =
-      if (hasDangling)
-        nodes.join(deg.withColumnRenamed("src", "node"), Seq("node"), "left_anti")
-          .localCheckpoint()
-      else null
-    var ranks = nodes.withColumn("r", lit(scale / n))
-    for (i <- 1 to iters) {
-      val danglingOverN =
-        if (!hasDangling) 0L
-        else ranks.join(danglingNodes, Seq("node"), "left_semi")
-          .agg(coalesce(sum(col("r")), lit(0L))).first().getLong(0) / n
-      val contribs = e
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .join(deg, Seq("src"))
-        // truncate-then-multiply: bounded by r, exact-integer, oracle-exact
-        .select(col("dst").as("node"), expr("(r div wdeg) * w").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
-      ranks = nodes
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          expr(s"$base + ($dampNum * (coalesce(contrib, 0) + $danglingOverN)) div $dampDen")
-            .as("r"))
-      if (i % checkpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
-    }
-    ranks.select(col("node"), col("r").as("rank_fp"),
-      (col("r").cast("double") / lit(scale.toDouble)).as("rank"))
+      (col("r").cast("double") / lit(Scale.toDouble)).as("rank"))
   }
 }

@@ -34,6 +34,7 @@ object Prefix {
       Set[DataType](ByteType, ShortType, IntegerType, LongType)
         .contains(df.schema(valueCol).dataType)
     }, s"runningSum requires an integral $valueCol (token counts, bytes, rows)")
+    requireFree(df, "_pid")
     val parts =
       if (partitions > 0) df.repartitionByRange(partitions, col(key))
       else df.repartitionByRange(col(key))
@@ -67,6 +68,13 @@ object Prefix {
           element_at(typedlit(sumArr), col("_pid") + 1))
       .drop("_pid")
   }
+
+  /** The operators below add and drop fixed scratch columns; a caller
+    * column of the same name (Spark resolves names case-insensitively)
+    * would be silently overwritten or dropped. */
+  private def requireFree(df: DataFrame, names: String*): Unit =
+    names.foreach(n => require(!df.columns.exists(_.equalsIgnoreCase(n)),
+      s"input already has a column named $n, which Prefix uses internally; rename it"))
 
   /** Dense prefix-offset array over partition ids 0..P-1: entry p = sum of
     * the totals of partitions before p (empty partitions contribute 0). */
@@ -112,27 +120,36 @@ object Prefix {
     val withPid = org.apache.spark.sql.graftbridge.bridge.freshFrame(
       df.repartitionByRange(orderCols: _*)
         .withColumn("_pid", spark_partition_id()).localCheckpoint(true))
+    // per partition: rows, non-NULL values, and their sum
     val offsets = withPid.groupBy(col("_pid"))
       .agg(count(lit(1)).as("_pcnt"),
+        valueCol.map(v => count(col(v))).getOrElse(lit(0L)).as("_pnn"),
         valueCol.map(v => sum(coalesce(col(v), lit(0L))))
           .getOrElse(sum(lit(0L))).as("_ptot"))
       .collect()
-      .map(r => (r.getInt(0), r.getLong(1),
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         Option(r.getAs[Number]("_ptot")).map(_.longValue()).getOrElse(0L)))
       .sortBy(_._1)
     // dense arrays indexed by _pid — O(1) per-row lookup (see denseOffsets)
     val nParts = withPid.rdd.getNumPartitions
-    val cntArr = denseOffsets(nParts, offsets.map { case (p, c, _) => (p, c) })
-    val sumArr = denseOffsets(nParts, offsets.map { case (p, _, t) => (p, t) })
+    val cntArr = denseOffsets(nParts, offsets.map { case (p, c, _, _) => (p, c) })
+    // SQL sum semantics: the offset is NULL while every earlier value is
+    // NULL, so a partition whose local prefix is all NULL gets the earlier
+    // partitions' sum — or NULL when the whole global prefix is NULL —
+    // exactly as the single-window arm does
+    val sumArr = denseOffsets(nParts, offsets.map { case (p, _, _, t) => (p, t) })
+      .zip(denseOffsets(nParts, offsets.map { case (p, _, nn, _) => (p, nn) }))
+      .map { case (t, nn) => Option.when(nn > 0)(t) }
     val inPartW = Window.partitionBy(col("_pid")).orderBy(orderCols: _*)
     val ranked = withPid.withColumn(rnCol,
       row_number().over(inPartW).cast("long") +
         element_at(typedlit(cntArr), col("_pid") + 1))
     val out = valueCol match {
-      case Some(v) => ranked.withColumn(cumCol,
-        sum(col(v)).over(inPartW.rowsBetween(
-          Window.unboundedPreceding, Window.currentRow)) +
-          element_at(typedlit(sumArr), col("_pid") + 1))
+      case Some(v) =>
+        val local = sum(col(v)).over(inPartW.rowsBetween(
+          Window.unboundedPreceding, Window.currentRow))
+        val offset = element_at(typedlit(sumArr), col("_pid") + 1)
+        ranked.withColumn(cumCol, coalesce(local + offset, local, offset))
       case None => ranked
     }
     (out.drop("_pid"), offsets.map(_._2).sum)
@@ -149,6 +166,7 @@ object Prefix {
   def globalRankSum(df: DataFrame, orderCols: Seq[Column],
                     valueCol: Option[String], rnCol: String, cumCol: String,
                     distributed: Boolean): DataFrame = {
+    requireFree(df, "_pid")
     if (!distributed) {
       val w = Window.orderBy(orderCols: _*)
       // long rank in both arms: the distributed arm must not truncate past
@@ -173,6 +191,7 @@ object Prefix {
   def globalNtile(df: DataFrame, orderCols: Seq[Column], k: Int,
                   outCol: String, distributed: Boolean): DataFrame = {
     require(k > 0)
+    requireFree(df, "_pid", "_grn")
     if (!distributed)
       df.withColumn(outCol, ntile(k).over(Window.orderBy(orderCols: _*)))
     else {

@@ -23,12 +23,15 @@ object ProfileCell {
     var plansDir = Option.empty[String]
     var suffix = "before"
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    def value(i: Int): String =
+      if (i + 1 < args.length) args(i + 1)
+      else sys.error(s"${args(i)} requires a value")
     var i = 1
     while (i < args.length) {
       args(i) match {
-        case "--repeat" => repeat = args(i + 1).toInt; i += 2
-        case "--plans" => plansDir = Some(args(i + 1)); i += 2
-        case "--suffix" => suffix = args(i + 1); i += 2
+        case "--repeat" => repeat = value(i).toInt; i += 2
+        case "--plans" => plansDir = Some(value(i)); i += 2
+        case "--suffix" => suffix = value(i); i += 2
         case f if f.startsWith("--") =>
           sys.error(s"unknown flag $f (expected --repeat/--plans/--suffix)")
         case q => names += q; i += 1

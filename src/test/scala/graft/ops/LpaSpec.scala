@@ -75,4 +75,16 @@ class LpaSpec extends SparkSpec {
       }
     }
   }
+
+  test("past the pre-partition dial: one round on a 250k-edge ring") {
+    // 250k edges -> 500k adjacency rows, the first size the adjacency is
+    // hash-partitioned at. Node i sees labels i-1 and i+1 once each; the
+    // tie breaks to the smaller.
+    val n = 250000L
+    val ring = spark.range(n).select($"id".as("u"), (($"id" + 1) % n).as("v"))
+    val out = Lpa.propagate(ring, rounds = 1)
+    val expect = least(($"node" + n - 1) % n, ($"node" + 1) % n)
+    assert(out.count() == n)
+    assert(out.filter($"label" =!= expect).count() == 0)
+  }
 }

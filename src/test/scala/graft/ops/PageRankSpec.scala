@@ -8,9 +8,10 @@ class PageRankSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** Unit-weight (classic PageRank) ranks as doubles. */
   private def ranksOf(edges: Seq[(Long, Long)], iters: Int): Map[Long, Double] =
-    PageRank.run(edges.toDF("src", "dst"), iters)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    PageRank.run(edges.map { case (a, b) => (a, b, 1L) }.toDF("src", "dst", "w"), iters)
+      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
 
   test("directed cycle converges to the uniform distribution") {
     val cycle = Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 1L)
@@ -52,18 +53,10 @@ class PageRankSpec extends SparkSpec {
     assert(math.abs(r40(1L) - r20(1L)) < math.abs(r20(1L) - r5(1L)))
   }
 
-  test("invalid damping or checkpoint cadence is rejected up front") {
-    import spark.implicits._
-    val e = Seq(1L -> 2L, 2L -> 1L).toDF("src", "dst")
-    // i % 0 would throw ArithmeticException mid-iteration; negative would
-    // silently disable lineage cuts
-    intercept[IllegalArgumentException](PageRank.run(e, 5, checkpointEvery = 0))
-    intercept[IllegalArgumentException](PageRank.run(e, 5, checkpointEvery = -1))
-    // damping outside (0,1) passes the scale check but yields non-probability
-    // ranks
-    intercept[IllegalArgumentException](PageRank.run(e, 5, damping = 1.5))
-    intercept[IllegalArgumentException](PageRank.run(e, 5, damping = 0.0))
-    intercept[IllegalArgumentException](PageRank.run(e, 5, damping = 1.0))
+  test("iters < 1 is rejected up front") {
+    val e = Seq((1L, 2L, 1L), (2L, 1L, 1L)).toDF("src", "dst", "w")
+    intercept[IllegalArgumentException](PageRank.run(e, 0))
+    intercept[IllegalArgumentException](PageRank.run(e, -1))
   }
 
   test("catalog pagerank query returns a full top-20 of distinct parts") {
@@ -79,11 +72,38 @@ class PageRankSpec extends SparkSpec {
     fp.zip(ranks).foreach { case (u, r) => assert(r == u / 1e15) }
   }
 
-  // ----- fixed-point variant (the oracle-checkable arithmetic) -----
+  // ----- exact integer arithmetic (what the oracles unroll) -----
 
   private def fpRanks(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
-    PageRank.runFixedPoint(edges.toDF("src", "dst"), iters)
+    wRanks(edges.map { case (a, b) => (a, b, 1L) }, iters)
+
+  private def wRanks(edges: Seq[(Long, Long, Long)],
+                     iters: Int): Map[Long, Long] =
+    PageRank.run(edges.toDF("src", "dst", "w"), iters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Driver-side replay of the exact integer recurrence:
+    * r' = base + 85·(Σ (r//W_u)·w + dangling//n) // 100, where dangling is
+    * the summed rank of the nodes without out-edges. */
+  private def simulate(edges: Seq[(Long, Long, Long)],
+                       iters: Int): Map[Long, Long] = {
+    val s = 1000000000000000L
+    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
+    val wdeg = edges.groupBy(_._1).map { case (u, es) => u -> es.map(_._3).sum }
+    val dangling = nodes.filterNot(wdeg.contains)
+    val base = s * 15 / 100 / nodes.size
+    var r = nodes.map(_ -> s / nodes.size).toMap
+    for (_ <- 1 to iters) {
+      val contrib = scala.collection.mutable.Map.empty[Long, Long]
+        .withDefaultValue(0L)
+      edges.foreach { case (u, v, w) =>
+        contrib(v) += (r(u) / wdeg(u)) * w
+      }
+      val danglingOverN = dangling.map(r).sum / nodes.size
+      r = nodes.map(n => n -> (base + 85L * (contrib(n) + danglingOverN) / 100L)).toMap
+    }
+    r
+  }
 
   test("fixed point: directed cycle stays uniform at every iteration") {
     val cycle = Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 1L)
@@ -91,17 +111,60 @@ class PageRankSpec extends SparkSpec {
     // r = S/4; contrib = r//1 = r; r' = (S*15//100)//4 + (85*r)//100
     val s = 1000000000000000L
     val expected = (s * 15 / 100) / 4 + (85 * (s / 4)) / 100
-    val r = fpRanks(cycle, iters = 7)
-    r.values.foreach(v => assert(v == expected, s"$v vs $expected"))
+    for (iters <- Seq(7, 20)) {
+      val r = fpRanks(cycle, iters)
+      r.values.foreach(v => assert(v == expected, s"$v vs $expected"))
+    }
+  }
+
+  /** Driver-side decimal (double) power iteration, same damping and
+    * dangling-mass handling, without any truncation. */
+  private def decimalRanks(edges: Seq[(Long, Long)],
+                           iters: Int): Map[Long, Double] = {
+    val d = 0.85
+    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
+    val n = nodes.size.toDouble
+    val deg = edges.groupBy(_._1).map { case (u, es) => u -> es.size }
+    val dangling = nodes.filterNot(deg.contains)
+    var r = nodes.map(_ -> 1.0 / n).toMap
+    for (_ <- 1 to iters) {
+      val contrib = scala.collection.mutable.Map.empty[Long, Double]
+        .withDefaultValue(0.0)
+      edges.foreach { case (u, v) => contrib(v) += r(u) / deg(u) }
+      val danglingOverN = dangling.map(r).sum / n
+      r = nodes.map(v => v -> ((1 - d) / n + d * (contrib(v) + danglingOverN))).toMap
+    }
+    r
   }
 
   test("fixed point agrees with the decimal variant to ~|V|*iters/scale") {
     val g = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 1L -> 3L, 4L -> 1L) // 4 is a leaf source
-    val dec = ranksOf(g, iters = 10)
+    val dec = decimalRanks(g, iters = 10)
     val fp = fpRanks(g, iters = 10)
+    assert(fp.keySet == dec.keySet)
     dec.foreach { case (node, d) =>
       assert(math.abs(fp(node) / 1e15 - d) < 1e-12, s"node $node")
     }
+    // and on a graph with dangling nodes (5 and 6)
+    val gd = g ++ Seq(3L -> 5L, 2L -> 6L)
+    val decD = decimalRanks(gd, iters = 10)
+    fpRanks(gd, iters = 10).foreach { case (node, v) =>
+      assert(math.abs(v / 1e15 - decD(node)) < 1e-12, s"node $node")
+    }
+  }
+
+  test("past the pre-partition dial: a 600k-node cycle stays exactly uniform") {
+    // 600k edges >= Partitioned.RowsPerPartition: the edge side is
+    // hash-partitioned on src. S/n is the exact fixed point here too:
+    // (S*15//100)//n + (85*(S//n))//100 == S//n for n = 600k.
+    val n = 600000L
+    val s = 1000000000000000L
+    val expected = (s * 15 / 100) / n + (85 * (s / n)) / 100
+    val cycle = spark.range(n)
+      .select($"id".as("src"), (($"id" + 1) % n).as("dst"), lit(1L).as("w"))
+    val r = PageRank.run(cycle, iters = 4)
+    assert(r.count() == n)
+    assert(r.filter($"rank_fp" =!= expected).count() == 0)
   }
 
   test("fixed point: dangling mass is redistributed (total stays ~1)") {
@@ -121,33 +184,6 @@ class PageRankSpec extends SparkSpec {
     assert(a == b)
   }
 
-  // ----- weighted variant (the TextRank arithmetic) -----
-
-  private def wRanks(edges: Seq[(Long, Long, Long)],
-                     iters: Int): Map[Long, Long] =
-    PageRank.runFixedPointWeighted(edges.toDF("src", "dst", "w"), iters)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  /** Driver-side replay of the exact integer recurrence:
-    * r' = base + 85·Σ (r//W_u)·w // 100 (no dangling in these graphs). */
-  private def simulate(edges: Seq[(Long, Long, Long)],
-                       iters: Int): Map[Long, Long] = {
-    val s = 1000000000000000L
-    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
-    val wdeg = edges.groupBy(_._1).map { case (u, es) => u -> es.map(_._3).sum }
-    val base = s * 15 / 100 / nodes.size
-    var r = nodes.map(_ -> s / nodes.size).toMap
-    for (_ <- 1 to iters) {
-      val contrib = scala.collection.mutable.Map.empty[Long, Long]
-        .withDefaultValue(0L)
-      edges.foreach { case (u, v, w) =>
-        contrib(v) += (r(u) / wdeg(u)) * w
-      }
-      r = nodes.map(n => n -> (base + 85L * contrib(n) / 100L)).toMap
-    }
-    r
-  }
-
   test("weighted fixed point replays the integer recurrence exactly") {
     val g = Seq((1L, 2L, 3L), (2L, 1L, 3L), (2L, 3L, 1L), (3L, 2L, 1L),
       (1L, 3L, 5L), (3L, 1L, 5L), (4L, 1L, 2L), (1L, 4L, 2L))
@@ -158,12 +194,16 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("unit weights reproduce the unweighted fixed point exactly") {
-    val g = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 1L -> 3L, 5L -> 2L, 6L -> 2L)
-    // 5 and 6 dangle-free sources exist; both variants share the dangling
-    // handling, so unit weights must be a perfect identity
-    val unw = fpRanks(g, iters = 6)
-    val w1 = wRanks(g.map { case (a, b) => (a, b, 1L) }, iters = 6)
-    assert(w1 == unw)
+    // with unit weights W_u is the out-degree: the replay is then the
+    // unweighted recurrence r' = base + 85·Σ (r//deg) // 100 that the
+    // graph_pagerank_parts oracle unrolls. The second graph has dangling
+    // nodes (5 and 6) and a source nobody points at (4).
+    for (g <- Seq(
+      Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 1L -> 3L, 5L -> 2L, 6L -> 2L),
+      Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 1L -> 3L, 4L -> 1L, 3L -> 5L, 2L -> 6L))) {
+      val unw = simulate(g.map { case (a, b) => (a, b, 1L) }, iters = 10)
+      assert(fpRanks(g, iters = 10) == unw, g.toString)
+    }
   }
 
   test("weighted fixed point is partition-width invariant") {

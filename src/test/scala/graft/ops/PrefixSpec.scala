@@ -35,15 +35,45 @@ class PrefixSpec extends SparkSpec {
 
   test("globalRankSum: distributed arm == window arm, desc order with tiebreak") {
     val d = t.withColumn("grp", $"doc_id" % 17)
-    val order = Seq($"n_tokens".desc, $"doc_id".asc)
-    val dist = Prefix.globalRankSum(d, order, Some("n_tokens"), "rn", "cum",
-        distributed = true)
-      .select($"doc_id", $"rn", $"cum")
-    val plain = Prefix.globalRankSum(d, order, Some("n_tokens"), "rn", "cum",
-        distributed = false)
-      .select($"doc_id", $"rn", $"cum")
-    assert(dist.exceptAll(plain).isEmpty && plain.exceptAll(dist).isEmpty)
-    assert(dist.schema == plain.schema)
+    // NULL values: the first 10 rows of the global order (an all-NULL
+    // global prefix) and a 250-row block that spans a range-partition
+    // boundary, so some partition's local prefix is all NULL
+    val withNulls = t.withColumn("n_tokens",
+      when($"doc_id" < 10 || $"doc_id".between(150, 399), lit(null))
+        .otherwise($"n_tokens"))
+    // coalescing off pins several range partitions, so the NULL block
+    // meets a partition boundary
+    val coalesceConf = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.get(coalesceConf)
+    spark.conf.set(coalesceConf, "false")
+    try for ((in, order) <- Seq(d -> Seq($"n_tokens".desc, $"doc_id".asc),
+        withNulls -> Seq($"doc_id".asc))) {
+      val dist = Prefix.globalRankSum(in, order, Some("n_tokens"), "rn", "cum",
+          distributed = true)
+        .select($"doc_id", $"rn", $"cum")
+      val plain = Prefix.globalRankSum(in, order, Some("n_tokens"), "rn", "cum",
+          distributed = false)
+        .select($"doc_id", $"rn", $"cum")
+      assert(dist.exceptAll(plain).isEmpty && plain.exceptAll(dist).isEmpty)
+      assert(dist.schema == plain.schema)
+    } finally spark.conf.set(coalesceConf, was)
+  }
+
+  test("scratch-column names in the input are rejected, not clobbered") {
+    for (name <- Seq("_pid", "_PID", "_grn")) {
+      val in = t.withColumn(name, lit(1L))
+      for (distributed <- Seq(true, false)) {
+        val e = intercept[IllegalArgumentException](
+          Prefix.globalNtile(in, Seq($"doc_id"), 3, "b", distributed))
+        assert(e.getMessage.contains(name.toLowerCase), e.getMessage)
+      }
+    }
+    for (distributed <- Seq(true, false))
+      intercept[IllegalArgumentException](Prefix.globalRankSum(
+        t.withColumn("_pid", lit(1)), Seq($"doc_id"), Some("n_tokens"), "rn",
+        "cum", distributed))
+    intercept[IllegalArgumentException](
+      Prefix.runningSum(t.withColumn("_pid", lit(1)), "doc_id", "n_tokens", "cum"))
   }
 
   test("globalNtile: distributed arm == window arm, including remainder buckets") {
