@@ -1,328 +1,188 @@
 package graft
-import java.util.concurrent.Executors
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Cells
 
 /**
- * Driver-run benchmark: executes every catalog query on
- * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with the wall-clock total and
- * per-query seconds.
+ * Catalog benchmark: times every catalog query on `SPARK_GRAFT_SF_DIR`
+ * through [[graft.tools.Cells]] and prints ONE JSON line with the total and
+ * the per-query seconds.
  *
- * Queries run SEQUENTIALLY by default (`SPARK_GRAFT_PAR=1`): per-query
- * seconds are then attributable — comparable against BASELINE.md's budget
- * table and across rounds — instead of being scheduler-contention noise.
- * Set SPARK_GRAFT_PAR>1 to measure the concurrent-deployment shape
- * (queries sharing one cluster via the FAIR scheduler, overlapping fixed
- * planning/codegen costs); in that mode per-query times overlap, so their
- * sum exceeds the `value` wall clock and individual cells are NOT
- * regression-comparable.
+ * Queries run one after another, so per-query seconds are attributable:
+ * comparable against BASELINE.md's budget table and across rounds.
+ * Settings: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_WARMUP`
+ * (the warm-up data dir) and `SPARK_GRAFT_BUDGETS` (the budget table).
  */
 object Bench {
+
+  /** Timed passes per cell; the cell reports the fastest (a neighbor's CPU
+    * burst rarely hits both). */
+  val Repeat = 2
+
+  /** Longest stdout line: the bench's caller json-parses it out of the
+    * LAST 2000 chars of stdout; the margin covers the shell's trailing
+    * newline. */
+  val LineBudget = 1900
+
+  /** Most cells the end-of-run budget retry re-times. */
+  private val RetryCap = 24
+
+  /** One timed cell: its fastest pass, or `failed`. */
+  final case class Cell(name: String, sec: Double, cpu: Double, gc: Double,
+                        failed: Boolean = false, escalated: Boolean = false)
+
+  /** Whole-run totals: elapsed wall of all passes, process CPU and GC
+    * seconds, 1-min loadavg at start and end. */
+  final case class Totals(wall: Double, cpu: Double, gc: Double,
+                          loadStart: Double, loadEnd: Double)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val par = sys.env.getOrElse("SPARK_GRAFT_PAR", "1").toInt.max(1)
-    // Shuffle width is sized to the DATA (the brief's "partitions fit the
-    // target SF" rule), not to the thread count: local[32] with 32-wide
-    // shuffles on a ~600k-row SF measurably loses to the same session with
-    // 8-wide shuffles (+14 s catalog wall — tiny-partition map tasks ×
-    // every stage dominate). Threads above the cap still parallelize scans
-    // and independent stages. SPARK_GRAFT_SHUFFLE overrides.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(cpus.toInt, 8).toString)
-    // Scan/leaf parallelism is sized to the DATA too, not the thread count:
-    // local[32] defaults spark.default.parallelism (and through it
-    // spark.sql.leafNodeDefaultParallelism) to 32, and FilePartition's split
-    // formula then drives maxSplitBytes down to openCostInBytes (4 MB) on
-    // sub-GB inputs — every scan becomes ≥32 tiny tasks whose per-task setup
-    // (parquet footer parse, codegen instantiation, columnar batch alloc)
-    // is pure overhead at this SF. Measured on an idle box: the cpus=32
-    // catalog run burned 539 CPU-s vs 279 at cpus=4 for the SAME 40 s
-    // value; capping leaf width to the shuffle width removes the inflation
-    // without costing wall (the extra cores added nothing — per-task
-    // overhead, not data, was the marginal work).
-    val spark = Conf.local(SparkSession.builder(), cpus.toInt)
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.default.parallelism", shuffle)
-      .config("spark.sql.leafNodeDefaultParallelism", shuffle)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm plans/codegen/JIT on the tiny SF before timing: without this the
-    // first queries' cells absorb one-time JVM costs (~5s), making their
-    // budget-table comparisons position-dependent. SPARK_GRAFT_WARMUP=""
-    // disables; any other value is the warmup data dir.
-    val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "/root/testdata/sf0.001")
-    if (warmupDir.nonEmpty)
-      SparkEntry.queries.foreach { case (name, fn) =>
-        try fn(spark, warmupDir).count() catch {
-          case scala.util.control.NonFatal(e) =>
-            // a silently-skipped warmup would put the ~5s one-time JIT cost
-            // back into whichever timed cell runs first
-            System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
-        }
-      }
-    // Materialize the shared spines (LSH candidate pairs, normalized
-    // embeddings, centroids) ON THE TIMED SF before the clock starts: the
-    // bench measures the materialize-once deployment shape — the near-dup
-    // and ANN families fan out from one build instead of re-paying it 4-5x.
-    // Verify/tests/PlanAudit never warm, so standalone plans stay gated.
-    // SPARK_GRAFT_SHARED=false restores fully independent timed cells.
-    // Each family warms INDEPENDENTLY: one try block around all four meant a
-    // single spine failure silently un-warmed the other three families, and
-    // their timed cells then re-paid the spine build — showing up as phantom
-    // per-cell regressions with no code change (round-9 lesson).
-    if (sys.env.getOrElse("SPARK_GRAFT_SHARED", "true").toBoolean) {
-      val warms: Seq[(String, () => Unit)] = Seq(
-        ("TextLlm", () => graft.catalog.TextLlm.warmShared(spark, sfDir)),
-        ("Vectors", () => graft.catalog.Vectors.warmShared(spark, sfDir)),
-        ("CoPurchase", () => graft.catalog.CoPurchase.warmShared(spark, sfDir)),
-        ("Search", () => graft.catalog.Search.warmShared(spark, sfDir)),
-        ("Media", () => graft.catalog.MediaCatalog.warmShared(spark, sfDir)))
-      warms.foreach { case (family, warm) =>
-        try warm() catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] shared warm FAILED for $family " +
-              s"(its family's cells will re-pay the spine build): ${e.getMessage}")
-        }
-      }
-    }
-    // Contention robustness: on a shared box, a neighbor's CPU burst lands
-    // in whichever cell is running — round-5/7/9 driver captures all needed
-    // a judge rerun to adjudicate. Defenses: (a) in sequential mode each
-    // query runs SPARK_GRAFT_REPEAT (default 2) times and the cell reports
-    // the MIN (a burst rarely hits both passes); (b) a cell whose passes
-    // DISAGREE (max/min spread > 2x on a non-trivial cell) auto-escalates
-    // to a third pass on the spot — that IS the contention ratio tripping
-    // mid-run, and one more pass makes the min adjudicable without a rerun;
-    // (c) the JSON carries process CPU-, GC- and /proc loadavg-seconds so
-    // neighbor load vs GC pressure is attributable from the capture alone.
-    //
-    // The old global detector (wall > 3x cpuTotal/cores) is GONE: it
-    // false-fires structurally whenever granted cores exceed per-query
-    // parallelism — a sequential bench on local[32] can never spread its
-    // CPU over 32 cores, so an IDLE box still showed ratio ~6 (measured).
-    // Pass spread is per-cell evidence; external load is (loadavg minus our
-    // own cpu rate), both independent of the granted-core count.
-    val repeat =
-      if (par == 1) sys.env.getOrElse("SPARK_GRAFT_REPEAT", "2").toInt.max(1) else 1
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def cpuSec(): Double = osBean.getProcessCpuTime / 1e9
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def gcSec(): Double = {
-      var t = 0L
-      gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime))
-      t / 1e3
-    }
-    def loadAvg(): Double = math.max(0.0, osBean.getSystemLoadAverage)
-    val pool = Executors.newFixedThreadPool(par)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val spark = Cells.session()
+    val qs = SparkEntry.queries
+    Cells.warmup(spark, qs.keys, sys.env.getOrElse("SPARK_GRAFT_WARMUP", Cells.WarmupDir))
+    val shared = Cells.warmShared(spark, sfDir)
     val t0 = System.nanoTime()
-    val cpu0 = cpuSec()
-    val gc0 = gcSec()
-    val load0 = loadAvg()
-    val futures = SparkEntry.queries.toSeq.map { case (name, fn) =>
-      Future {
-        // (wall, cpu, gc) per pass; min wall is the reported cell. CPU/GC
-        // deltas are only attributable when queries run sequentially (par==1).
-        var best = Double.MaxValue
-        var bestCpu = Double.MaxValue
-        var bestGc = Double.MaxValue
-        var worst = 0.0
-        var failed = false
-        var escalated = false
-        var pass = 0
-        // base passes, +1 escalation pass if the base passes disagree >2x
-        // on a cell big enough (>0.2 s) for the spread to be signal
-        var maxPass = repeat
-        while (pass < maxPass && !failed) {
-          val q0 = System.nanoTime()
-          val c0 = cpuSec()
-          val g0 = gcSec()
-          try fn(spark, sfDir).count() catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-              failed = true
-          }
-          val w = (System.nanoTime() - q0) / 1e9
-          if (!failed) {
-            if (w < best) { best = w; bestCpu = cpuSec() - c0; bestGc = gcSec() - g0 }
-            if (w > worst) worst = w
-          }
-          pass += 1
-          if (!failed && pass == maxPass && !escalated && par == 1 && repeat > 1 &&
-              best > 0.2 && worst / best > 2.0) {
-            escalated = true
-            maxPass += 1
-          }
-        }
-        if (failed) (name, 0.0, 0.0, 0.0, true, false)
-        else (name, best, bestCpu, bestGc, false, escalated)
-      }
-    }
-    val results1 = Await.result(Future.sequence(futures), Duration.Inf)
-    // Budget-aware END-OF-RUN retry (sequential mode only): a neighbor's
-    // contention burst is temporally correlated — it inflates BOTH base
-    // passes of whichever cells run inside its window (the round-12 driver
-    // capture: 12 cells at 3-7x their recorded budgets, all reproducibly
-    // fast on the same code minutes later). The in-place escalation pass
-    // can't help there (it runs inside the same window). So cells that
-    // finished OVER their recorded per-query budget (BASELINE.md's table —
-    // the capture's own regression reference) get re-timed once more HERE,
-    // after the full catalog has run (~minutes of decorrelation), and the
-    // cell keeps the min. A real regression stays slow on the retry and
-    // still breaches; only transient noise is filtered. Cells without a
-    // budget row (new queries) are never retried.
-    val budgets: Map[String, Double] =
+    val cpu0 = Cells.cpuSec()
+    val gc0 = Cells.gcSec()
+    val load0 = Cells.loadAvg()
+    def run(name: String, passes: Int) = Cells.time(passes)(qs(name)(spark, sfDir))
+    // A cell whose passes DISAGREE (spread > 2x on a cell > 0.2 s, where
+    // spread is signal, not JIT noise) is the contention ratio tripping
+    // mid-run: one more pass on the spot makes its min adjudicable.
+    val first = qs.keys.toSeq.map { name =>
       try {
-        val path = sys.env.getOrElse("SPARK_GRAFT_BUDGETS", "BASELINE.md")
-        val re = """\|\s*([a-z0-9_]+)\s*\|[^|]*\|[^|]*\|\s*([0-9.]+)\s*\|""".r
-        val src = scala.io.Source.fromFile(path)("UTF-8")
-        try src.getLines().collect { case re(n, b) => n -> b.toDouble }.toMap
-        finally src.close()
+        val base = run(name, Repeat)
+        val escalated = base.head.wall > 0.2 && base.last.wall / base.head.wall > 2.0
+        val best = if (escalated) (run(name, 1) ++ base).minBy(_.wall) else base.head
+        Cell(name, best.wall, best.cpu, best.gc, escalated = escalated)
       } catch {
-        case scala.util.control.NonFatal(e) =>
-          // failing open disables the retry feature — say so, or a
-          // renamed budgets file silently turns contention filtering off
-          System.err.println(s"[bench] no budget table (${e.getMessage}) " +
-            "— end-of-run budget retry disabled")
-          Map.empty
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          Cell(name, 0.0, 0.0, 0.0, failed = true)
       }
-    val retriedCells = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results0 =
-      if (par != 1 || budgets.isEmpty) results1
-      else results1.map {
-        case r @ (name, w, _, _, false, esc)
-            if budgets.get(name).exists(w > _) && retriedCells.size < 24 =>
-          retriedCells += name
-          var best = w; var bestCpu = r._3; var bestGc = r._4
-          var i = 0
-          while (i < repeat) {
-            val q0 = System.nanoTime(); val c0 = cpuSec(); val g0 = gcSec()
-            try {
-              SparkEntry.queries(name)(spark, sfDir).count()
-              val w2 = (System.nanoTime() - q0) / 1e9
-              if (w2 < best) { best = w2; bestCpu = cpuSec() - c0; bestGc = gcSec() - g0 }
-            } catch { case scala.util.control.NonFatal(_) => () }
-            i += 1
-          }
-          (name, best, bestCpu, bestGc, false, esc)
-        case r => r
-      }
-    if (retriedCells.nonEmpty) {
-      val recovered = results0.collect {
-        case (n, w, _, _, false, _)
-          if retriedCells.contains(n) && budgets.get(n).exists(w <= _) => n
-      }
+    }
+    // End-of-run budget retry: a neighbor's burst is temporally correlated
+    // and inflates BOTH passes of the cells inside its window (the round-12
+    // capture: 12 cells at 3-7x budget, all fast on the same code minutes
+    // later), which the in-place escalation cannot help. Cells over their
+    // BASELINE.md budget are re-timed once after the whole catalog and keep
+    // the min: a real regression stays slow and still breaches. Cells with
+    // no budget row (new queries) are never retried.
+    val budgets = readBudgets()
+    val overBudget = first.filter(c => !c.failed && budgets.get(c.name).exists(c.sec > _))
+    val retried = overBudget.take(RetryCap).map(_.name)
+    val cells = first.map {
+      case c if retried.contains(c.name) =>
+        try {
+          val p = run(c.name, Repeat).head
+          if (p.wall < c.sec) c.copy(sec = p.wall, cpu = p.cpu, gc = p.gc) else c
+        } catch { case NonFatal(_) => c }
+      case c => c
+    }
+    if (retried.nonEmpty) {
+      val recovered = cells.count(c => retried.contains(c.name) && budgets.get(c.name).exists(c.sec <= _))
+      val skipped = overBudget.size - retried.size
       // no silent caps: over-budget cells past the retry cap keep their
-      // possibly-inflated minima — name the skip so the capture says so
-      val skipped = results0.count { case (n, w, _, _, failed, _) =>
-        !failed && !retriedCells.contains(n) && budgets.get(n).exists(w > _)
-      }
-      System.err.println(s"[bench] budget retry: ${retriedCells.size} " +
+      // possibly-inflated minima, so the capture says so
+      System.err.println(s"[bench] budget retry: ${retried.size} " +
         s"cell(s) over their BASELINE.md budget re-timed at end of run; " +
-        s"${recovered.size} recovered under budget (transient noise), " +
-        s"${retriedCells.size - recovered.size} still over (real)" +
+        s"$recovered recovered under budget (transient noise), " +
+        s"${retried.size - recovered} still over (real)" +
         (if (skipped > 0) s"; $skipped more over-budget cell(s) past the " +
-          "24-cell retry cap kept their first-pass minima" else "") +
-        ": " + retriedCells.sorted.mkString(", "))
+          s"$RetryCap-cell retry cap kept their first-pass minima" else "") +
+        ": " + retried.sorted.mkString(", "))
     }
-    val results = results0.map { case (n, w, _, _, f, _) => (n, w, f) }
     val wall = (System.nanoTime() - t0) / 1e9
-    val cpuTotal = cpuSec() - cpu0
-    val gcTotal = gcSec() - gc0
-    val load1 = loadAvg()
-    pool.shutdown()
-    val escalatedCells = results0.collect { case (n, _, _, _, false, true) => n }
-    // External load estimate: end-of-run 1-min loadavg minus this process's
-    // own average core usage. >2 spare cores of sustained neighbor load on
-    // top of spread-escalated cells = the capture was contended.
-    val externalLoad = load1 - cpuTotal / wall
-    // Escalation is silent per-cell insurance (an extra pass tightens the
-    // min); the WARNING only fires when it matters: a budget-relevant cell
-    // (>1 s best) still carried the spread, or sustained neighbor load is
-    // visible in loadavg. Sub-second cells routinely spread >2x from JIT /
-    // cache warmth on a perfectly idle box (measured 10 such cells, all
-    // <0.5 s) — warning on those is crying wolf. The loadavg branch fires
-    // when EITHER (a) this process actually ran multi-core (cpuTotal >
-    // wall, so neighbor load can have displaced measured work) OR (b) the
-    // neighbor load was SUSTAINED — visible at both the start and end
-    // loadavg samples — which also covers the oversubscribed-box case
-    // where displacement itself keeps cpuTotal under wall. What stays
-    // gated out is the single-sample D-state mirage: loadavg counts
-    // uninterruptible-I/O tasks, so one elevated end-sample on an
-    // idle-CPU I/O-bound run proves nothing.
-    val escalatedBig = results0.collect { case (n, w, _, _, false, true) if w > 1.0 => n }
-    val sustainedExternal = externalLoad > 2.0 &&
-      (cpuTotal > wall || load0 - cpuTotal / wall > 2.0)
-    if (escalatedCells.nonEmpty && (escalatedBig.nonEmpty || sustainedExternal))
-      System.err.println(f"[bench] CONTENTION WARNING: ${escalatedCells.size} " +
-        "cell(s) had >2x pass spread and were auto-escalated to an extra " +
-        "pass (budget-relevant: " +
-        (if (escalatedBig.isEmpty) "none" else escalatedBig.sorted.mkString(", ")) +
-        f"); external load ≈ $externalLoad%.1f cores (loadavg $load1%.1f minus " +
-        f"own ${cpuTotal / wall}%.1f) — cells report per-cell MINs; full list " +
-        "in bench_last.json \"escalated\"")
-    // The driver json-parses this line out of the LAST 2000 chars of stdout
-    // only. The full catalog no longer fits that window (88+ queries x ~26
-    // chars ≈ 2.4k), so stdout carries the headline cells — every query in
-    // DESCENDING cost order until the line budget is spent (the expensive
-    // cells are the ones the budget adjudication needs; the omitted tail is
-    // sub-noise) — while the COMPLETE per-query table is always written to
-    // bench_last.json in the repo (the driver's round-end flow leaves it on
-    // disk for the judge; BASELINE.md documents the split).
-    def sec(v: Double): String = {
-      val s = f"$v%.2f"
-      if (s.endsWith("0")) s.dropRight(1) else s  // "1.20" -> "1.2", still valid JSON
-    }
-    def entry(k: String, v: Double): String = "\"" + k + "\":" + sec(v)
-    val errs = results.collect { case (k, _, true) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    // In sequential repeat mode the headline value is the SUM OF PER-CELL
-    // MINS — the contention-robust estimate of the catalog wall (and the
-    // number budget rows compare against); `wall` keeps the raw elapsed
-    // time of all passes and `cpu` the process CPU-seconds, so a loaded
-    // box shows up as wall >> value without corrupting the cells.
-    val value = if (par == 1 && repeat > 1) results.map(_._2).sum else wall
-    def line(entries: Seq[String], omitted: Int): String = {
-      val omit = if (omitted > 0) s""","queries_omitted":$omitted,"queries_full":"bench_last.json"""" else ""
-      s"""{"metric":"total","value":${sec(value)},"unit":"sec","wall":${sec(wall)},"cpu":${sec(cpuTotal)},"gc":${sec(gcTotal)},"load_start":${sec(load0)},"load_end":${sec(load1)},"repeat":$repeat,"queries":${entries.mkString("{", ",", "}")}$omit,"sf":"$sfDir","parallelism":$par,"errors":$errs}"""
-    }
-    val all = results.sortBy(-_._2).map { case (k, v, _) => entry(k, v) }
-    val cpuCells = results0.filterNot(_._5).sortBy(-_._2)
-      .map { case (k, _, c, _, _, _) => entry(k, c) }
-    val gcCells = results0.filterNot(_._5).sortBy(-_._2)
-      .map { case (k, _, _, g, _, _) => entry(k, g) }
-    val escJson = escalatedCells.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val retryJson = retriedCells.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullLine = line(all, 0).dropRight(1) +
-      s""","queries_cpu":${cpuCells.mkString("{", ",", "}")},"queries_gc":${gcCells.mkString("{", ",", "}")},"escalated":$escJson,"budget_retried":$retryJson}"""
+    val totals = Totals(wall, Cells.cpuSec() - cpu0, Cells.gcSec() - gc0, load0, Cells.loadAvg())
+    warnContention(cells, totals)
+    val (stdoutLine, fullLine) = lines(cells, sfDir, totals, retried, shared)
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_last.json"),
       (fullLine + "\n").getBytes("UTF-8"))
-    catch { case scala.util.control.NonFatal(e) =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write bench_last.json: $e") }
-    val stdoutLine =
-      if (fullLine.length <= 1900) fullLine
-      else {
-        // keep the costliest cells that fit a 1900-char line (margin for
-        // the shell's trailing newline etc. inside the 2000-char window)
-        val overhead = line(Nil, all.length).length
-        var budget = 1900 - overhead
-        val kept = all.takeWhile { e =>
-          val ok = budget - (e.length + 1) >= 0
-          if (ok) budget -= e.length + 1
-          ok
-        }
-        line(kept, all.length - kept.length)
-      }
     System.err.println(s"[bench] json line length: ${stdoutLine.length} (full ${fullLine.length})")
     println(stdoutLine)
     spark.stop()
+  }
+
+  /** BASELINE.md's per-query budget column (`SPARK_GRAFT_BUDGETS`). */
+  private def readBudgets(): Map[String, Double] =
+    try {
+      val path = sys.env.getOrElse("SPARK_GRAFT_BUDGETS", "BASELINE.md")
+      val re = """\|\s*([a-z0-9_]+)\s*\|[^|]*\|[^|]*\|\s*([0-9.]+)\s*\|""".r
+      val src = scala.io.Source.fromFile(path)("UTF-8")
+      try src.getLines().collect { case re(n, b) => n -> b.toDouble }.toMap
+      finally src.close()
+    } catch {
+      case NonFatal(e) =>
+        // failing open disables the retry: say so, or a renamed budgets
+        // file silently turns contention filtering off
+        System.err.println(s"[bench] no budget table (${e.getMessage}) " +
+          "— end-of-run budget retry disabled")
+        Map.empty
+    }
+
+  /** Escalation is silent per-cell insurance; warn only when it matters: a
+    * budget-relevant (> 1 s) cell carried the spread, or neighbor load
+    * (loadavg minus this process's own core rate) above 2 cores is
+    * visible. Sub-second cells routinely spread > 2x from JIT or cache
+    * warmth on an idle box. The loadavg branch needs this process to have
+    * run multi-core (cpu > wall, so neighbor load can displace measured
+    * work) or the load to be SUSTAINED (seen at both samples): loadavg
+    * counts uninterruptible-I/O tasks, so one elevated end sample on an
+    * I/O-bound run proves nothing. */
+  private def warnContention(cells: Seq[Cell], t: Totals): Unit = {
+    val escalated = cells.filter(c => !c.failed && c.escalated)
+    val big = escalated.filter(_.sec > 1.0).map(_.name).sorted
+    val own = t.cpu / t.wall
+    val external = t.loadEnd - own
+    val sustained = external > 2.0 && (t.cpu > t.wall || t.loadStart - own > 2.0)
+    if (escalated.nonEmpty && (big.nonEmpty || sustained))
+      System.err.println(f"[bench] CONTENTION WARNING: ${escalated.size} " +
+        "cell(s) had >2x pass spread and were auto-escalated to an extra " +
+        "pass (budget-relevant: " + (if (big.isEmpty) "none" else big.mkString(", ")) +
+        f"); external load ≈ $external%.1f cores (loadavg ${t.loadEnd}%.1f minus " +
+        f"own $own%.1f) — cells report per-cell MINs; full list " +
+        "in bench_last.json \"escalated\"")
+  }
+
+  /** The stdout line and the full bench_last.json line.
+    *
+    * `value` is the SUM OF PER-CELL MINS, the contention-robust estimate of
+    * the catalog wall that budget rows compare against; `wall` is the raw
+    * elapsed time of all passes and `cpu` the process CPU seconds, so a
+    * loaded box shows up as wall >> value without corrupting the cells.
+    * The full catalog does not fit the stdout budget, so stdout keeps the
+    * costliest cells that fit, in descending cost order (the omitted tail is
+    * sub-noise), and counts the rest in `queries_omitted`; bench_last.json
+    * holds every cell plus per-cell CPU and GC seconds, the escalated and
+    * retried cells and the shared build seconds. */
+  def lines(cells: Seq[Cell], sfDir: String, t: Totals, retried: Seq[String],
+            shared: Seq[(String, Double)]): (String, String) = {
+    def sec(v: Double): String = {
+      val s = f"$v%.2f"
+      if (s.endsWith("0")) s.dropRight(1) else s // "1.20" -> "1.2", still valid JSON
+    }
+    def obj(kv: Seq[(String, Double)]) =
+      kv.map { case (k, v) => Jsons.quote(k) + ":" + sec(v) }.mkString("{", ",", "}")
+    def arr(names: Seq[String]) = names.map(Jsons.quote).mkString("[", ",", "]")
+    val byCost = cells.sortBy(-_.sec)
+    val ok = byCost.filterNot(_.failed)
+    val all = byCost.map(c => c.name -> c.sec)
+    val value = cells.map(_.sec).sum
+    def line(kept: Seq[(String, Double)], omitted: Int): String = {
+      val omit = if (omitted > 0) s""","queries_omitted":$omitted,"queries_full":"bench_last.json"""" else ""
+      s"""{"metric":"total","value":${sec(value)},"unit":"sec","wall":${sec(t.wall)},"cpu":${sec(t.cpu)},"gc":${sec(t.gc)},"load_start":${sec(t.loadStart)},"load_end":${sec(t.loadEnd)},"repeat":$Repeat,"queries":${obj(kept)}$omit,"sf":${Jsons.quote(sfDir)},"parallelism":1,"errors":${arr(cells.filter(_.failed).map(_.name))}}"""
+    }
+    val full = line(all, 0).dropRight(1) +
+      s""","queries_cpu":${obj(ok.map(c => c.name -> c.cpu))},"queries_gc":${obj(ok.map(c => c.name -> c.gc))},"escalated":${arr(ok.filter(_.escalated).map(_.name).sorted)},"budget_retried":${arr(retried.sorted)},"shared_build_s":${obj(shared)}}"""
+    var budget = LineBudget - line(Nil, all.length).length
+    val kept = all.takeWhile { case (k, v) =>
+      budget -= Jsons.quote(k).length + sec(v).length + 2
+      budget >= 0
+    }
+    (line(kept, all.length - kept.length), full)
   }
 }

@@ -40,26 +40,26 @@ object Runner {
       skippedDays: Seq[String],
       totalRecords: Long)
 
+  /** The bronze projection of both extract forms: microsecond event time,
+    * the JSON prop flattened to `prop_k`. */
+  private def bronzeColumns = Seq(
+    col("event_id"), unix_micros(col("ts")).as("ts_us"), col("user_id"),
+    col("event_type"), col("value"),
+    get_json_object(col("props"), "$.k").try_cast("int").as("prop_k"))
+
   /** The reference's extraction query (extract_events.sql:5-99 semantics) on
     * the testdata events schema: project, flatten the JSON prop, filter to
     * one day, order by event time. */
   def extractEvents(spark: SparkSession, sfDir: String, date: String): DataFrame =
     Tables.events(spark, sfDir)
       .filter(to_date(col("ts")) === lit(date).cast("date"))
-      .select(
-        col("event_id"), unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"), col("value"),
-        get_json_object(col("props"), "$.k").try_cast("int").as("prop_k"))
+      .select(bronzeColumns: _*)
       .orderBy(col("ts_us"), col("event_id"))
 
   /** All-days form of [[extractEvents]] (same projection, no day filter) —
     * the input for [[backfillUnified]]'s single-pass range write. */
   def extractEvents0(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.events(spark, sfDir)
-      .select(
-        col("event_id"), unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"), col("value"),
-        get_json_object(col("props"), "$.k").try_cast("int").as("prop_k"))
+    Tables.events(spark, sfDir).select(bronzeColumns: _*)
 
   /** One idempotent day run (pipeline.py:76-137). */
   def runDaily(spark: SparkSession, root: String, dataType: String, date: String,

@@ -1048,9 +1048,10 @@ object TextLlm extends Family {
   // five power iterations are bit-identical to the oracle's five unrolled
   // integer CTEs (the graph_pagerank_parts discipline on a text graph).
   // Scale shape: graph build is one corpus-linear bigram aggregate
-  // (map-side combinable); iterations are O(iters × |E|) with the edge
-  // side exchange-free across rounds; |E| is vocabulary², bounded far
-  // below corpus size by Heaps' law and the support floor.
+  // (map-side combinable); iterations are O(iters × |E|), and the edge
+  // side is re-exchanged in every round's join (under AQE the
+  // checkpointed edges report no partitioning); |E| is vocabulary²,
+  // bounded far below corpus size by Heaps' law and the support floor.
   private val textrankTerms = Q(
     "text_textrank_terms",
     Some {

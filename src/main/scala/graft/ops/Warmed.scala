@@ -17,9 +17,11 @@ import org.apache.spark.storage.StorageLevel
  *  - It is EMPTY unless a harness explicitly [[warm]]s it, so Verify, the
  *    ScalaTest suites, and PlanAudit all see the pristine standalone plans
  *    (the 100 TB shape the CI plan gates assert).
- *  - [[graft.Bench]] warms it on the timed SF after its sf0.001 warmup
- *    pass, so the bench measures the materialize-once deployment shape —
- *    sibling queries share one LSH build instead of re-paying it 4x.
+ *  - `graft.tools.Cells.warmShared` warms it on the timed SF after the
+ *    sf0.001 warmup pass, for [[graft.Bench]] and `ProfileCell`, so they
+ *    measure the materialize-once deployment shape — sibling queries share
+ *    one LSH build instead of re-paying it 4x. Each family's build time
+ *    lands in bench_last.json `shared_build_s`.
  *
  * At 100 TB the warmed frames stay bounded: candidate pairs track near-dup
  * density (not corpus size), centroids are k rows, and the normalized

@@ -1,17 +1,22 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 
-/** Optimization-round profiling main — times named catalog cells under the
-  * EXACT Bench session shape (same master/shuffle/AQE/FAIR knobs, same
-  * sf0.001 warmup, same shared-spine warm, same count() action) so per-cell
-  * numbers are comparable with `graft.Bench` cells, and dumps each cell's
-  * `explain("formatted")` to a file when `--plans <dir>` is given (the
-  * plans/r18 before/after artifacts).
+/** Optimization-round profiling main: times named catalog cells through
+  * [[Cells]] (the `graft.Bench` session, sf0.001 warm-up of the named
+  * cells, shared warm-up builds and timed pass), so per-cell numbers are
+  * comparable with Bench cells.
+  *
+  *  - `--plans <dir>` writes each cell's `explain("formatted")` to
+  *    `<dir>/<cell>_<suffix>.txt` (the plans/r18 before/after artifacts).
+  *  - `--dump <dir>` writes each cell's result as parquet plus the matching
+  *    `oracle_sql.json` subset, so `tools/compare.py <sfDir> <dir>`
+  *    oracle-checks just those cells.
   *
   * Usage: runMain graft.tools.ProfileCell <sfDir> <query>...
-  *          [--repeat N] [--plans <dir>] [--suffix before|after]
-  * Env: SPARK_GRAFT_CPUS / SPARK_GRAFT_SHUFFLE as in Bench.
+  *          [--repeat N] [--plans <dir>] [--suffix before|after] [--dump <dir>]
   */
 object ProfileCell {
   def main(args: Array[String]): Unit = {
@@ -22,6 +27,7 @@ object ProfileCell {
     var repeat = 3
     var plansDir = Option.empty[String]
     var suffix = "before"
+    var dumpDir = Option.empty[String]
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     def value(i: Int): String =
       if (i + 1 < args.length) args(i + 1)
@@ -32,59 +38,49 @@ object ProfileCell {
         case "--repeat" => repeat = value(i).toInt; i += 2
         case "--plans" => plansDir = Some(value(i)); i += 2
         case "--suffix" => suffix = value(i); i += 2
+        case "--dump" => dumpDir = Some(value(i)); i += 2
         case f if f.startsWith("--") =>
-          sys.error(s"unknown flag $f (expected --repeat/--plans/--suffix)")
+          sys.error(s"unknown flag $f (expected --repeat/--plans/--suffix/--dump)")
         case q => names += q; i += 1
       }
     }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(cpus.toInt, 8).toString)
-    val spark = graft.Conf.local(SparkSession.builder(), cpus.toInt)
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.default.parallelism", shuffle)
-      .config("spark.sql.leafNodeDefaultParallelism", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = Cells.session()
     val qs = graft.SparkEntry.queries
     val unknown = names.filterNot(qs.contains)
     require(unknown.isEmpty,
       s"unknown queries: ${unknown.mkString(", ")} (see SparkEntry.queries)")
-    // Bench-parity warmup: JIT/codegen on the tiny SF, then shared spines
-    // on the timed SF.
+    // before the shared builds, so the dump runs the standalone plans
+    dumpDir.foreach(dump(spark, sfDir, names.toSeq, _))
+    Cells.warmup(spark, names, Cells.WarmupDir)
+    Cells.warmShared(spark, sfDir)
     names.foreach { n =>
-      try qs(n)(spark, "/root/testdata/sf0.001").count()
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[profile] warmup $n failed: ${e.getMessage}") }
-    }
-    graft.catalog.TextLlm.warmShared(spark, sfDir)
-    graft.catalog.Vectors.warmShared(spark, sfDir)
-    graft.catalog.CoPurchase.warmShared(spark, sfDir)
-    graft.catalog.Search.warmShared(spark, sfDir)
-    graft.catalog.MediaCatalog.warmShared(spark, sfDir)
-
-    names.foreach { n =>
-      var best = Double.MaxValue
-      var rows = 0L
-      (1 to repeat).foreach { _ =>
-        val t0 = System.nanoTime()
-        rows = qs(n)(spark, sfDir).count()
-        val w = (System.nanoTime() - t0) / 1e9
-        if (w < best) best = w
-      }
-      printf("PROFILE %-34s %8.3f s  (%d rows, min of %d)%n", n, best, rows, repeat)
+      val best = Cells.time(repeat)(qs(n)(spark, sfDir)).head
+      printf("PROFILE %-34s %8.3f s  (%d rows, min of %d)%n", n, best.wall, best.rows, repeat)
       plansDir.foreach { dir =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+        Files.createDirectories(Paths.get(dir))
         val plan = qs(n)(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$dir/${n}_$suffix.txt"), plan)
+        Files.writeString(Paths.get(s"$dir/${n}_$suffix.txt"), plan)
       }
     }
     spark.stop()
+  }
+
+  /** Write each named cell's result on `sfDir` to `outDir/<cell>` as one
+    * parquet file, and the cells' oracle SQL to `outDir/oracle_sql.json`,
+    * as `graft.Verify` does for the whole catalog. Call it while the
+    * `graft.ops.Warmed` registry is empty, so the standalone plans run. */
+  def dump(spark: SparkSession, sfDir: String, names: Seq[String], outDir: String): Unit = {
+    names.foreach { n =>
+      graft.SparkEntry.queries(n)(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$n")
+    }
+    val json = graft.SparkEntry.oracleSql
+      .filter { case (k, _) => names.contains(k) }
+      .map { case (k, v) => s"${graft.Jsons.quote(k)}: ${graft.Jsons.quote(v)}" }
+      .mkString("{", ",", "}")
+    Files.createDirectories(Paths.get(outDir))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 }

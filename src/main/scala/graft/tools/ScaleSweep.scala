@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
  * unique-ified so near-dup structure doesn't explode quadratically) and
  * time the heavy single-table queries at 1x/4x/16x. Near-linear growth is
  * the evidence that the plan shapes survive scale-up; anything
- * super-linear is a plan bug to fix. Writes SCALE.md.
+ * super-linear is a plan bug to fix. Writes SCALE.md. Cells are timed in
+ * the [[Cells]] session and timed pass, after a warm pass on the same
+ * replica directory.
  *
  * Usage: runMain graft.tools.ScaleSweep [baseSfDir] [outFile]
  */
@@ -123,15 +125,13 @@ object ScaleSweep {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("SCALE.md")
-    val spark = graft.Conf.local(SparkSession.builder(),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Cells.session()
 
     // SPARK_GRAFT_SWEEP_FACTORS (e.g. "1,16,64") and SPARK_GRAFT_SWEEP_ONLY
     // (comma-separated query names) focus a stress run — e.g. an x64 point
     // on the heaviest cells — without re-timing the whole catalog; the
     // default full sweep still owns the SCALE.md table (a focused run
-    // writes its table to stdout/outFile arg instead of clobbering it).
+    // prints its table to stdout instead of clobbering it).
     val factors = sys.env.get("SPARK_GRAFT_SWEEP_FACTORS")
       .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Seq(1, 4, 16))
     // v5 (round 13: offset part replicas to match lineitem's l_partkey;
@@ -156,56 +156,39 @@ object ScaleSweep {
     val focused = only.isDefined || factors != Seq(1, 4, 16)
     val swept = only.fold(queries)(s => queries.filter(s))
 
-    val rows = swept.map { q =>
-      val times = dirs.map { case (f, dir) =>
-        val fn = graft.SparkEntry.queries(q)
-        fn(spark, dir).count() // warm plan/codegen per dir
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      (q, times)
-    } ++ (if (only.exists(!_("lm_rare_bigram_ratio"))) Nil else Seq {
-      // threshold∝N dial for lm_rare_bigram_ratio: the replica generator
-      // appends one token per copy, so every bigram's corpus frequency
-      // multiplies by the factor — at x16 virtually the whole corpus
-      // clears the catalog's fixed freq<=5 dial and the bloom prefilter
-      // has no tail to cut (a property of the sweep data, not the plan).
-      // Production rarity tracks corpus size; this row scales the
-      // threshold with the factor, preserving the head/tail split the
-      // operator is designed around.
-      val times = dirs.map { case (f, dir) =>
-        graft.catalog.Lm.rareBigramRatio(spark, dir, 5L * f).count() // warm
-        val t0 = System.nanoTime()
-        graft.catalog.Lm.rareBigramRatio(spark, dir, 5L * f).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      ("lm_rare_bigram_ratio (threshold 5*factor dial)", times)
-    })
-
-    if (focused) {
-      // stress/focused run: print the table, never clobber the canonical
-      // full-sweep SCALE.md
-      println(s"| query | ${factors.map(f => s"${f}x (s)").mkString(" | ")} | ratio |")
-      println("|" + Seq.fill(factors.size + 2)("---").mkString("|") + "|")
-      rows.foreach { case (q, ts) =>
-        val cells = ts.map(t => f"$t%.2f").mkString(" | ")
-        println(f"| $q | $cells | ${ts.last / ts.head}%.1f |")
-      }
-      spark.stop()
-      return
+    // one warm pass (plan/codegen) on each replica dir, then the timed pass
+    def sweep(cell: (Int, String) => DataFrame): Seq[Double] = dirs.map { case (f, dir) =>
+      cell(f, dir).count()
+      Cells.time(1)(cell(f, dir)).head.wall
     }
+    // The extra lm_rare_bigram_ratio row is a threshold∝N dial: the replica
+    // generator appends one token per copy, so every bigram's corpus
+    // frequency multiplies by the factor — at x16 virtually the whole
+    // corpus clears the catalog's fixed freq<=5 dial and the bloom
+    // prefilter has no tail to cut (a property of the sweep data, not the
+    // plan). Production rarity tracks corpus size; this row scales the
+    // threshold with the factor, preserving the head/tail split the
+    // operator is designed around.
+    val rows = swept.map(q => q -> sweep((_, dir) => graft.SparkEntry.queries(q)(spark, dir))) ++
+      (if (only.exists(!_("lm_rare_bigram_ratio"))) Nil
+       else Seq("lm_rare_bigram_ratio (threshold 5*factor dial)" ->
+         sweep((f, dir) => graft.catalog.Lm.rareBigramRatio(spark, dir, 5L * f))))
+
+    val table = (Seq(
+      s"| query | ${factors.map(f => s"${f}x (s)").mkString(" | ")} | x${factors.last}/x${factors.head} |",
+      "|" + Seq.fill(factors.size + 2)("---").mkString("|") + "|") ++
+      rows.map { case (q, ts) => f"| $q | ${ts.map(t => f"$t%.2f").mkString(" | ")} | ${ts.last / ts.head}%.1f |" })
+      .mkString("", "\n", "\n")
+    print(table)
+    if (focused) { spark.stop(); return } // never clobber the full-sweep SCALE.md
 
     val sb = new StringBuilder
     sb.append("# SCALE — empirical scale sweep (sf0.1 base, replicated with offset keys)\n\n")
-    sb.append("Second (warm) run per cell, `graft.tools.ScaleSweep`. ")
-    sb.append("`x16/x1` near the data ratio 16 (or below it, while fixed overhead ")
+    sb.append("Second (warm) run per cell, `graft.tools.ScaleSweep` in the `graft.Bench` ")
+    sb.append("session. `x16/x1` near the data ratio 16 (or below it, while fixed overhead ")
     sb.append("still dominates) means the plan scales linearly; super-linear growth ")
     sb.append("would flag a shape that breaks at 100 TB.\n\n")
-    sb.append("| query | 1x (s) | 4x (s) | 16x (s) | x16/x1 |\n|---|---|---|---|---|\n")
-    rows.foreach { case (q, ts) =>
-      sb.append(f"| $q | ${ts(0)}%.2f | ${ts(1)}%.2f | ${ts(2)}%.2f | ${ts(2) / ts(0)}%.1f |\n")
-    }
+    sb.append(table)
     sb.append("\nReading notes:\n")
     sb.append("- `dedup_components` rounds depend on cluster diameter, not size; ")
     sb.append("its growth tracks candidate-pair volume.\n")
@@ -234,8 +217,8 @@ object ScaleSweep {
     sb.append("the one-time word-count scan. `lm_bpe_encode` applies the frozen ")
     sb.append("merge table to DISTINCT words and broadcasts the vocab-sized ")
     sb.append("word→symbols map back over the corpus — near-linear.\n")
-    sb.append("- `graph_pagerank_parts` (fixed-point, 5 iterations) is O(iters x |E|) ")
-    sb.append("with the edge side exchange-free across rounds. Since the round-10 ")
+    sb.append("- `graph_pagerank_parts` (fixed-point, 5 iterations) is O(iters x |E|); ")
+    sb.append("its edge side is re-exchanged in every round's join (under AQE the checkpointed edges report no partitioning). Since the round-10 ")
     sb.append("sweep, `lineitem` replicas offset BOTH l_orderkey and l_partkey, so ")
     sb.append("the co-purchase graph (pagerank, `graph_kcore_parts`, ")
     sb.append("`copurchase_rules_lift`) scales as FACTOR DISJOINT replicas — edge ")
@@ -266,9 +249,6 @@ object ScaleSweep {
     }
     Files.writeString(path, sb.toString)
     println(s"wrote $out")
-    rows.foreach { case (q, ts) =>
-      println(f"SCALE $q%-32s ${ts(0)}%6.2f ${ts(1)}%6.2f ${ts(2)}%6.2f  ratio ${ts(2) / ts(0)}%5.1f")
-    }
     spark.stop()
   }
 }
