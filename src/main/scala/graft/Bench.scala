@@ -25,6 +25,10 @@ object Bench {
     * newline. */
   val LineBudget = 1900
 
+  /** Where the full per-cell table goes: under the build's ignored output
+    * directory, so a run from the checkout root changes no tracked file. */
+  val FullPath = "target/bench_last.json"
+
   /** Most cells the end-of-run budget retry re-times. */
   private val RetryCap = 24
 
@@ -98,10 +102,12 @@ object Bench {
     val totals = Totals(wall, Cells.cpuSec() - cpu0, Cells.gcSec() - gc0, load0, Cells.loadAvg())
     warnContention(cells, totals)
     val (stdoutLine, fullLine) = lines(cells, sfDir, totals, retried, shared)
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_last.json"),
-      (fullLine + "\n").getBytes("UTF-8"))
-    catch { case NonFatal(e) =>
-      System.err.println(s"[bench] could not write bench_last.json: $e") }
+    try {
+      val full = java.nio.file.Paths.get(FullPath)
+      java.nio.file.Files.createDirectories(full.getParent)
+      java.nio.file.Files.write(full, (fullLine + "\n").getBytes("UTF-8"))
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] could not write $FullPath: $e") }
     System.err.println(s"[bench] json line length: ${stdoutLine.length} (full ${fullLine.length})")
     println(stdoutLine)
     spark.stop()
@@ -145,10 +151,10 @@ object Bench {
         "pass (budget-relevant: " + (if (big.isEmpty) "none" else big.mkString(", ")) +
         f"); external load ≈ $external%.1f cores (loadavg ${t.loadEnd}%.1f minus " +
         f"own $own%.1f) — cells report per-cell MINs; full list " +
-        "in bench_last.json \"escalated\"")
+        "in " + FullPath + " \"escalated\"")
   }
 
-  /** The stdout line and the full bench_last.json line.
+  /** The stdout line and the full line written to [[FullPath]].
     *
     * `value` is the SUM OF PER-CELL MINS, the contention-robust estimate of
     * the catalog wall that budget rows compare against; `wall` is the raw
@@ -156,7 +162,7 @@ object Bench {
     * loaded box shows up as wall >> value without corrupting the cells.
     * The full catalog does not fit the stdout budget, so stdout keeps the
     * costliest cells that fit, in descending cost order (the omitted tail is
-    * sub-noise), and counts the rest in `queries_omitted`; bench_last.json
+    * sub-noise), and counts the rest in `queries_omitted`; the full line
     * holds every cell plus per-cell CPU and GC seconds, the escalated and
     * retried cells and the shared build seconds. */
   def lines(cells: Seq[Cell], sfDir: String, t: Totals, retried: Seq[String],
@@ -173,7 +179,7 @@ object Bench {
     val all = byCost.map(c => c.name -> c.sec)
     val value = cells.map(_.sec).sum
     def line(kept: Seq[(String, Double)], omitted: Int): String = {
-      val omit = if (omitted > 0) s""","queries_omitted":$omitted,"queries_full":"bench_last.json"""" else ""
+      val omit = if (omitted > 0) s""","queries_omitted":$omitted,"queries_full":${Jsons.quote(FullPath)}""" else ""
       s"""{"metric":"total","value":${sec(value)},"unit":"sec","wall":${sec(t.wall)},"cpu":${sec(t.cpu)},"gc":${sec(t.gc)},"load_start":${sec(t.loadStart)},"load_end":${sec(t.loadEnd)},"repeat":$Repeat,"queries":${obj(kept)}$omit,"sf":${Jsons.quote(sfDir)},"parallelism":1,"errors":${arr(cells.filter(_.failed).map(_.name))}}"""
     }
     val full = line(all, 0).dropRight(1) +

@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
  * Session configuration profiles for the graft engine.
  *
  * [[local]] is what Verify/Bench/tests use (small shuffle width, UTC,
- * nanos-long parquet reads). [[clusterScale]] documents — as code — the
- * settings this library assumes when the same plans run against ~100 TB on
- * a real cluster; every choice maps to a failure mode seen at scale.
+ * nanos-long parquet reads); [[objectStore]] adds the s3a settings. The
+ * settings the same plans assume on a ~100 TB cluster, and the failure
+ * mode behind each, are in SCALE.md ("Session config — cluster scale").
  */
 object Conf {
 
@@ -21,37 +21,6 @@ object Conf {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-
-  /**
-   * Cluster-scale profile (documentation-as-code; values for a ~1000-executor
-   * cluster reading ~100 TB):
-   *
-   *  - `spark.sql.shuffle.partitions`: ~2-3x total cores. AQE coalesces
-   *    down, so err high; too low caps reduce parallelism AND partition
-   *    size (spill or OOM on the 100 GB-per-partition that 100 TB / 1000
-   *    would otherwise mean).
-   *  - `spark.sql.adaptive.*`: runtime re-plan is non-negotiable at scale —
-   *    skew-join split handles the hot keys `graft.ops.Skew` doesn't
-   *    pre-salt; coalescePartitions keeps the tail tasks from dominating.
-   *  - `spark.sql.files.maxPartitionBytes` 256m: fewer, fuller scan tasks
-   *    (task-launch overhead amortizes; vectorized reader stays hot).
-   *  - `spark.sql.autoBroadcastJoinThreshold` 64m: the star-schema dims in
-   *    this catalog broadcast comfortably; fact-fact joins stay SMJ (or
-   *    bucketed via graft.lake.Bucketing to skip the exchange entirely).
-   *  - timezone/nanos settings identical to local — plan semantics must not
-   *    change between test and cluster.
-   */
-  def clusterScale(b: SparkSession.Builder): SparkSession.Builder =
-    b.withExtensions(new GraftExtensions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.shuffle.partitions", "8192")
-      .config("spark.sql.files.maxPartitionBytes", "268435456")
-      .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
-      .config("spark.sql.parquet.filterPushdown", "true")
 
   /**
    * Object-store (s3a) profile — SCALE.md "Object-store posture" as code.

@@ -414,14 +414,11 @@ object Sql {
       view
     }
     // a grouped SELECT a CURRENT materialized view can answer reads the
-    // (dimension-sized) MV instead of the base table; the JOIN leg
-    // rolls a fact-MV up through a fact⋈dim equi-join the same way;
-    // anything neither rewrite can prove falls through to the original
-    // text ([[SqlDml.rewriteViaMv]] / [[SqlDml.rewriteViaMvJoin]] —
-    // the staleness checks live there)
-    out = SqlDml.rewriteViaMv(spark, out)
-      .orElse(SqlDml.rewriteViaMvJoin(spark, out))
-      .getOrElse(out)
+    // (dimension-sized) MV instead of the base table, directly or rolled
+    // up through a fact⋈dim equi-join chain; anything the rewrite cannot
+    // prove falls through to the original text ([[SqlDml.rewriteViaMv]]
+    // — the staleness and exactness checks live there)
+    out = SqlDml.rewriteViaMv(spark, out).getOrElse(out)
     spark.sql(out)
   }
 

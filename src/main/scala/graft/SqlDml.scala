@@ -889,8 +889,6 @@ object SqlDml {
             case None => clean(g)
           }
         }
-        val cnt = "(?i)^COUNT\\s*\\(\\s*\\*\\s*\\)$".r
-        val agg = "(?i)^(SUM|MIN|MAX)\\s*\\(\\s*([^)]+?)\\s*\\)$".r
         var sums = Seq.empty[String]
         var minMax = Seq.empty[String]
         // top-level split, NOT split(",") — a date_trunc('unit', col)
@@ -905,7 +903,8 @@ object SqlDml {
               case _ if groupExprOf(item).exists(ge =>
                   groupExprs.exists(_._2 == ge._2)) => () // an expr key
               case cnt() => () // always materialized as n_rows
-              case agg(fn, c) =>
+              // AVG is derived at query time from the sum and count legs
+              case agg(fn, c) if !fn.equalsIgnoreCase("AVG") =>
                 if (fn.equalsIgnoreCase("SUM")) sums :+= clean(c)
                 else if (!minMax.contains(clean(c))) minMax :+= clean(c)
               // SQL identifiers are case-insensitive — match them so
@@ -948,320 +947,315 @@ object SqlDml {
 
   // ------------------------------------------------ MV automatic rewrite
 
+  // The MV grammar, shared by CREATE MATERIALIZED VIEW's select list and
+  // the rewrite's select items, WHERE, HAVING, GROUP BY and ORDER BY.
+  private val cnt = "(?i)^COUNT\\s*\\(\\s*\\*\\s*\\)$".r
+  private val agg = "(?i)^(SUM|MIN|MAX|AVG)\\s*\\(\\s*([^)]+?)\\s*\\)$".r
+  private val aliased = "(?is)^(.+?)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
+  // WHERE conjuncts: <ref> (=|!=|<>|<|<=|>|>=) <literal> and <ref> IN
+  // (<literal>, ...); literals are numbers or single-quoted strings
+  private val literal = "(?:'[^']*'|-?\\d+(?:\\.\\d+)?)"
+  private val cmp =
+    s"(?is)^(.+?)\\s*(=|!=|<>|<=|>=|<|>)\\s*($literal)$$".r
+  private val inList = ("(?is)^(.+?)\\s+IN\\s*\\(\\s*" +
+    s"($literal(?:\\s*,\\s*$literal)*)\\s*\\)$$").r
+  // HAVING conjuncts: <aggregate> <cmp> <numeric literal>
+  private val hcmp =
+    "(?is)^(.+?)\\s*(=|!=|<>|<=|>=|<|>)\\s*(-?\\d+(?:\\.\\d+)?)$".r
+  private val wrapM = "(?is)^\\s*(ROLLUP|CUBE)\\s*\\((.*)\\)\\s*$".r
+  // an ORDER BY item: peel only a trailing ASC/DESC, so an expression
+  // head keeps the spaces inside its parens
+  private val dirM = "(?is)^(.*?)(?:\\s+(ASC|DESC))?\\s*$".r
+  // a function call, for the auto-name of an unaliased select item
+  private val call = "(?s)^(\\w+)\\s*\\((.*)\\)$".r
+  // SELECT .. FROM <fact> [JOIN <dim> ON a = b]* [WHERE ..] GROUP BY ..
+  // [HAVING ..] [ORDER BY ..]
+  private val mvShape = ("(?is)^\\s*SELECT\\s+(.+?)\\s+FROM\\s+(\\w+)" +
+    "((?:\\s+JOIN\\s+\\w+\\s+ON\\s+[\\w.`]+\\s*=\\s*[\\w.`]+)*)" +
+    "(?:\\s+WHERE\\s+(.+?))?\\s+GROUP\\s+BY\\s+(.+?)" +
+    "(?:\\s+HAVING\\s+(.+?))?" +
+    "(?:\\s+ORDER\\s+BY\\s+(.+?))?\\s*;?\\s*$").r
+  private val joinHop =
+    "(?i)JOIN\\s+(\\w+)\\s+ON\\s+([\\w.`]+)\\s*=\\s*([\\w.`]+)".r
+
   /** Try to answer a grouped SELECT from a registered MATERIALIZED VIEW
     * instead of its (100 TB) base table — the consumption half of the MV
     * story ([[createMvStmt]] builds them, this makes plain SQL use them
-    * without naming them). Fires only when ALL of:
+    * without naming them):
     *
-    *  - the statement is `SELECT <items> FROM <registered-src> [WHERE
-    *    <conjuncts over MV group columns>] GROUP BY <cols> [ORDER BY
-    *    <group cols>]` — a WHERE whose every conjunct is a simple
-    *    comparison/IN on an MV GROUP column filters the MV's rows (a
-    *    group column is materialized verbatim at group grain, so the
-    *    filter commutes with the aggregation); any other WHERE shape,
-    *    HAVING, or joins fall through to the base table unchanged;
-    *  - some registered MV has this source, its group columns form a
-    *    SUPERSET of the query's (equal → direct read; coarser query →
-    *    re-aggregate the dimension-sized MV: sum of n_rows/sum_c/cnt_c,
-    *    min of min_c, max of max_c, avg = sum_c / cnt_c — the algebra is
-    *    re-aggregable by construction; SUM/AVG additionally require the
-    *    view's Decimal(38,6) accumulator to be EXACT for the source type
-    *    (integral, or decimal of scale <= 6 — float/double sources
-    *    quantize at 1e-6 in the accumulator and fall through to the
-    *    base), and AVG needs the `cntCols` leg and an integral source),
-    *    and every select item maps onto materialized columns;
+    *   SELECT <keys + count(*)/sum/min/max/avg over FACT columns>
+    *   FROM <registered fact> [JOIN <dim> ON a = b]*
+    *   [WHERE <conjuncts>] GROUP BY [ROLLUP|CUBE] <keys>
+    *   [HAVING <conjuncts>] [ORDER BY <group keys>]
+    *
+    * A single-table query is a join chain of zero hops. Fires only when
+    * ALL of:
+    *
+    *  - some registered MV has this fact as its source and its group
+    *    columns cover every FACT column the query touches: group keys,
+    *    WHERE targets and join keys (whitelisted bucket expressions map
+    *    onto the MV's derived storage columns, matched by canonical
+    *    form). A coarser query re-aggregates the dimension-sized MV: sum
+    *    of n_rows/sum_c/cnt_c, min of min_c, max of max_c, avg = sum_c /
+    *    cnt_c — the algebra is re-aggregable by construction, so
+    *    ROLLUP/CUBE wrappers carry through verbatim (GROUPING() falls
+    *    through: not a materialized column);
+    *  - every aggregate is over a FACT column the MV materializes, and
+    *    SUM/AVG find the view's Decimal(38,6) accumulator EXACT for the
+    *    source type (integral, or decimal of scale <= 6 — float/double
+    *    sources quantize at 1e-6 and fall through to the base); AVG
+    *    needs the `cntCols` leg and an integral source;
+    *  - each WHERE conjunct is a comparison / IN list with literals on a
+    *    fact MV group column or declared bucket expression (a group
+    *    column is materialized verbatim at group grain, so the filter
+    *    commutes with the aggregation) or on any dim column (the filter
+    *    is row-level on the join's dim side; aggregation follows the
+    *    join in both formulations). HAVING conjuncts compare a mappable
+    *    aggregate with a numeric literal; ORDER BY names group keys;
     *  - the MV is CURRENT for THIS SESSION: its sync watermark equals
-    *    the version the source's registered temp view is BOUND to (a
-    *    stale MV — or one synced ahead of an un-rebound view — answers
+    *    the version the fact's registered temp view is BOUND to (a stale
+    *    MV — or one synced ahead of an un-rebound view — answers
     *    nothing; fall back to the base, the always-correct path).
     *
+    * Through joins, the rollup COMMUTES because every ON may touch the
+    * fact only through MV group columns: all fact rows of one MV group
+    * share the same total join multiplicity, so each MV partial row
+    * replicates exactly as the base's fact rows would (k matches scale
+    * n_rows / sum_c / cnt_c by k on both sides, min/max are idempotent
+    * under replication, AVG divides two k-scaled legs). NO uniqueness
+    * assumption on any dim key; NULL join keys drop identically. A
+    * SNOWFLAKE tail (dim-to-dim hops) joins at dimension scale either
+    * way — the reference's declared dashboard shape (funnel /
+    * attribution metrics sliced by dimension attributes) at MV cost.
+    * Dims need no watermark: the rewritten text references the same
+    * registered dim views the original would read.
+    *
     * The rewritten scan reads the MV's live version through a pinned
-    * temp view, so the 100 TB base is never touched. Ambiguity resolves
-    * to the FEWEST-group-columns current MV that covers the query (the
-    * smallest frame). Sums come back in the MV's exact-decimal
-    * representation (the maintenance algebra's type — values identical
-    * to the base recompute, wider type). Returns None when any condition
-    * fails — the caller runs the original text. */
+    * temp view, every reference qualified. Ambiguity resolves to the
+    * FEWEST-group-columns current MV that covers the query. Unaliased
+    * items keep Spark's auto names over the query text (qualifier
+    * dropped), so the output schema does not depend on whether the
+    * rewrite fired; sums come back in the base's sum type. Returns None
+    * when any condition fails — the caller runs the original text.
+    * Other fall-throughs: unqualified names more than one relation
+    * carries, unregistered names, outer or non-equi joins, chains with
+    * no fact linkage. */
   private[graft] def rewriteViaMv(spark: SparkSession,
                                   text: String): Option[String] = {
-    val shape = ("(?is)^\\s*SELECT\\s+(.+?)\\s+FROM\\s+(\\w+)" +
-      "(?:\\s+WHERE\\s+(.+?))?\\s+GROUP\\s+BY\\s+(.+?)" +
-      "(?:\\s+HAVING\\s+(.+?))?" +
-      "(?:\\s+ORDER\\s+BY\\s+(.+?))?\\s*;?\\s*$").r
-    val (items, srcName, whereRaw, gbyRaw, havingRaw, obyRaw) =
+    val (items, srcName, joinSeg, whereRaw, gbyRaw, havingRaw, obyRaw) =
       text match {
-        case shape(i, s, w, g, h, o) =>
-          (i, s, Option(w), g, Option(h), Option(o))
+        case mvShape(i, s, j, w, g, h, o) =>
+          (i, s, j, Option(w), g, Option(h), Option(o))
         case _ => return None
       }
     val srcPath = registry.get(srcName.toLowerCase).map(_._1)
       .getOrElse(return None)
+    val joins = joinHop.findAllMatchIn(joinSeg)
+      .map(m => (m.group(1), m.group(2), m.group(3))).toSeq
+    val dimNames = joins.map(_._1)
+    val allNames = srcName +: dimNames
+    // every dim must be registered too (writable or read-only): the
+    // rewrite re-references its SESSION view, so an unregistered name
+    // has no governed binding to point at
+    if (allNames.map(_.toLowerCase).distinct.size != allNames.size ||
+        !dimNames.forall(d => registry.contains(d.toLowerCase) ||
+          readOnlyRegistry.contains(d.toLowerCase))) return None
+    import org.apache.spark.sql.types._
+    // Try: an allowMissing-registered name (COPY INTO bootstrap) has a
+    // registry entry but no bound view yet — fall through, never throw
+    val srcSchema = scala.util.Try(spark.table(srcName).schema)
+      .getOrElse(return None)
+    val dimSchemas: Seq[(String, StructType)] =
+      dimNames.map(d => d -> scala.util.Try(spark.table(d).schema)
+        .getOrElse(return None))
     def clean(c: String) = c.trim.replace("`", "")
-    // GROUP BY ROLLUP(keys) / CUBE(keys): the super-aggregate grains
-    // re-aggregate the SAME MV partials per grain (sum/count/min/max
-    // are re-aggregable by construction, AVG derives from two
-    // re-aggregated legs), and the super-rows' NULL key extension
-    // conflates with NULL group values identically in both
-    // formulations — so the wrapper carries through to the rewritten
-    // text verbatim. GROUPING()/GROUPING_ID() select items fall
-    // through (not a materialized column).
-    val wrapM = "(?is)^\\s*(ROLLUP|CUBE)\\s*\\((.*)\\)\\s*$".r
+    // Spark's auto-name for an unaliased item: the query's spelling with
+    // qualifiers and literal quotes dropped and functions lower-cased
+    // (`SUM(t.Amt)` → `sum(Amt)`, `date_trunc('MONTH', D)` →
+    // `date_trunc(MONTH, D)`), so the output schema does not depend on
+    // whether the rewrite fired
+    def autoName(body: String): String = clean(body) match {
+      case cnt() => "count(1)"
+      case call(fn, args) => splitTop(args, ',').map(a =>
+        autoName(a).stripPrefix("'").stripSuffix("'"))
+        .mkString(s"${fn.toLowerCase}(", ", ", ")")
+      case ref => ref.split('.').last
+    }
+    // a grouping / filter / join key: a fact or dim column, or a
+    // whitelisted bucket expression ([[groupExprOf]]) over a FACT column
+    // — the dashboard's `segment × month` grain
+    sealed trait JKey
+    case class FactKey(c: String) extends JKey
+    case class DimKey(d: String, c: String) extends JKey
+    case class BucketKey(can: String) extends JKey
+    // resolve a (possibly table-qualified) column ref to its relation
+    // and the SCHEMA's spelling, so key comparisons are exact; None = an
+    // unknown name, a foreign qualifier, or an unqualified name MORE
+    // THAN ONE schema carries (the base parser would reject it too, but
+    // the rewrite must never guess)
+    def side(raw: String): Option[JKey] = {
+      val r = clean(raw)
+      val (qual, col) = r.lastIndexOf('.') match {
+        case -1 => (None, r)
+        case i => (Some(r.substring(0, i)), r.substring(i + 1))
+      }
+      def inSrc = srcSchema.fieldNames.find(_.equalsIgnoreCase(col))
+        .map(FactKey(_))
+      def inDim(d: String) = dimSchemas.find(_._1.equalsIgnoreCase(d))
+        .flatMap(ds => ds._2.fieldNames.find(_.equalsIgnoreCase(col))
+          .map(DimKey(ds._1, _)))
+      qual match {
+        case Some(q) if q.equalsIgnoreCase(srcName) => inSrc
+        case Some(q) => inDim(q)
+        case None =>
+          val hits = inSrc.toSeq ++ dimNames.flatMap(inDim)
+          if (hits.size == 1) hits.headOption else None
+      }
+    }
+    // a dim-side or ambiguous bucket column cannot map onto a fact MV's
+    // derived storage column; the canonical's column is the identifier
+    // before the closing paren — `year(c)` AND `date_trunc('u', c)`
+    def jkey(raw: String): Option[JKey] = side(raw).orElse(
+      groupExprOf(raw).flatMap { case (_, can) =>
+        "([A-Za-z_][A-Za-z0-9_]*)\\)$".r.findFirstMatchIn(can)
+          .flatMap(m => side(m.group(1))).collect {
+            case FactKey(_) => BucketKey(can)
+          }
+      })
+    val onSides: Seq[(JKey, JKey)] = joins.map { case (_, l, r) =>
+      (side(l).getOrElse(return None), side(r).getOrElse(return None))
+    }
+    if (joins.nonEmpty && !onSides.exists { case (l, r) =>
+        l.isInstanceOf[FactKey] || r.isInstanceOf[FactKey] })
+      return None // no fact linkage: not a rollup of this fact
     val (gbyWrap, gbyInner) = gbyRaw.trim match {
       case wrapM(w, inner) => (Some(w.toUpperCase), inner)
       case _ => (None, gbyRaw)
     }
-    // query group keys: plain columns, or whitelisted bucket
-    // expressions normalized to their canonical form (matched against
-    // the MV spec's groupExprs — the storage name substitutes in the
-    // rewritten text). Left = plain column, Right = canonical expr.
-    val gkeys: Seq[Either[String, String]] =
-      splitTop(gbyInner, ',').map { g =>
-        groupExprOf(g) match {
-          case Some((_, canonical)) => Right(canonical)
-          case None => Left(clean(g))
-        }
+    val gkeys: Seq[JKey] =
+      splitTop(gbyInner, ',').map(g => jkey(g).getOrElse(return None))
+    // only FACT-side aggregates map onto the view's algebra; a dim-side
+    // aggregate has no materialized leg
+    case class Agg(fn: String, c: String)
+    def aggOf(body: String): Option[Agg] = body.trim match {
+      case cnt() => Some(Agg("count", ""))
+      case agg(fn, c) => side(c).collect {
+        case FactKey(f) => Agg(fn.toLowerCase, f)
       }
-    val gby = gkeys.collect { case Left(c) => c }
-
-    // WHERE over MV GROUP columns only: a group column is materialized
-    // verbatim at group grain, so filtering MV rows on it is exactly
-    // filtering base rows before aggregation (any other column — a
-    // summed measure, an expression — falls through to the base).
-    // Accepted conjunct shapes: <col> (=|!=|<>|<|<=|>|>=) <literal> and
-    // <col> IN (<literal>, ...), AND-joined; literals are numbers or
-    // single-quoted strings. Anything else returns None (base path).
-    val lit = "(?:'[^']*'|-?\\d+(?:\\.\\d+)?)"
-    val cmp = ("(?is)^([A-Za-z_][A-Za-z0-9_]*)\\s*" +
-      s"(=|!=|<>|<=|>=|<|>)\\s*($lit)$$").r
-    val inList = ("(?is)^([A-Za-z_][A-Za-z0-9_]*)\\s+IN\\s*\\(\\s*" +
-      s"($lit(?:\\s*,\\s*$lit)*)\\s*\\)$$").r
-
-    // (filter target, render-under-resolved-name) — or None = not
-    // rewritable. The target is Left(plain group column) or Right(a
-    // whitelisted bucket expression's CANONICAL form — `WHERE
-    // year(d) = 2021` filters the MV's derived storage column, which is
-    // a group column like any other, so the filter commutes the same
-    // way); the render closure is applied once the candidate MV (and so
-    // the storage name) is known.
-    val ecmp = ("(?is)^(.+?)\\s*" +
-      s"(=|!=|<>|<=|>=|<|>)\\s*($lit)$$").r
-    val einList = ("(?is)^(.+?)\\s+IN\\s*\\(\\s*" +
-      s"($lit(?:\\s*,\\s*$lit)*)\\s*\\)$$").r
-    val whereParsed: Seq[(Either[String, String], String => String)] =
-      whereRaw.map { w =>
-        splitAndTop(w).map { conj =>
-          conj.replace("`", "") match {
-            case cmp(c, op, l) =>
-              (Left(clean(c)): Either[String, String],
-                (_: String) => s"$c $op $l")
-            case ecmp(e, op, l) if groupExprOf(e).isDefined =>
-              (Right(groupExprOf(e).get._2): Either[String, String],
-                (n: String) => s"$n $op $l")
-            case inList(c, ls) =>
-              (Left(clean(c)): Either[String, String],
-                (_: String) => s"$c IN ($ls)")
-            case einList(e, ls) if groupExprOf(e).isDefined =>
-              (Right(groupExprOf(e).get._2): Either[String, String],
-                (n: String) => s"$n IN ($ls)")
-            case _ => return None
-          }
+      case _ => None
+    }
+    // (group key | aggregate, output name)
+    val parsed: Seq[(Either[JKey, Agg], String)] =
+      splitTop(items, ',').map { raw =>
+        val (body, alias) = raw.trim match {
+          case aliased(b, a) => (b.trim, Some(a))
+          case b => (b, None)
         }
-      }.getOrElse(Seq.empty)
-    if (gby.exists(c => !c.matches("[A-Za-z_][A-Za-z0-9_]*")))
-      return None // an EXPRESSION group key is not a materialized column
-    // parse the select list into mappable items
-    val cnt = "(?i)^COUNT\\s*\\(\\s*\\*\\s*\\)$".r
-    val agg = "(?i)^(SUM|MIN|MAX|AVG)\\s*\\(\\s*([^)]+?)\\s*\\)$".r
-    val aliased = "(?is)^(.+?)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
-    sealed trait Item
-    case class GroupItem(c: String, out: String) extends Item
-    // an EXPRESSION group key in the select list, matched by canonical
-    // form — substitutes as the MV's derived storage column
-    case class ExprGroupItem(canonical: String, out: String) extends Item
-    case class CountItem(out: String) extends Item
-    case class AggItem(fn: String, c: String, out: String) extends Item
-    val parsed: Seq[Item] = splitTop(items, ',').map { raw =>
-      val (body, alias) = raw.trim match {
-        case aliased(b, a) => (b.trim, Some(a))
-        case b => (b.trim, None)
+        val item: Either[JKey, Agg] = aggOf(body).map(Right(_)).getOrElse(
+          Left(jkey(body).filter(gkeys.contains).getOrElse(return None)))
+        item -> alias.getOrElse(autoName(body))
       }
-      body match {
-        case cnt() => CountItem(alias.getOrElse("count(1)"))
-        case e if groupExprOf(e).exists(ge =>
-            gkeys.contains(Right(ge._2))) =>
-          // unaliased default = the CANONICAL form, which is also
-          // Spark's auto-generated name for year/month/day — so the
-          // column name does not depend on whether the rewrite fired
-          // (date_trunc auto-names drop the unit quotes base-side;
-          // alias those in queries that care)
-          ExprGroupItem(groupExprOf(e).get._2,
-            alias.getOrElse(groupExprOf(e).get._2))
-        case agg(fn, c) =>
-          val fl = fn.toLowerCase
-          AggItem(fl, clean(c), alias.getOrElse(s"$fl(${clean(c)})"))
-        case bare if gby.exists(_.equalsIgnoreCase(clean(bare))) =>
-          GroupItem(clean(bare), alias.getOrElse(clean(bare)))
+    val whereParsed: Seq[(JKey, String)] =
+      whereRaw.toSeq.flatMap(splitAndTop).map {
+        case cmp(c, op, l) => (jkey(c).getOrElse(return None), s"$op $l")
+        case inList(c, ls) => (jkey(c).getOrElse(return None), s"IN ($ls)")
         case _ => return None
       }
-    }
-
-    // the ORDER BY tail may only name query group keys — by column
-    // name, by a group item's output alias, or by the expression itself
-    // (canonical match); each resolves to its OUTPUT name in the
-    // rewritten text. Anything else (an aggregate) might not survive
-    // the mapping — base path.
-    def groupOutOf(ref: String): Option[String] = {
-      val r = clean(ref)
-      parsed.collectFirst {
-        case GroupItem(c, out)
-            if c.equalsIgnoreCase(r) || out.equalsIgnoreCase(r) => out
-        case ExprGroupItem(can, out)
-            if out.equalsIgnoreCase(r) ||
-              groupExprOf(r).exists(_._2 == can) => out
-      }.orElse(if (gby.exists(_.equalsIgnoreCase(r))) Some(r) else None)
-    }
-    val oby = obyRaw.map(o => splitTop(o, ',').map { seg =>
-      // an expression ref may contain spaces inside parens — peel only
-      // a trailing ASC/DESC, keep the head intact
-      val dirM = "(?is)^(.*?)(?:\\s+(ASC|DESC))?\\s*$".r
-      val (headRaw, dir) = seg.trim match {
-        case dirM(h, d) => (h, Option(d).map(_.toUpperCase))
-        case other => (other, None)
-      }
-      val out = groupOutOf(headRaw).getOrElse(return None)
-      s"`$out`" + dir.map(" " + _).getOrElse("")
-    })
-
-    // HAVING over rewritable aggregates: AND-joined conjuncts of
-    // <count(*) | sum/min/max/avg(col)> <cmp> <numeric literal> — the
-    // same mappable algebra as the select items (same coverage and
-    // exactness gates), rewritten to the MV-derived form. The values on
-    // both sides of the comparison are identical to the base query's by
-    // the exactness gates, so the group filter commutes. Any other
-    // HAVING shape falls through to the base.
-    case class HavingPred(fn: String, c: String, op: String, lit: String)
-    val hcmp = ("(?is)^(.+?)\\s*(=|!=|<>|<=|>=|<|>)\\s*" +
-      "(-?\\d+(?:\\.\\d+)?)$").r
-    val havingParsed: Seq[HavingPred] = havingRaw.map { h =>
-      splitAndTop(h).map { conj =>
+    // HAVING over the same fact-side algebra as the select items — the
+    // values on both sides of the comparison equal the base's by the
+    // exactness gates, so the group filter commutes
+    val havingParsed: Seq[(Agg, String, String)] =
+      havingRaw.toSeq.flatMap(splitAndTop).map { conj =>
         conj.replace("`", "") match {
-          case hcmp(a, op, l) => a.trim match {
-            case cnt() => HavingPred("count", "", op, l)
-            case agg(fn, c) => HavingPred(fn.toLowerCase, clean(c), op, l)
-            case _ => return None
-          }
+          case hcmp(a, op, l) => (aggOf(a).getOrElse(return None), op, l)
           case _ => return None
         }
       }
-    }.getOrElse(Seq.empty)
-
-    // candidate MVs over this source: current, covering, smallest first
-    val candidates = mvRegistry.values.toSeq.distinct.flatMap { path =>
+    val aggs = parsed.collect { case (Right(a), _) => a } ++
+      havingParsed.map(_._1)
+    // candidate MVs: over this fact, current, covering every fact-side
+    // key / bucket expression / WHERE target / join key and every
+    // aggregate, smallest first
+    val keys = gkeys ++ whereParsed.map(_._1) ++
+      onSides.flatMap { case (l, r) => Seq(l, r) }
+    val (mvPath, mvSpec) = mvRegistry.values.toSeq.distinct.flatMap { path =>
       scala.util.Try(MatView.spec(spark, path)).toOption.map(path -> _)
     }.filter { case (_, sp) =>
-      // one coverage rule for SELECT items and HAVING predicates alike
-      def aggCovered(fn: String, c: String): Boolean = fn match {
-        case "count" => true
-        case "sum" => sp.sumCols.exists(_.equalsIgnoreCase(c))
-        case "avg" =>
+      sp.source == srcPath && keys.forall {
+        case FactKey(f) => sp.groupCols.exists(_.equalsIgnoreCase(f))
+        case BucketKey(can) => sp.groupExprs.exists(_._2 == can)
+        case DimKey(_, _) => true
+      } && aggs.forall { a =>
+        def has(cols: Seq[String]) = cols.exists(_.equalsIgnoreCase(a.c))
+        a.fn match {
+          case "count" => true
+          case "sum" => has(sp.sumCols)
           // AVG divides the materialized sum by the materialized
           // NON-NULL count — both legs must exist (cntCols is empty on
-          // pre-AVG views: fall through to the base)
-          sp.sumCols.exists(_.equalsIgnoreCase(c)) &&
-            sp.cntCols.exists(_.equalsIgnoreCase(c))
-        case _ => sp.minMaxCols.exists(_.equalsIgnoreCase(c))
+          // pre-AVG views)
+          case "avg" => has(sp.sumCols) && has(sp.cntCols)
+          case _ => has(sp.minMaxCols)
+        }
+      } &&
+      // currency is judged against the VERSION the session's temp view
+      // is bound to — not the table's live version: if the table moved
+      // under an un-rebound view, a live-synced MV would answer from a
+      // DIFFERENT snapshot than every other query on this name
+      boundVersions.get(srcName.toLowerCase).contains(sp.synced)
+    }.sortBy(_._2.groupCols.size).headOption.getOrElse(return None)
+    // EXACTNESS gate for the additive aggregates: the view accumulates
+    // sums as Decimal(38,6) (MatView.acc), which represents INTEGRAL
+    // values and decimals of scale <= 6 exactly but QUANTIZES
+    // float/double (a 1e-7 value materializes as 0.000000) and
+    // wider-scale decimals. AVG additionally excludes decimal sources
+    // (base decimal avg carries Spark-internal rounding the derived
+    // division is not guaranteed to reproduce). A rewritten SUM comes
+    // back in the type the BASE query would produce (integral sums →
+    // BIGINT, decimal follows Spark's sum widening), so e.g. a CTAS over
+    // it is not silently re-typed.
+    val sumTypes = aggs.filter(a => a.fn == "sum" || a.fn == "avg").map { a =>
+      val dt = srcSchema(a.c).dataType
+      val integral = dt match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
       }
-      sp.source == srcPath &&
-        gkeys.forall {
-          case Left(g) => sp.groupCols.exists(_.equalsIgnoreCase(g))
-          // expression keys match by CANONICAL form against the MV's
-          // declared group expressions — the derived storage column
-          // substitutes in the rewritten text
-          case Right(can) => sp.groupExprs.exists(_._2 == can)
-        } &&
-        // every WHERE target must be an MV GROUP column / declared
-        // group expression (not merely a query group key — filtering on
-        // a coarser MV's extra dimension is equally answerable from its
-        // rows)
-        whereParsed.forall {
-          case (Left(c), _) => sp.groupCols.exists(_.equalsIgnoreCase(c))
-          case (Right(can), _) => sp.groupExprs.exists(_._2 == can)
-        } &&
-        parsed.forall {
-          case GroupItem(_, _) | ExprGroupItem(_, _) | CountItem(_) =>
-            true
-          case AggItem(fn, c, _) => aggCovered(fn, c)
-        } &&
-        havingParsed.forall(h => aggCovered(h.fn, h.c)) &&
-        // currency is judged against the VERSION the session's temp view
-        // is bound to — not the table's live version: if the table moved
-        // under an un-rebound view, a live-synced MV would answer from a
-        // DIFFERENT snapshot than every other query on this name
-        boundVersions.get(srcName.toLowerCase).contains(sp.synced)
-    }.sortBy(_._2.groupCols.size)
-    val (mvPath, mvSpec) = candidates.headOption.getOrElse(return None)
-    def storageOf(can: String): String =
-      mvSpec.groupExprs.find(_._2 == can).get._1
-
+      val exact = integral || a.fn == "sum" && (dt match {
+        case d: DecimalType => d.scale <= 6 && d.precision - d.scale <= 32
+        case _ => false
+      })
+      if (!exact) return None
+      a.c -> (if (integral) "BIGINT" else dt match {
+        case d: DecimalType =>
+          s"DECIMAL(${math.min(38, d.precision + 10)},${d.scale})"
+        case other => other.sql
+      })
+    }.toMap
     // pin the MV's live version under a throwaway view and re-aggregate
     // (exact-match groupings re-aggregate one row per group — same
     // values, one canonical rewrite shape for both cases)
     val mvLive = Versioned.currentVersion(spark, mvPath).getOrElse(
       return None)
     val vn = s"${srcName}__mv_rw_v$mvLive"
-    Versioned.readVersion(spark, mvPath, mvLive)
-      .createOrReplaceTempView(vn)
-    // a rewritten SUM must come back in the type the BASE query would
-    // produce (the MV materializes sums exact-decimal for maintenance;
-    // handing that wider type to e.g. a CTAS would silently re-type the
-    // result): integral sums → BIGINT, float sums → DOUBLE, decimal
-    // follows Spark's sum widening. Derived from the source view's
-    // column type — registered at lookup time, so always resolvable.
-    import org.apache.spark.sql.types._
-    val srcSchema = spark.table(srcName).schema
-    // EXACTNESS gate for the additive aggregates: the view accumulates
-    // sums as Decimal(38,6) (MatView.acc), which represents INTEGRAL
-    // values and decimals of scale <= 6 exactly but QUANTIZES
-    // float/double (a 1e-7 value materializes as 0.000000) and
-    // wider-scale decimals — a rewritten SUM/AVG there would silently
-    // diverge from the base recompute, so those sources fall through to
-    // the always-correct base scan. AVG additionally excludes decimal
-    // sources (base decimal avg carries Spark-internal rounding the
-    // derived division is not guaranteed to reproduce).
-    def accExact(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case d: DecimalType => d.scale <= 6 && d.precision - d.scale <= 32
-      case _ => false
+    def qcol(k: JKey): String = k match {
+      case FactKey(f) => s"$vn.`$f`"
+      case DimKey(d, c) => s"$d.`$c`"
+      case BucketKey(can) =>
+        s"$vn.`${mvSpec.groupExprs.find(_._2 == can).get._1}`"
     }
-    val allAggs: Seq[(String, String)] = parsed.collect {
-      case AggItem(fn, c, _) => (fn, c)
-    } ++ havingParsed.collect {
-      case h if h.fn != "count" => (h.fn, h.c)
-    }
-    allAggs.foreach {
-      case ("sum", c) =>
-        val dt = srcSchema.fields.find(_.name.equalsIgnoreCase(c))
-          .map(_.dataType).getOrElse(return None)
-        if (!accExact(dt)) return None
-      case ("avg", c) =>
-        val dt = srcSchema.fields.find(_.name.equalsIgnoreCase(c))
-          .map(_.dataType).getOrElse(return None)
-        if (!accExact(dt) || dt.isInstanceOf[DecimalType]) return None
-      case _ => ()
-    }
-    val sumTypes: Map[String, String] = allAggs.collect {
-      case ("sum", c) => c
-    }.distinct.map { c =>
-      val dt = srcSchema.fields.find(_.name.equalsIgnoreCase(c))
-        .map(_.dataType).getOrElse(return None)
-      c -> (dt match {
-        case ByteType | ShortType | IntegerType | LongType => "BIGINT"
-        case d: DecimalType =>
-          s"DECIMAL(${math.min(38, d.precision + 10)},${d.scale})"
-        case other => other.sql
-      })
-    }.toMap
-    // ONE derived-form generator serves select items and HAVING alike.
+    // ORDER BY names a group key: a selected one by its output name
+    // (matched by alias, column or expression), any other by its
+    // qualified rewritten column. Anything else (an aggregate) might not
+    // survive the mapping — base path.
+    val oby = obyRaw.map(o => splitTop(o, ',').map { seg =>
+      val dirM(head, dir) = seg.trim
+      val k = jkey(head)
+      parsed.collectFirst {
+        case (Left(pk), out) if out.equalsIgnoreCase(clean(head)) ||
+          k.contains(pk) => s"`$out`"
+      }.orElse(k.filter(gkeys.contains).map(qcol)).getOrElse(return None) +
+        Option(dir).map(" " + _.toUpperCase).getOrElse("")
+    })
+    Versioned.readVersion(spark, mvPath, mvLive).createOrReplaceTempView(vn)
     // AVG: DOUBLE division, not decimal — a decimal(38,6)/bigint
     // quotient re-adjusts to scale 6 (Spark's adjustPrecisionScale) and
     // a cast of THAT to double is the 6-dp truncation, not the base
@@ -1281,398 +1275,27 @@ object SqlDml {
     // sums would need per-value magnitude legs (min/max of the summed
     // column) most views don't materialize, and the base it would fall
     // back to is itself unstable there.
-    def aggSql(fn: String, c: String): String = fn match {
-      case "count" => "sum(n_rows)"
-      case "sum" => s"CAST(sum(sum_$c) AS ${sumTypes(c)})"
-      case "avg" =>
-        s"CAST(CAST(sum(sum_$c) AS DOUBLE) / nullif(sum(cnt_$c), 0) " +
-          "AS DOUBLE)"
-      case "min" => s"min(min_$c)"
-      case "max" => s"max(max_$c)"
-      case other =>
-        throw new IllegalStateException(s"unreachable agg $other")
-    }
-    val sel = parsed.map {
-      case GroupItem(c, out) => s"$c AS `$out`"
-      case ExprGroupItem(can, out) => s"${storageOf(can)} AS `$out`"
-      case CountItem(out) => s"${aggSql("count", "")} AS `$out`"
-      case AggItem(fn, c, out) => s"${aggSql(fn, c)} AS `$out`"
-    }.mkString(", ")
-    val whereSql =
-      if (whereParsed.isEmpty) ""
-      else whereParsed.map {
-        case (Left(c), render) => render(c)
-        case (Right(can), render) => render(storageOf(can))
-      }.mkString(" WHERE ", " AND ", "")
-    val havingSql =
-      if (havingParsed.isEmpty) ""
-      else havingParsed.map(h => s"${aggSql(h.fn, h.c)} ${h.op} ${h.lit}")
-        .mkString(" HAVING ", " AND ", "")
-    val gbyOut = gkeys.map {
-      case Left(g) => g
-      case Right(can) => storageOf(can)
-    }.mkString(", ")
-    Some(s"SELECT $sel FROM $vn$whereSql " +
-      s"GROUP BY ${gbyWrap.map(w => s"$w($gbyOut)").getOrElse(gbyOut)}" +
-      s"$havingSql" +
-      oby.map(o => s" ORDER BY ${o.mkString(", ")}").getOrElse(""))
-  }
-
-  /** The JOIN leg of the automatic MV rewrite: answer
-    *
-    *   SELECT <group keys + count/sum/min/max/avg over FACT columns>
-    *   FROM <registered fact> JOIN <dim1> ON .. [JOIN <dim2> ON ..]*
-    *   [WHERE <conjuncts>] GROUP BY [ROLLUP|CUBE] <keys>
-    *   [HAVING ..] [ORDER BY ..]
-    *
-    * from a fact-side materialized view whose group columns cover
-    * every FACT column the chain touches (join keys, group keys,
-    * WHERE columns; whitelisted bucket expressions map onto the MV's
-    * derived storage columns). The aggregate rollup COMMUTES through
-    * the equi-join chain because every join predicate depends only on
-    * (fact MV group columns ∪ dim attributes) — so all fact rows of
-    * one MV group share the same total join multiplicity, and each MV
-    * partial-aggregate row replicates exactly as the base's fact rows
-    * would: k total matches scale n_rows / sum_c / cnt_c by k on both
-    * formulations, min/max are idempotent under replication, AVG
-    * divides two k-scaled legs. NO uniqueness assumption on any dim
-    * key; NULL join keys drop identically (SQL equality). The
-    * rewritten plan joins the DIMENSION-SIZED view through the same
-    * dim chain (a SNOWFLAKE tail — dim-to-dim hops — joins at
-    * dimension scale either way) instead of scanning the 100 TB
-    * fact — the reference's declared dashboard shape (funnel /
-    * attribution metrics sliced by dimension attributes,
-    * /root/reference/README.md:28-33) at MV cost.
-    *
-    * Gates mirror [[rewriteViaMv]]: the fact MV must be CURRENT for
-    * the session (`synced` == the fact view's bound version); the dim
-    * side needs no watermark because the rewritten text references the
-    * SAME registered dim views the original text would read — both
-    * formulations see one snapshot per dim. Aggregates follow the same
-    * exactness rules (integral / scale<=6 sums; AVG integral with the
-    * cnt leg). Fall-throughs to the base: aggregates over dim columns,
-    * unqualified names more than one schema carries, unregistered
-    * names, non-equi or multi-conjunct ONs, outer joins, chains with
-    * no fact linkage. */
-  private[graft] def rewriteViaMvJoin(spark: SparkSession,
-                                      text: String): Option[String] = {
-    val shape = ("(?is)^\\s*SELECT\\s+(.+?)\\s+FROM\\s+(\\w+)" +
-      "((?:\\s+JOIN\\s+\\w+\\s+ON\\s+[\\w.`]+\\s*=\\s*[\\w.`]+)+)" +
-      "(?:\\s+WHERE\\s+(.+?))?\\s+GROUP\\s+BY\\s+(.+?)" +
-      "(?:\\s+HAVING\\s+(.+?))?" +
-      "(?:\\s+ORDER\\s+BY\\s+(.+?))?\\s*;?\\s*$").r
-    val (items, srcName, joinSeg, whereRaw, gbyRaw,
-      havingRaw, obyRaw) = text match {
-      case shape(i, s, j, w, g, h, o) =>
-        (i, s, j, Option(w), g, Option(h), Option(o))
-      case _ => return None
-    }
-    // the join chain: fact JOIN d1 ON a = b [JOIN d2 ON c = e ...] —
-    // a SNOWFLAKE tail is fine (dim-to-dim hops join at dimension
-    // scale either way); the commutation argument is N-ary because
-    // every join predicate is constrained below to depend only on
-    // (fact MV group columns ∪ dim attributes), so all fact rows of
-    // one MV group share the same total join multiplicity
-    val joinRe =
-      "(?i)JOIN\\s+(\\w+)\\s+ON\\s+([\\w.`]+)\\s*=\\s*([\\w.`]+)".r
-    val joins: Seq[(String, String, String)] = joinRe
-      .findAllMatchIn(joinSeg)
-      .map(m => (m.group(1), m.group(2), m.group(3))).toSeq
-    val dimNames = joins.map(_._1)
-    val allNames = srcName +: dimNames
-    if (allNames.map(_.toLowerCase).distinct.size != allNames.size)
-      return None
-    val srcPath = registry.get(srcName.toLowerCase).map(_._1)
-      .getOrElse(return None)
-    // every dim must be registered too (writable or read-only): the
-    // rewrite re-references its SESSION view, so an unregistered name
-    // has no governed binding to point at
-    if (!dimNames.forall(d => registry.contains(d.toLowerCase) ||
-        readOnlyRegistry.contains(d.toLowerCase))) return None
-    import org.apache.spark.sql.types._
-    // Try: an allowMissing-registered name (COPY INTO bootstrap) has a
-    // registry entry but no bound view yet — fall through, never throw
-    val srcSchema = scala.util.Try(spark.table(srcName).schema)
-      .getOrElse(return None)
-    val dimSchemas: Seq[(String, StructType)] =
-      dimNames.map(d => d -> scala.util.Try(spark.table(d).schema)
-        .getOrElse(return None))
-    def clean(c: String) = c.trim.replace("`", "")
-    // resolve a (possibly table-qualified) column ref to its relation:
-    // Left(fact column) / Right((dim name, dim column)); None = an
-    // unknown name, a foreign qualifier, or an unqualified name MORE
-    // THAN ONE schema carries (ambiguous — the base parser would
-    // reject it too, but the rewrite must never guess). Resolution
-    // returns the SCHEMA's spelling: Spark's output names carry the
-    // attribute's casing regardless of how the query spells it, and
-    // one canonical form keeps every key comparison exact.
-    def side(raw: String): Option[Either[String, (String, String)]] = {
-      val r = clean(raw)
-      val (qual, col) = r.lastIndexOf('.') match {
-        case -1 => (None, r)
-        case i => (Some(r.substring(0, i)), r.substring(i + 1))
-      }
-      def inSrc = srcSchema.fieldNames.find(_.equalsIgnoreCase(col))
-      def inDim(d: String) = dimSchemas.find(_._1.equalsIgnoreCase(d))
-        .flatMap(_._2.fieldNames.find(_.equalsIgnoreCase(col))
-          .map(c => (d, c)))
-      qual match {
-        case Some(q) if q.equalsIgnoreCase(srcName) => inSrc.map(Left(_))
-        case Some(q) if dimNames.exists(_.equalsIgnoreCase(q)) =>
-          inDim(dimNames.find(_.equalsIgnoreCase(q)).get).map(Right(_))
-        case Some(_) => None
-        case None =>
-          val hits: Seq[Either[String, (String, String)]] =
-            inSrc.map(Left(_)).toSeq ++
-              dimNames.flatMap(d => inDim(d).map(Right(_)))
-          if (hits.size == 1) hits.headOption else None
-      }
-    }
-    // every ON side must resolve; collect the FACT columns the chain
-    // touches — each must be an MV group column (the constraint the
-    // commutation argument needs)
-    val onSides: Seq[(Either[String, (String, String)],
-                      Either[String, (String, String)])] =
-      joins.map { case (_, l, r) =>
-        (side(l).getOrElse(return None), side(r).getOrElse(return None))
-      }
-    val onFactCols: Seq[String] = onSides.flatMap { case (l, r) =>
-      Seq(l, r).collect { case Left(f) => f }
-    }
-    if (onFactCols.isEmpty) return None // no fact linkage: not a rollup
-    // a grouping / filter key: a plain column on either side, or a
-    // whitelisted bucket expression ([[groupExprOf]]) whose inner
-    // column resolves UNIQUELY to the FACT — the dashboard's
-    // `segment × month` grain; a dim-side or ambiguous bucket column
-    // cannot map onto a fact MV's derived storage column
-    sealed trait JKey
-    case class FactKey(c: String) extends JKey
-    case class DimKey(d: String, c: String) extends JKey
-    case class BucketKey(can: String) extends JKey
-    def jkey(raw: String): Option[JKey] = side(raw) match {
-      case Some(Left(f)) => Some(FactKey(f))
-      case Some(Right((d, c))) => Some(DimKey(d, c))
-      case None => groupExprOf(raw).flatMap { case (_, can) =>
-        // the canonical's column is the identifier before the closing
-        // paren — `year(c)` AND `date_trunc('unit', c)` alike
-        "([A-Za-z_][A-Za-z0-9_]*)\\)$".r.findFirstMatchIn(can)
-          .map(_.group(1)).flatMap(c => side(c) match {
-            case Some(Left(_)) => Some(BucketKey(can))
-            case _ => None
-          })
-      }
-    }
-    // ROLLUP/CUBE wrappers commute exactly as in the single-table leg
-    // (per-grain re-aggregation of the same joined partials)
-    val wrapM = "(?is)^\\s*(ROLLUP|CUBE)\\s*\\((.*)\\)\\s*$".r
-    val (gbyWrap, gbyInner) = gbyRaw.trim match {
-      case wrapM(w, inner) => (Some(w.toUpperCase), inner)
-      case _ => (None, gbyRaw)
-    }
-    val gkeys: Seq[JKey] =
-      splitTop(gbyInner, ',').map(g => jkey(g).getOrElse(return None))
-    val cnt = "(?i)^COUNT\\s*\\(\\s*\\*\\s*\\)$".r
-    val agg = "(?i)^(SUM|MIN|MAX|AVG)\\s*\\(\\s*([^)]+?)\\s*\\)$".r
-    val aliased = "(?is)^(.+?)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
-    sealed trait Item
-    case class KeyItem(k: JKey, out: String) extends Item
-    case class CountItem(out: String) extends Item
-    case class AggItem(fn: String, c: String, out: String) extends Item
-    val parsed: Seq[Item] = splitTop(items, ',').map { raw =>
-      val (body, alias) = raw.trim match {
-        case aliased(b, a) => (b.trim, Some(a))
-        case b => (b.trim, None)
-      }
-      body match {
-        case cnt() => CountItem(alias.getOrElse("count(1)"))
-        case agg(fn, c) if side(c).isDefined => side(c) match {
-          // only FACT-side aggregates map onto the view's algebra; a
-          // dim-side aggregate has no materialized leg — base path
-          case Some(Left(f)) =>
-            // unaliased default = Spark's auto-name over the BASE text
-            // (qualifier dropped), so the output schema is identical
-            // whether or not the rewrite fired
-            AggItem(fn.toLowerCase, f,
-              alias.getOrElse(s"${fn.toLowerCase}($f)"))
-          case _ => return None
-        }
-        case other =>
-          val k = jkey(other).getOrElse(return None)
-          if (!gkeys.contains(k)) return None
-          KeyItem(k, alias.getOrElse(k match {
-            case FactKey(c) => c
-            case DimKey(_, c) => c
-            // the canonical form is Spark's auto-name for year/month/
-            // day, so the output schema matches the base either way
-            case BucketKey(can) => can
-          }))
-      }
-    }
-    // WHERE conjuncts: simple cmp / IN with literals, each targeting a
-    // fact MV group column or declared bucket expression (filters the
-    // view's rows — commutes at group grain) or ANY dim column
-    // (filters the dim's rows — row-level on the join's dim side,
-    // commutes because aggregation happens after the join in BOTH
-    // formulations)
-    val lit = "(?:'[^']*'|-?\\d+(?:\\.\\d+)?)"
-    val cmpQ = ("(?is)^(.+?)\\s*" +
-      s"(=|!=|<>|<=|>=|<|>)\\s*($lit)$$").r
-    val inQ = ("(?is)^(.+?)\\s+IN\\s*\\(\\s*" +
-      s"($lit(?:\\s*,\\s*$lit)*)\\s*\\)$$").r
-    case class Pred(target: JKey, render: String => String)
-    val whereParsed: Seq[Pred] = whereRaw.map { w =>
-      splitAndTop(w).map { conj =>
-        conj match {
-          case cmpQ(c, op, l) if jkey(c).isDefined =>
-            Pred(jkey(c).get, (n: String) => s"$n $op $l")
-          case inQ(c, ls) if jkey(c).isDefined =>
-            Pred(jkey(c).get, (n: String) => s"$n IN ($ls)")
-          case _ => return None
-        }
-      }
-    }.getOrElse(Seq.empty)
-    // HAVING over the same fact-side algebra as the select items
-    case class HavingPred(fn: String, c: String, op: String, lit: String)
-    val hcmp = ("(?is)^(.+?)\\s*(=|!=|<>|<=|>=|<|>)\\s*" +
-      "(-?\\d+(?:\\.\\d+)?)$").r
-    val havingParsed: Seq[HavingPred] = havingRaw.map { h =>
-      splitAndTop(h).map { conj =>
-        conj.replace("`", "") match {
-          case hcmp(a, op, l) => a.trim match {
-            case cnt() => HavingPred("count", "", op, l)
-            case agg(fn, c) => side(c) match {
-              case Some(Left(f)) => HavingPred(fn.toLowerCase, f, op, l)
-              case _ => return None
-            }
-            case _ => return None
-          }
-          case _ => return None
-        }
-      }
-    }.getOrElse(Seq.empty)
-    // ORDER BY may only name selected group keys (by column or alias)
-    val oby = obyRaw.map(o => splitTop(o, ',').map { seg =>
-      val dirM = "(?is)^(.*?)(?:\\s+(ASC|DESC))?\\s*$".r
-      val (headRaw, dir) = seg.trim match {
-        case dirM(h, d) => (h, Option(d).map(_.toUpperCase))
-        case other => (other, None)
-      }
-      val r = clean(headRaw)
-      val rCol = r.substring(r.lastIndexOf('.') + 1)
-      val out = parsed.collectFirst {
-        case KeyItem(k, out) if out.equalsIgnoreCase(r) || (k match {
-          case FactKey(c) => c.equalsIgnoreCase(rCol)
-          case DimKey(_, c) => c.equalsIgnoreCase(rCol)
-          case BucketKey(can) => groupExprOf(r).exists(_._2 == can)
-        }) => out
-      }.getOrElse(return None)
-      s"`$out`" + dir.map(" " + _).getOrElse("")
-    })
-    // candidate MVs: current, covering fk + every fact-side key /
-    // bucket expression / WHERE column / aggregate, smallest first
-    val factTargets = (gkeys ++ whereParsed.map(_.target)).collect {
-      case FactKey(f) => f
-    }
-    val bucketTargets = (gkeys ++ whereParsed.map(_.target)).collect {
-      case BucketKey(can) => can
-    }
-    val candidates = mvRegistry.values.toSeq.distinct.flatMap { path =>
-      scala.util.Try(MatView.spec(spark, path)).toOption.map(path -> _)
-    }.filter { case (_, sp) =>
-      def aggCovered(fn: String, c: String): Boolean = fn match {
-        case "count" => true
-        case "sum" => sp.sumCols.exists(_.equalsIgnoreCase(c))
-        case "avg" => sp.sumCols.exists(_.equalsIgnoreCase(c)) &&
-          sp.cntCols.exists(_.equalsIgnoreCase(c))
-        case _ => sp.minMaxCols.exists(_.equalsIgnoreCase(c))
-      }
-      sp.source == srcPath &&
-        (onFactCols ++ factTargets).forall(c =>
-          sp.groupCols.exists(_.equalsIgnoreCase(c))) &&
-        bucketTargets.forall(can => sp.groupExprs.exists(_._2 == can)) &&
-        parsed.forall {
-          case AggItem(fn, c, _) => aggCovered(fn, c)
-          case _ => true
-        } &&
-        havingParsed.forall(h => aggCovered(h.fn, h.c)) &&
-        boundVersions.get(srcName.toLowerCase).contains(sp.synced)
-    }.sortBy(_._2.groupCols.size)
-    val (mvPath, mvSpec) = candidates.headOption.getOrElse(return None)
-    // exactness gates, identical to the single-table leg
-    def accExact(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case d: DecimalType => d.scale <= 6 && d.precision - d.scale <= 32
-      case _ => false
-    }
-    val allAggs: Seq[(String, String)] = parsed.collect {
-      case AggItem(fn, c, _) => (fn, c)
-    } ++ havingParsed.collect { case h if h.fn != "count" => (h.fn, h.c) }
-    allAggs.foreach {
-      case ("sum", c) =>
-        val dt = srcSchema.fields.find(_.name.equalsIgnoreCase(c))
-          .map(_.dataType).getOrElse(return None)
-        if (!accExact(dt)) return None
-      case ("avg", c) =>
-        val dt = srcSchema.fields.find(_.name.equalsIgnoreCase(c))
-          .map(_.dataType).getOrElse(return None)
-        if (!accExact(dt) || dt.isInstanceOf[DecimalType]) return None
-      case _ => ()
-    }
-    val sumTypes: Map[String, String] = allAggs.collect {
-      case ("sum", c) => c
-    }.distinct.map { c =>
-      val dt = srcSchema.fields.find(_.name.equalsIgnoreCase(c))
-        .map(_.dataType).getOrElse(return None)
-      c -> (dt match {
-        case ByteType | ShortType | IntegerType | LongType => "BIGINT"
-        case d: DecimalType =>
-          s"DECIMAL(${math.min(38, d.precision + 10)},${d.scale})"
-        case other => other.sql
-      })
-    }.toMap
-    // pin the MV's live version and emit the rolled-up join — every
-    // reference QUALIFIED by its view (the MV's storage names and the
-    // dim's attributes may collide)
-    val mvLive = Versioned.currentVersion(spark, mvPath).getOrElse(
-      return None)
-    val vn = s"${srcName}__mv_rwj_v$mvLive"
-    Versioned.readVersion(spark, mvPath, mvLive)
-      .createOrReplaceTempView(vn)
-    def qcol(k: JKey): String = k match {
-      case FactKey(f) => s"$vn.`$f`"
-      case DimKey(d, c) => s"$d.`$c`"
-      case BucketKey(can) =>
-        s"$vn.`${mvSpec.groupExprs.find(_._2 == can).get._1}`"
-    }
-    def qref(s: Either[String, (String, String)]): String = s match {
-      case Left(f) => s"$vn.`$f`"
-      case Right((d, c)) => s"$d.`$c`"
-    }
-    val fromSql = joins.zip(onSides).map { case ((d, _, _), (l, r)) =>
-      s" JOIN $d ON ${qref(l)} = ${qref(r)}"
-    }.mkString
-    def aggSql(fn: String, c: String): String = fn match {
+    def aggSql(a: Agg): String = a.fn match {
       case "count" => s"sum($vn.n_rows)"
-      case "sum" => s"CAST(sum($vn.`sum_$c`) AS ${sumTypes(c)})"
-      case "avg" => s"CAST(CAST(sum($vn.`sum_$c`) AS DOUBLE) / " +
-        s"nullif(sum($vn.`cnt_$c`), 0) AS DOUBLE)"
-      case "min" => s"min($vn.`min_$c`)"
-      case "max" => s"max($vn.`max_$c`)"
-      case other =>
-        throw new IllegalStateException(s"unreachable agg $other")
+      case "sum" => s"CAST(sum($vn.`sum_${a.c}`) AS ${sumTypes(a.c)})"
+      case "avg" => s"CAST(CAST(sum($vn.`sum_${a.c}`) AS DOUBLE) / " +
+        s"nullif(sum($vn.`cnt_${a.c}`), 0) AS DOUBLE)"
+      case fn => s"$fn($vn.`${fn}_${a.c}`)" // min(min_c), max(max_c)
     }
     val sel = parsed.map {
-      case KeyItem(k, out) => s"${qcol(k)} AS `$out`"
-      case CountItem(out) => s"${aggSql("count", "")} AS `$out`"
-      case AggItem(fn, c, out) => s"${aggSql(fn, c)} AS `$out`"
+      case (Left(k), out) => s"${qcol(k)} AS `$out`"
+      case (Right(a), out) => s"${aggSql(a)} AS `$out`"
     }.mkString(", ")
+    val fromSql = joins.zip(onSides).map { case ((d, _, _), (l, r)) =>
+      s" JOIN $d ON ${qcol(l)} = ${qcol(r)}"
+    }.mkString
     val whereSql =
       if (whereParsed.isEmpty) ""
-      else whereParsed.map(p => p.render(qcol(p.target)))
+      else whereParsed.map { case (k, p) => s"${qcol(k)} $p" }
         .mkString(" WHERE ", " AND ", "")
     val havingSql =
       if (havingParsed.isEmpty) ""
-      else havingParsed.map(h => s"${aggSql(h.fn, h.c)} ${h.op} ${h.lit}")
+      else havingParsed.map { case (a, op, l) => s"${aggSql(a)} $op $l" }
         .mkString(" HAVING ", " AND ", "")
     val gbyOut = gkeys.map(qcol).mkString(", ")
     Some(s"SELECT $sel FROM $vn$fromSql$whereSql " +

@@ -35,7 +35,7 @@ class BenchSpec extends AnyFunSuite {
     assert(j.get("metric").asText == "total" && j.get("unit").asText == "sec")
     assert(j.get("repeat").asInt == 2 && j.get("parallelism").asInt == 1)
     assert(j.get("sf").asText == "/data/sf0.1")
-    assert(j.get("queries_full").asText == "bench_last.json")
+    assert(j.get("queries_full").asText == "target/bench_last.json")
   }
 
   test("stdout keeps the costliest cells first and counts the dropped ones") {

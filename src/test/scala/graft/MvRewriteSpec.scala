@@ -7,11 +7,15 @@ import graft.lake.{Forget, Versioned}
 /**
  * Automatic materialized-view rewrite ([[SqlDml.rewriteViaMv]], wired
  * into [[Sql.sql]]): a grouped SELECT a CURRENT registered MV can answer
- * scans the dimension-sized MV parquet instead of the base table —
- * verified through `inputFiles` (the rewritten plan's scan paths) and
- * value equality with the base recompute; a STALE MV falls back to the
- * base; coarser groupings re-aggregate the MV; unmappable shapes (WHERE,
- * unsupported aggregates, expression keys) fall through untouched.
+ * scans the dimension-sized MV parquet instead of the base table, on its
+ * own or through a fact⋈dim join chain — verified through `inputFiles`
+ * (the rewritten plan's scan paths) and value equality with the base
+ * recompute. A STALE MV falls back to the base; coarser groupings,
+ * ROLLUP/CUBE and whitelisted bucket-expression keys re-aggregate the MV;
+ * WHERE on MV group columns and HAVING over the view's algebra rewrite
+ * too. Unmappable shapes (WHERE on other columns or OR, unmaterialized or
+ * inexact aggregates, other expression keys, dim-side aggregates, outer
+ * joins) fall through untouched.
  */
 class MvRewriteSpec extends SparkSpec {
 
@@ -261,7 +265,7 @@ class MvRewriteSpec extends SparkSpec {
     val other = Sql.sql(spark, "SELECT month(d) AS m, count(*) AS n " +
       "FROM rw6_src GROUP BY month(d)")
     assert(!underPath(other.inputFiles, s"$root/mv6"))
-    // UNALIASED expression key: the output name is the canonical form —
+    // UNALIASED expression key: the output name is Spark's auto-name —
     // identical whether or not the rewrite fired
     assert(Sql.sql(spark,
       "SELECT year(d), count(*) FROM rw6_src GROUP BY year(d)")
@@ -643,5 +647,61 @@ class MvRewriteSpec extends SparkSpec {
       "SELECT rname, count(*) AS n FROM rwj4_d1 " +
         "JOIN rwj4_d2 ON rk = rpk GROUP BY rname")
       .inputFiles.exists(_.contains("dimj4a")))
+  }
+
+  test("unaliased output names keep the query's spelling, qualifier " +
+      "dropped, and ORDER BY may name an unselected GROUP BY key — " +
+      "single-table and JOIN shapes alike") {
+    val t = s"$root/srcn"
+    Forget.publishIndexed(
+      (0 until 24).map(k =>
+          (k.toLong, (k % 4).toLong, s"c${k % 3}", k * k + 1L,
+            java.sql.Date.valueOf(s"202${k % 2}-0${1 + k % 5}-11")))
+        .toDF("k", "fk", "color", "amt", "d"),
+      t, 1, "k", stats = true)
+    SqlDml.register(spark, "rwn_src", t, "k")
+    val d = s"$root/dimn"
+    Forget.publishIndexed(
+      Seq((0L, "A"), (1L, "A"), (2L, "B"), (3L, "C")).toDF("pk", "seg"),
+      d, 1, "pk", stats = true)
+    SqlDml.register(spark, "rwn_dim", d, "pk")
+    Sql.execute(spark,
+      s"""CREATE MATERIALIZED VIEW rwn_mv LOCATION '$root/mvn' AS
+         |SELECT fk, color, year(d), date_trunc('month', d), count(*),
+         |  sum(amt)
+         |FROM rwn_src GROUP BY fk, color, year(d),
+         |  date_trunc('month', d)""".stripMargin)
+    def parity(q: String, ordered: Boolean): Unit = {
+      val rw = Sql.sql(spark, q)
+      assert(rw.inputFiles.nonEmpty &&
+        !rw.inputFiles.exists(_.contains("/srcn/")) &&
+        rw.inputFiles.exists(_.contains("/mvn/")),
+        s"'$q' did not rewrite: ${rw.inputFiles.toSeq}")
+      val base = spark.sql(q)
+      assert(rw.columns.toSeq == base.columns.toSeq,
+        s"'$q' output names drifted")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        if (ordered) df.collect().toSeq
+        else df.collect().toSeq.sortBy(_.toString)
+      assert(rows(rw) == rows(base), s"values for '$q'")
+    }
+    parity("SELECT COLOR, count(*), sum(AMT) FROM rwn_src " +
+      "GROUP BY color", ordered = false)
+    parity("SELECT rwn_src.Color, COUNT(*), SUM(rwn_src.Amt) " +
+      "FROM rwn_src GROUP BY rwn_src.COLOR", ordered = false)
+    parity("SELECT SEG, count(*), sum(AMT) FROM rwn_src " +
+      "JOIN rwn_dim ON fk = pk GROUP BY SEG", ordered = false)
+    parity("SELECT rwn_dim.Seg, COUNT(*), SUM(rwn_src.AMT) FROM rwn_src " +
+      "JOIN rwn_dim ON rwn_src.FK = rwn_dim.PK GROUP BY rwn_dim.seg",
+      ordered = false)
+    parity("SELECT YEAR( D ), date_trunc('MONTH', D), count(*) " +
+      "FROM rwn_src GROUP BY YEAR( D ), date_trunc('MONTH', D)",
+      ordered = false)
+    parity("SELECT Seg, year(D), COUNT(*) FROM rwn_src " +
+      "JOIN rwn_dim ON fk = pk GROUP BY Seg, year(D)", ordered = false)
+    parity("SELECT count(*) AS n, sum(amt) AS s FROM rwn_src " +
+      "GROUP BY color ORDER BY color DESC", ordered = true)
+    parity("SELECT count(*) AS n, sum(amt) AS s FROM rwn_src " +
+      "JOIN rwn_dim ON fk = pk GROUP BY seg ORDER BY seg", ordered = true)
   }
 }
