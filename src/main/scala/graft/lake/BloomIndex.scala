@@ -21,11 +21,13 @@ import org.apache.spark.util.sketch.BloomFilter
  * Layout: `<table>/part-*.parquet` + `<table>/_bloom/<file>.bloom`, one
  * serialized `org.apache.spark.util.sketch.BloomFilter` per data file.
  *
- * Build shape: ONE (file -> keys) shuffle over the written table, each
- * group folding its keys into a filter executor-side (`mapGroups`); only
- * the finished ~100 KB bitsets reach the driver for the sidecar writes —
- * same discipline as `decontam_bloom`'s distributed sketch build. At a
- * 100 TB table the sidecars total `nFiles x bitset`, metadata-sized; a
+ * Build shape: ONE shuffle-free job over the written files. Each task
+ * folds the keys it reads into one filter per file it touches; only the
+ * finished ~100 KB bitsets reach the driver, which ORs the pieces of a
+ * file split across tasks (the same bits one filter over all its keys
+ * holds) and writes the sidecars. The filters are sized from the files'
+ * footer row counts, so neither a schema inference nor a count runs. At
+ * a 100 TB table the sidecars total `nFiles x bitset`, metadata-sized; a
  * production deployment would keep them in a stats table instead of
  * per-file objects, same contract.
  *
@@ -57,39 +59,55 @@ object BloomIndex {
 
   /** Build one Bloom sidecar per `part-*` data file already in `table` —
     * the post-hoc arm [[writeIndexed]] shares, and what a rewrite op
-    * ([[Forget]]) calls on just-rewritten files. */
+    * ([[Forget]], [[Upsert]]) calls on just-rewritten files. One
+    * shuffle-free Spark job (see the object doc): the filters are sized
+    * from footer row counts and the scan's schema comes from a footer, so
+    * no count or schema-inference job runs; the sidecar bytes are those a
+    * per-file build over all of a file's keys writes. */
   def indexExisting(spark: SparkSession, table: String, keyCol: String,
                     fpp: Double = 0.01): Unit = {
-    // size the filters from the WRITTEN table: parquet count() is
-    // footer-metadata-only, while a source df.count() would re-run the
-    // full input lineage a second time
-    val written = spark.read.parquet(table)
-    val nFiles = math.max(1,
-      fs(spark, table).listStatus(new Path(table))
-        .count(s => s.isFile && s.getPath.getName.startsWith("part-")))
-    val expected = math.max(1000L, written.count() / nFiles * 2)
+    val f = fs(spark, table)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val parts = f.listStatus(new Path(table)).toSeq
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+      .map(_.getPath)
+    // size the filters from the WRITTEN files' footer row counts (what a
+    // parquet count() reads): rows per file, doubled, at least 1000
+    val rows = parts.map { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+    val expected = math.max(1000L, rows / math.max(1, parts.size) * 2)
     import spark.implicits._
     // NULL keys are excluded from the filters (a Long key probe can never
     // name them); a file of ONLY null keys then has no sidecar, and a
     // missing sidecar admits — conservative either way
-    val perFile = written
+    val pieces = spark.read.schema(Versioned.schemaOf(spark, table))
+      .parquet(table)
       .select(input_file_name().as("f"), col(keyCol).cast("long").as("k"))
       .where(col("k").isNotNull)
       .as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (f, it) =>
-        val bf = BloomFilter.create(expected, fpp)
-        it.foreach(x => bf.putLong(x._2))
-        val bos = new ByteArrayOutputStream()
-        bf.writeTo(bos)
-        (f, bos.toByteArray)
+      .mapPartitions { it =>
+        val byFile = scala.collection.mutable.LinkedHashMap
+          .empty[String, BloomFilter]
+        it.foreach { case (file, k) =>
+          byFile.getOrElseUpdate(file, BloomFilter.create(expected, fpp))
+            .putLong(k)
+        }
+        byFile.iterator.map { case (file, bf) =>
+          val bos = new ByteArrayOutputStream()
+          bf.writeTo(bos)
+          (file, bos.toByteArray)
+        }
       }
-      .collect() // nFiles rows of finished bitsets — metadata-sized
-    val f = fs(spark, table)
-    perFile.foreach { case (file, bytes) =>
+      .collect() // finished bitsets, about one per file — metadata-sized
+    pieces.groupBy(_._1).foreach { case (file, ps) =>
+      val bf = ps.map(p => BloomFilter.readFrom(new ByteArrayInputStream(p._2)))
+        .reduce(_ mergeInPlace _)
       val name = new Path(file).getName
       val out = f.create(new Path(bloomDir(table), s"$name.bloom"), true)
-      try out.write(bytes) finally out.close()
+      try bf.writeTo(out) finally out.close()
     }
     // `_bloom/_key` names the indexed column — the sidecars are
     // otherwise anonymous, and the planning-time consumer ([[SkipScan]])

@@ -240,7 +240,8 @@ object Cdf {
             if (f.exists(new Path(s"$dir/_changes"))) s"$dir/_changes"
             else s"$dir/_changes_txn"
           try {
-            val frame = spark.read.parquet(feedDir)
+            val frame = spark.read
+              .schema(Versioned.schemaOf(spark, feedDir)).parquet(feedDir)
               .filter(col("_op") =!= "S")
             // logical-as-of-v → physical → live-logical remap (see the
             // span guard above): each frame spells ITS OWN version's
@@ -372,9 +373,13 @@ object Cdf {
     // between the version read and here must NOT leak post-watermark
     // changes into a merge tagged with the older version
     val pending = changesSince(spark, source, since, untilV = Some(srcLive))
-    if (pending.isEmpty) return replicaLive
-    val reduced = Upsert.lastPerKey(pending, keyCol, "_version", "_op")
-    Upsert.applyCdc(spark, replica, keyCol, reduced, opCol = "_op",
-      batchTag = Some(syncTag(srcLive)), evolveSchema = true)
+    // one summary: last op per key by `_version`, emptiness and keys
+    val cs = Changeset.summarize(pending, keyCol, "_op",
+      seqCol = Some("_version"))
+    try
+      if (cs.isEmpty) replicaLive
+      else Upsert.applySummarized(spark, replica, cs,
+        batchTag = Some(syncTag(srcLive)), evolveSchema = true)
+    finally cs.release()
   }
 }

@@ -90,9 +90,7 @@ object Clone {
     // overlay's EXTENDED schema) wins over the base dir's
     val srcVDir = s"$src/v=$srcV"
     val ownMarker = Versioned.readSchemaMarker(fSrc, srcVDir)
-    val schema = ownMarker
-      .orElse(Versioned.readSchemaMarker(fSrc, dataDir))
-      .getOrElse(spark.read.parquet(dataDir).schema)
+    val schema = ownMarker.getOrElse(Versioned.schemaOf(spark, dataDir))
     Versioned.publishWith(spark, dst) { dir =>
       val fd = new Path(dir).getFileSystem(
         spark.sparkContext.hadoopConfiguration)

@@ -56,6 +56,14 @@ object Dv {
 
   private[lake] def dvDir(versionDir: String) = s"$versionDir/_dv"
 
+  // the vector's fixed schema: read with it, never infer it (inference
+  // is a Spark job per read)
+  private val vectorSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "file STRING, row_index BIGINT")
+
+  private def readVector(spark: SparkSession, versionDir: String): DataFrame =
+    spark.read.schema(vectorSchema).parquet(dvDir(versionDir))
+
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -66,7 +74,7 @@ object Dv {
   /** Deleted (file, row_index) count of version `v` (0 = no vector). */
   def deletedRows(spark: SparkSession, table: String, v: Long): Long =
     if (!hasVector(spark, table, v)) 0L
-    else spark.read.parquet(dvDir(s"$table/v=$v")).count()
+    else readVector(spark, s"$table/v=$v").count()
 
   /** Apply version `v`'s deletion vector to a frame READ FROM ITS DATA
     * DIR (the frame must still expose the parquet `_metadata` column —
@@ -76,7 +84,7 @@ object Dv {
   private[graft] def applyVector(spark: SparkSession, table: String, v: Long,
                                  df: DataFrame): DataFrame = {
     if (!hasVector(spark, table, v)) return df
-    val dv = spark.read.parquet(dvDir(s"$table/v=$v"))
+    val dv = readVector(spark, s"$table/v=$v")
       .withColumnRenamed("file", "_graft_dv_file")
       .withColumnRenamed("row_index", "_graft_dv_ri")
     val keyed = df
@@ -123,22 +131,20 @@ object Dv {
   def applyCdc(spark: SparkSession, table: String, keyCol: String,
                batch: DataFrame, opCol: String = "op",
                batchTag: Option[String] = None): Long = {
-    val owned =
-      batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (owned) batch.persist()
+    val cs = Changeset.summarize(batch, keyCol, opCol)
     try {
-      val p = Upsert.validateCdc(batch, keyCol, opCol)
-      require(p.nKeys > 0, "empty changeset")
-      require(p.nKeys <= Upsert.MaxDriverKeysDefault,
-        s"${p.nKeys} keys — past the zero-copy merge's driver budget " +
+      cs.requireCdcContract()
+      require(cs.nKeys > 0, "empty changeset")
+      require(cs.nKeys <= Upsert.MaxDriverKeysDefault,
+        s"${cs.nKeys} keys — past the zero-copy merge's driver budget " +
           s"(${Upsert.MaxDriverKeysDefault}); a batch this wide belongs " +
           "on Upsert.merge's distributed path")
-      Constraints.enforce(spark, table, p.upserts, "Dv.applyCdc")
+      Constraints.enforce(spark, table, cs.upserts, "Dv.applyCdc")
       Versioned.withWriteRetry() {
-        mergeOnce(spark, table, keyCol, p.upserts, p.deletes,
-          p.nKeys - p.nDeletes, p.nDeletes, batchTag)
+        mergeOnce(spark, table, keyCol, cs.upserts, cs.deletes,
+          cs.nKeys - cs.nDeletes, cs.nDeletes, cs.keys.get, batchTag)
       }
-    } finally { if (owned) { batch.unpersist(); () } }
+    } finally cs.release()
   }
 
   /** Zero-copy upsert (no deletes): see [[applyCdc]]. `insertOnly`
@@ -148,37 +154,32 @@ object Dv {
     * victim scan (a victim IS a live row with that key). */
   def merge(spark: SparkSession, table: String, keyCol: String,
             changes: DataFrame, insertOnly: Boolean = false): Long = {
-    changes.persist()
+    val op = "_graft_merge_op"
+    val cs = Changeset.summarize(changes.withColumn(op, lit("U")), keyCol, op)
     try {
-      import org.apache.spark.sql.functions.{col => fcol}
-      val v = changes.agg(
-        count(when(fcol(keyCol).isNull, 1)).as("nulls"),
-        count(lit(1)).as("n"),
-        countDistinct(fcol(keyCol)).as("nk")).head()
-      require(v.getLong(0) == 0L,
+      require(cs.nNullKeys == 0L,
         s"changeset has NULL $keyCol keys — a NULL key matches no row")
-      require(v.getLong(1) == v.getLong(2),
-        s"${v.getLong(1) - v.getLong(2)} duplicate $keyCol key(s) in the " +
+      require(cs.nDuplicates == 0L,
+        s"${cs.nDuplicates} duplicate $keyCol key(s) in the " +
           "changeset — each would insert its own row")
-      require(v.getLong(1) > 0, "empty changeset")
-      require(v.getLong(1) <= Upsert.MaxDriverKeysDefault,
-        s"${v.getLong(1)} keys — past the zero-copy merge's driver budget")
+      require(cs.nRows > 0, "empty changeset")
+      require(cs.nRows <= Upsert.MaxDriverKeysDefault,
+        s"${cs.nRows} keys — past the zero-copy merge's driver budget")
       Constraints.enforce(spark, table, changes, "Dv.merge")
       val empty = spark
         .emptyDataset(org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol)
       Versioned.withWriteRetry() {
-        mergeOnce(spark, table, keyCol, changes, empty,
-          v.getLong(1), 0L, None, insertOnly)
+        mergeOnce(spark, table, keyCol, cs.upserts, empty,
+          cs.nRows, 0L, cs.keys.get, None, insertOnly)
       }
-    } finally { changes.unpersist(); () }
+    } finally cs.release()
   }
 
   private def mergeOnce(spark: SparkSession, table: String, keyCol: String,
                         upserts: DataFrame, deletes: DataFrame,
-                        nUpserts: Long, nDeletes: Long,
+                        nUpserts: Long, nDeletes: Long, ks: Seq[Long],
                         batchTag: Option[String],
                         insertOnly: Boolean = false): Long = {
-    import spark.implicits._
     val live = Versioned.currentVersion(spark, table).getOrElse(
       throw new IllegalStateException(s"no published version at $table"))
     val liveVDir = s"$table/v=$live"
@@ -190,9 +191,7 @@ object Dv {
     // version's OWN marker (an [[Evolve.addColumns]] overlay) wins over
     // the base dir's; the zero-copy path refuses FURTHER evolution
     // (scope dial above), but composes with a prior metadata-only one
-    val schema = Versioned.readSchemaMarker(f, liveVDir)
-      .orElse(Versioned.readSchemaMarker(f, dataDir))
-      .getOrElse(spark.read.parquet(dataDir).schema)
+    val schema = Versioned.schemaAt(spark, table, live)
     // renamed table: logical → physical names for the appends write
     val mapping = Versioned.readColumnMapping(f, liveVDir)
       .getOrElse(Map.empty[String, String])
@@ -222,51 +221,44 @@ object Dv {
           s" vs table ${schema(c).dataType.simpleString})").mkString(", ") +
         " — cast the changeset to the table's types")
 
-    val upsertKeys = upserts.select(col(keyCol).cast("long"))
-      .as[Long].collect().toSeq
-    val deleteKeys = deletes.select(col(keyCol).cast("long"))
-      .as[Long].collect().toSeq
-    val ks = (upsertKeys ++ deleteKeys).distinct
-
     // candidate files: the base data dir AND the live version's own
     // appended files (a prior zero-copy merge) — victims can live in both
     val stats = StatsIndex.load(spark, dataDir)
-    def admitted(dir: String): Seq[Path] = {
-      val parts = Versioned.dataFilePaths(spark, dir).map(new Path(_))
-      parts.filter { p =>
-        BloomIndex.mightContainAny(f, dir, p.getName, ks) &&
-          ((if (dir == dataDir) stats.flatMap(_.get(p.getName)) else None)
-            match {
-              case Some(st) => st.admitsAny(ks)
-              case None => Forget.rangeAdmitsAny(conf, p, keyCol, ks)
-            })
-      }
-    }
+    def admitted(dir: String): Seq[Path] =
+      Versioned.dataFilePaths(spark, dir).map(new Path(_)).filter(
+        Forget.admitter(spark, dir, keyCol, ks,
+          if (dir == dataDir) stats else None))
     val ownParts =
       if (dataDir == liveVDir) Seq.empty
       else Versioned.dataFilePaths(spark, liveVDir).map(new Path(_))
     val admittedAll = admitted(dataDir) ++
       (if (dataDir == liveVDir) Seq.empty else admitted(liveVDir))
 
+    val hadVector = hasVector(spark, table, live)
     val prior =
-      if (hasVector(spark, table, live))
-        spark.read.parquet(dvDir(liveVDir))
+      if (hadVector) readVector(spark, liveVDir)
       else spark
         .emptyDataset(org.apache.spark.sql.Encoders.product[(String, Long)])
         .toDF("file", "row_index")
     val victims =
       if (admittedAll.isEmpty)
         prior.limit(0)
-      else Versioned.readFiles(spark, dataDir, admittedAll.map(_.toString))
-        .select(col("_metadata.file_name").as("file"),
-          col("_metadata.row_index").as("row_index"),
-          col(keyCol).cast("long").as("_k"))
-        .filter(col("_k").isin(ks: _*))
-        .select(col("file"), col("row_index"))
-        .join(broadcast(prior), Seq("file", "row_index"), "left_anti")
+      else {
+        val located =
+          Versioned.readFiles(spark, dataDir, admittedAll.map(_.toString))
+            .select(col("_metadata.file_name").as("file"),
+              col("_metadata.row_index").as("row_index"),
+              col(keyCol).cast("long").as("_k"))
+            .filter(col("_k").isin(ks: _*))
+            .select(col("file"), col("row_index"))
+        if (hadVector)
+          located.join(broadcast(prior), Seq("file", "row_index"), "left_anti")
+        else located
+      }
     victims.persist()
     try {
-      val nNew = victims.count()
+      // one job, no exchange (an aggregate count would add one)
+      val nNew = victims.queryExecution.toRdd.count()
       // insert-only contract (SQL INSERT INTO on a zero-copy base):
       // a victim IS a live row carrying a changeset key — re-checked
       // each OCC attempt, same guarantee as Upsert.merge's guard
@@ -363,14 +355,9 @@ object Dv {
     // changeset-sized appends beside its _ref — victims can live there)
     val stats = StatsIndex.load(spark, dataDir)
     def admit(dir: String): Seq[Path] =
-      Versioned.dataFilePaths(spark, dir).map(new Path(_)).filter { p =>
-        BloomIndex.mightContainAny(f, dir, p.getName, ks) &&
-          ((if (dir == dataDir) stats.flatMap(_.get(p.getName)) else None)
-            match {
-              case Some(st) => st.admitsAny(ks)
-              case None => Forget.rangeAdmitsAny(conf, p, keyCol, ks)
-            })
-      }
+      Versioned.dataFilePaths(spark, dir).map(new Path(_)).filter(
+        Forget.admitter(spark, dir, keyCol, ks,
+          if (dir == dataDir) stats else None))
     val admitted = admit(dataDir) ++
       (if (dataDir == liveVDir) Seq.empty else admit(liveVDir))
     if (admitted.isEmpty) return live // no file can hold any key: no-op
@@ -378,24 +365,50 @@ object Dv {
     // victim locations: ONE column-pruned scan of the admitted files.
     // Prior-vector rows are excluded so the count below means NEW deletes
     // (re-deleting an already-deleted key stays a no-op).
+    val hadVector = hasVector(spark, table, live)
     val prior =
-      if (hasVector(spark, table, live))
-        spark.read.parquet(dvDir(liveVDir))
+      if (hadVector) readVector(spark, liveVDir)
       else spark.emptyDataset(org.apache.spark.sql.Encoders.product[(String, Long)])
         .toDF("file", "row_index")
-    val schemaed = Versioned.readFiles(spark, dataDir,
-      admitted.map(_.toString))
-    val victims = schemaed
-      .select(col("_metadata.file_name").as("file"),
+    // the change feed names deleted rows by the TABLE's key: a purge on
+    // another column (a user id over an event-keyed table) records the
+    // victims' table keys, read in the same scan
+    val feedKey = tableKey(spark, dataDir).filterNot(_.equalsIgnoreCase(keyCol))
+    val located = Versioned.readFiles(spark, dataDir, admitted.map(_.toString))
+      .select(Seq(col("_metadata.file_name").as("file"),
         col("_metadata.row_index").as("row_index"),
-        col(keyCol).cast("long").as("_k"))
+        col(keyCol).cast("long").as("_k")) ++
+        feedKey.map(k => col(k).as("_tk")): _*)
       .filter(col("_k").isin(ks: _*))
-      .select(col("file"), col("row_index"))
-      .join(broadcast(prior), Seq("file", "row_index"), "left_anti")
-    victims.persist()
+      .drop("_k")
+    val scan =
+      if (hadVector)
+        located.join(broadcast(prior), Seq("file", "row_index"), "left_anti")
+      else located
+    scan.persist()
     try {
-      if (victims.isEmpty) return live // all named rows already deleted/absent
-      val nNew = victims.count()
+      // ONE job, no exchange: new deletes (0 = all named rows already
+      // deleted or absent) and, on a non-key purge, victims whose table
+      // key is NULL
+      val (nNew, nNullKeys) = scan
+        .select(feedKey.fold(lit(false))(_ => col("_tk").isNull))
+        .queryExecution.toRdd.aggregate((0L, 0L))(
+          (a, r) => (a._1 + 1, a._2 + (if (r.getBoolean(0)) 1 else 0)),
+          (a, b) => (a._1 + b._1, a._2 + b._2))
+      if (nNew == 0L) return live
+      feedKey.foreach { k =>
+        require(nNullKeys == 0L,
+          s"$nNullKeys row(s) matching the ${ks.size} $keyCol " +
+            s"value(s) have a NULL $k — the change feed could not name " +
+            s"their deletion; purge them by $k instead")
+      }
+      val victims = scan.select(col("file"), col("row_index"))
+      val feed = feedKey match {
+        case Some(k) => (k, scan.select(col("_tk").as(k)), nNew)
+        case None => (keyCol, spark.createDataset(ks)(
+          org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol),
+          ks.size.toLong)
+      }
       // pin the shared data dir BEFORE publishing the ref (Clone.shallow's
       // ordering argument: an orphaned pin blocks reclaim, a missing pin
       // breaks reads silently). An OCC conflict below may abandon the pin
@@ -407,16 +420,22 @@ object Dv {
       // [[Versioned.vacuum]], whose exclusivity contract makes the
       // no-version-references-this-dir check race-free.
       Clone.pin(spark, dataDir, table)
-      publishPurge(spark, table, live, liveVDir, dataDir, keyCol, ks,
-        prior, victims, nNew, f, conf)
-    } finally { victims.unpersist(); () }
+      publishPurge(spark, table, live, liveVDir, dataDir,
+        prior, victims, nNew, feed, f, conf)
+    } finally { scan.unpersist(); () }
   }
+
+  /** The key the table's file indexes describe (`_bloom/_key`, else
+    * `_stats/_key`) — what its change feed names rows by. */
+  private[lake] def tableKey(spark: SparkSession,
+                             dataDir: String): Option[String] =
+    BloomIndex.keyOf(spark, dataDir).orElse(StatsIndex.keyOf(spark, dataDir))
 
   private def publishPurge(spark: SparkSession, table: String, live: Long,
                            liveVDir: String, dataDir: String,
-                           keyCol: String, ks: Seq[Long],
                            prior: DataFrame, victims: DataFrame,
-                           nNew: Long, f: org.apache.hadoop.fs.FileSystem,
+                           nNew: Long, feed: (String, DataFrame, Long),
+                           f: org.apache.hadoop.fs.FileSystem,
                            conf: org.apache.hadoop.conf.Configuration)
       : Long =
     Versioned.publishFrom(spark, table, live) { dir =>
@@ -437,10 +456,9 @@ object Dv {
                   BloomIndex.sidecar(dir, p.getName), false, conf)
             }
         // carried appends keep their manifest coverage (see mergeOnce)
-        if (dataDir != liveVDir &&
-            StatsIndex.keyOf(spark, dataDir).exists(
-              _.equalsIgnoreCase(keyCol)))
-          StatsIndex.buildFromFooters(spark, dir, keyCol)
+        if (dataDir != liveVDir)
+          StatsIndex.keyOf(spark, dataDir)
+            .foreach(StatsIndex.buildFromFooters(spark, dir, _))
         val out = fd.create(new Path(s"$dir/_ref"), true)
         try out.write(dataDir.getBytes(StandardCharsets.UTF_8))
         finally out.close()
@@ -460,15 +478,11 @@ object Dv {
           org.apache.hadoop.fs.FileUtil.copy(f, sm, fd,
             new Path(s"$dir/_table_schema"), false, true, conf)
         Versioned.carryColumnMapping(f, liveVDir, fd, dir, conf)
-        val schema = Versioned.readSchemaMarker(f, liveVDir)
-          .orElse(Versioned.readSchemaMarker(f, dataDir))
-          .getOrElse(spark.read.parquet(dataDir).schema)
-        Cdf.record(spark, dir, schema, keyCol,
+        val schema = Versioned.schemaAt(spark, table, live)
+        val (feedKey, deletes, nDeletes) = feed
+        Cdf.record(spark, dir, schema, feedKey,
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-          upsertRows = 0L,
-          deletes = spark.createDataset(ks)(
-            org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol),
-          deleteRows = ks.size.toLong)
+          upsertRows = 0L, deletes = deletes, deleteRows = nDeletes)
       }
 }

@@ -113,6 +113,30 @@ object Forget {
     } finally r.close()
   }
 
+  /** The file-admission test every keyed DML shares: a `part-` file of
+    * `dir` may hold one of `keys` in `keyCol` unless its Bloom sidecar or
+    * its range stats (`stats`, the `_stats` manifest, when it covers the
+    * file; the file's footer otherwise) rule that out. Sidecars and
+    * manifest count only when they describe `keyCol` (their `_key`
+    * marker; unmarked legacy sidecars are taken to): probing an
+    * `event_id` index with `user_id` values would skip files that hold
+    * the named rows. */
+  private[lake] def admitter(spark: SparkSession, dir: String,
+                             keyCol: String, keys: Seq[Long],
+                             stats: Option[Map[String, FileKeyStats]])
+      : Path => Boolean = {
+    val f = fs(spark, dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def describes(k: Option[String]) = k.forall(_.equalsIgnoreCase(keyCol))
+    val bloom = describes(BloomIndex.keyOf(spark, dir))
+    val manifest = stats.filter(_ => describes(StatsIndex.keyOf(spark, dir)))
+    p => (!bloom || BloomIndex.mightContainAny(f, dir, p.getName, keys)) &&
+      (manifest.flatMap(_.get(p.getName)) match {
+        case Some(st) => st.admitsAny(keys)
+        case None => rangeAdmitsAny(conf, p, keyCol, keys)
+      })
+  }
+
   /** Byte-copy the untouched files + their sidecars into `newDir`,
     * IN PARALLEL across a driver thread pool: the copies are independent
     * I/O (server-side on S3), and a 100 TB table's carried-file count is
@@ -170,14 +194,31 @@ object Forget {
     // Range source: the [[StatsIndex]] manifest when present (ONE
     // metadata read for the whole dir), per-file footer opens otherwise.
     val stats = StatsIndex.load(spark, liveDir)
-    val (affected, untouched) = parts.partition { p =>
-      BloomIndex.mightContainAny(f, liveDir, p.getName, ks) &&
-        (stats.flatMap(_.get(p.getName)) match {
-          case Some(st) => st.admitsAny(ks)
-          case None => rangeAdmitsAny(conf, p, keyCol, ks)
-        })
-    }
+    val (affected, untouched) =
+      parts.partition(admitter(spark, liveDir, keyCol, ks, stats))
     if (affected.isEmpty) return live
+    val marker = Versioned.readSchemaMarker(f, liveDir)
+    def affectedRows =
+      Versioned.readFiles(spark, liveDir, affected.map(_.toString))
+    // the key the table's indexes (and so its change feed) name rows by;
+    // a purge on another column keeps the layout, the sidecars and the
+    // feed on that key — the feed records the victims' table keys, and a
+    // victim whose table key is NULL could not be named there: reject
+    val indexKey = Dv.tableKey(spark, liveDir)
+      .filterNot(_.equalsIgnoreCase(keyCol)).getOrElse(keyCol)
+    val byOtherCol = indexKey != keyCol
+    val nFeedDeletes =
+      if (!byOtherCol) ks.size.toLong
+      else {
+        val named = col(keyCol).isin(ks: _*)
+        val r = affectedRows.agg(count(when(named, 1)),
+          count(when(named && col(indexKey).isNull, 1))).head()
+        require(r.getLong(1) == 0L,
+          s"${r.getLong(1)} row(s) matching the ${ks.size} $keyCol " +
+            s"value(s) have a NULL $indexKey — the change feed could not " +
+            s"name their deletion; purge them by $indexKey instead")
+        r.getLong(0)
+      }
 
     Versioned.publishFrom(spark, table, live) { newDir =>
       // 1. rewrite the affected files in ONE distributed job (Spark owns
@@ -192,22 +233,22 @@ object Forget {
       //    NULL-key guard: `!isin` is NULL for NULL keys and filter drops
       //    NULL predicates — without the isNull arm, rows the deletion
       //    request never named would vanish from rewritten files
-      val marker = Versioned.readSchemaMarker(f, liveDir)
-      marker.map(s => spark.read.schema(s)).getOrElse(spark.read)
-        .parquet(affected.map(_.toString): _*)
+      affectedRows
         .filter(col(keyCol).isNull || !col(keyCol).isin(ks: _*))
-        .repartitionByRange(affected.size, col(keyCol))
-        .sortWithinPartitions(col(keyCol))
+        .repartitionByRange(affected.size, col(indexKey))
+        .sortWithinPartitions(col(indexKey))
         .write.mode("overwrite").parquet(newDir)
       // 2. fresh sidecars for the rewritten files (only they exist in
-      //    newDir at this point)
-      BloomIndex.indexExisting(spark, newDir, keyCol)
+      //    newDir at this point), on the key the carried ones describe
+      BloomIndex.indexExisting(spark, newDir,
+        BloomIndex.keyOf(spark, liveDir).getOrElse(indexKey))
       // 3. untouched files + their sidecars: raw byte copy, bitwise-equal
       copyUntouched(f, conf, liveDir, newDir, untouched)
       // 4. stats manifest rides along when the table keeps one: carried
       //    files keep their rows, only the rewritten files read their own
       //    footers (reuses the manifest the prune step already loaded)
-      StatsIndex.rebuildAfterRewrite(spark, liveDir, newDir, keyCol,
+      StatsIndex.rebuildAfterRewrite(spark, liveDir, newDir,
+        StatsIndex.keyOf(spark, liveDir).getOrElse(indexKey),
         preloaded = stats)
       //    token-Bloom twin: carried files' sidecars were byte-copied in
       //    step 3; re-index just the rewritten files from the carried
@@ -225,14 +266,17 @@ object Forget {
       //    the new version's footer inference ambiguous
       marker.foreach(Versioned.writeSchemaMarker(f, newDir, _))
       // 7. change feed: a purge's changeset is its deletions
-      val schema = marker.getOrElse(spark.read.parquet(liveDir).schema)
-      Cdf.record(spark, newDir, schema, keyCol,
+      val schema = marker.getOrElse(Versioned.schemaOf(spark, liveDir))
+      Cdf.record(spark, newDir, schema, indexKey,
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
         upsertRows = 0L,
-        deletes = spark.createDataset(ks)(
-          org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol),
-        deleteRows = ks.size.toLong)
+        deletes =
+          if (byOtherCol) affectedRows.filter(col(keyCol).isin(ks: _*))
+            .select(col(indexKey))
+          else spark.createDataset(ks)(
+            org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol),
+        deleteRows = nFeedDeletes)
       // 8. file-level commit record (what this purge removed/added vs its
       //    base) — lets a concurrent disjoint-file MERGE rebase over this
       //    commit instead of re-deriving (see Upsert's conflict check)

@@ -225,8 +225,7 @@ object MatView {
     val f = fs(spark, dir)
     // evolved sources hold mixed-schema files — pin via the version-aware
     // marker (an Evolve overlay's own marker wins over the data dir's)
-    val schema = Versioned.schemaMarkerAt(spark, source, srcV)
-      .getOrElse(spark.read.parquet(dir).schema)
+    val schema = Versioned.schemaAt(spark, source, srcV)
     if (keys.isEmpty)
       return spark.read.schema(schema).parquet(dir).limit(0)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -235,13 +234,9 @@ object MatView {
     // appended files (its updated/inserted rows live beside the _ref —
     // old rows for re-touched keys can be there)
     def admit(d: String): Seq[Path] =
-      Versioned.dataFilePaths(spark, d).map(new Path(_)).filter { p =>
-        BloomIndex.mightContainAny(f, d, p.getName, keys) &&
-          ((if (d == dir) stats.flatMap(_.get(p.getName)) else None) match {
-            case Some(st) => st.admitsAny(keys)
-            case None => Forget.rangeAdmitsAny(conf, p, keyCol, keys)
-          })
-      }
+      Versioned.dataFilePaths(spark, d).map(new Path(_)).filter(
+        Forget.admitter(spark, d, keyCol, keys,
+          if (d == dir) stats else None))
     val ownDir = s"$source/v=$srcV"
     val admitted = admit(dir) ++
       (if (ownDir == dir) Seq.empty else admit(ownDir))
@@ -278,9 +273,21 @@ object MatView {
     * territory, refusing to guess which changes were missed. */
   def refresh(spark: SparkSession, view: String, batch: DataFrame,
               opCol: String = "op",
-              maxDriverKeys: Int = Upsert.MaxDriverKeysDefault): Long =
+              maxDriverKeys: Int = Upsert.MaxDriverKeysDefault): Long = {
+    val cs = Changeset.summarize(batch, spec(spark, view).keyCol, opCol,
+      maxDriverKeys = maxDriverKeys)
+    try refreshSummarized(spark, view, cs, maxDriverKeys)
+    finally cs.release()
+  }
+
+  /** [[refresh]] from an already-summarized batch — the streaming sink
+    * shares the summary its source merge used. */
+  private[graft] def refreshSummarized(spark: SparkSession, view: String,
+                                       cs: Changeset,
+                                       maxDriverKeys: Int =
+                                         Upsert.MaxDriverKeysDefault): Long =
     Versioned.withWriteRetry() {
-      refreshOnce(spark, view, batch, opCol, maxDriverKeys)
+      refreshOnce(spark, view, cs, maxDriverKeys)
     }
 
   /** Bring the view current from the source's CHANGE FEED at changeset
@@ -321,21 +328,29 @@ object MatView {
         span match {
           case None => recreate(spark, view)
           case Some(changes) =>
-            val reduced = Upsert.lastPerKey(changes, s.keyCol,
-              "_version", "_op")
+            // one summary reduces the span to its last op per key
+            // (sequenced by `_version`) and carries the keys
+            val cs = Changeset.summarize(changes, s.keyCol, "_op",
+              seqCol = Some("_version"), maxDriverKeys = maxDriverKeys)
             // the span's bound is PINNED through the refresh: a source
             // publish landing after the srcLive read above must not let
             // the watermark jump past changes this span never carried
-            refreshOnce(spark, view, reduced, "_op", maxDriverKeys,
+            try refreshOnce(spark, view, cs, maxDriverKeys,
               spanTo = Some(srcLive))
+            finally cs.release()
         }
       }
     }
 
+  /** One incremental refresh from a summarized batch: the summary's
+    * NULL-key count gates it and its keys (within `maxDriverKeys`) drive
+    * the old-row admission, so no validation aggregate or key collect
+    * runs here; past the budget the old rows semi-join the batch. */
   private def refreshOnce(spark: SparkSession, view: String,
-                          batch: DataFrame, opCol: String,
-                          maxDriverKeys: Int,
+                          cs: Changeset, maxDriverKeys: Int,
                           spanTo: Option[Long] = None): Long = {
+    val batch = cs.rows
+    val opCol = cs.opCol
     val s = spec(spark, view)
     // spanTo is [[catchUp]]'s contract: the batch REDUCES the whole
     // synced+1..spanTo feed span to its last op per key, so the
@@ -355,23 +370,13 @@ object MatView {
       s"${s.source} advanced v${s.synced} -> v$srcLive (more than one " +
         "DML publish since the last refresh) — MatView.catchUp (change-" +
         "feed span) or MatView.recreate (full recompute) to catch up")
-    import spark.implicits._
-    // respect a caller-held cache (see Upsert.applyCdc — the streaming
-    // sink shares one materialized reduced batch across merge + refresh)
-    val owned =
-      batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (owned) batch.persist()
     var oldCached: Option[DataFrame] = None
     var touchedCached: Option[DataFrame] = None
     try {
-      // ONE validation agg: NULL keys (not addressable) + the distinct-key
-      // count that picks the driver vs distributed minus-side path below
-      val v = batch.agg(
-        count(when(col(s.keyCol).isNull, 1)).as("nulls"),
-        countDistinct(col(s.keyCol)).as("nk")).head()
-      require(v.getLong(0) == 0L,
+      // from the one changeset summary: NULL keys (not addressable) and
+      // the keys that pick the driver vs distributed minus-side path
+      require(cs.nNullKeys == 0L,
         "NULL-key rows in a CDC batch are not addressable")
-      val nk = v.getLong(1)
       // minus side: OLD rows of EVERY batch key, from the pre-batch
       // version, file-pruned. Including "I" keys is deliberate:
       // Upsert.applyCdc applies I as a full upsert, so an I op on an
@@ -384,12 +389,11 @@ object MatView {
       // [[Upsert.applyChanges]] — a restatement-sized batch must not be a
       // driver OOM).
       val oldOfBatch = withDerived(
-        if (nk <= maxDriverKeys) {
-          val udKeys = batch.select(col(s.keyCol).cast("long"))
-            .as[Long].collect().toSeq.distinct
-          oldRows(spark, s.source, s.synced, s.keyCol, udKeys)
-        } else oldRowsJoin(spark, s.source, s.synced, s.keyCol,
-          batch.select(col(s.keyCol).cast("long").as("_k")).distinct()), s)
+        cs.keys.filter(_ => cs.nKeys <= maxDriverKeys) match {
+          case Some(ks) => oldRows(spark, s.source, s.synced, s.keyCol, ks)
+          case None => oldRowsJoin(spark, s.source, s.synced, s.keyCol,
+            batch.select(col(s.keyCol).cast("long").as("_k")).distinct())
+        }, s)
       val mm = s.minMaxCols
       // the min/max leg reads the old rows twice (minus side + touched
       // groups) — one materialization serves both
@@ -484,7 +488,6 @@ object MatView {
     } finally {
       touchedCached.foreach(_.unpersist())
       oldCached.foreach(_.unpersist())
-      if (owned) { batch.unpersist(); () }
     }
   }
 

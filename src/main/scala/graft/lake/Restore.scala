@@ -114,8 +114,7 @@ object Restore {
       // marker, raw streaming tails get the poison row — never a
       // silent skip (Cdf.recordBreak's contract)
       val schema = Versioned.readSchemaMarker(f, tgtVDir)
-        .orElse(Versioned.readSchemaMarker(f, dataDir))
-        .getOrElse(spark.read.parquet(dataDir).schema)
+        .getOrElse(Versioned.schemaOf(spark, dataDir))
       Cdf.recordBreak(spark, dir, schema)
     }
   }

@@ -432,8 +432,7 @@ object SkipScan {
       if (loaded.nonEmpty &&
           files.map(_.getPath.getName).forall(loaded.contains)) loaded
       else Map.empty[String, Ranges]
-    val schema = Versioned.readSchemaMarker(f, dir)
-      .getOrElse(spark.read.parquet(dir).schema)
+    val schema = Versioned.schemaOf(spark, dir)
     val index = new ManifestFileIndex(spark, Seq(dir), files, ranges,
       bloomKey = BloomIndex.keyOf(spark, dir),
       bloomOf = n => BloomIndex.loadFilter(f, dir, n))
@@ -520,8 +519,7 @@ object SkipScan {
         // PHYSICAL names — a mapped overlay always carries its own
         // logical marker (Evolve writes them together, every carrier
         // copies both), so no remap applies here
-        Versioned.readSchemaMarker(f, data)
-          .getOrElse(spark.read.parquet(data).schema)
+        Versioned.schemaOf(spark, data)
     }
     def parts(dir: String): Seq[FileStatus] =
       f.listStatus(new Path(dir)).toSeq

@@ -32,8 +32,9 @@ import org.apache.spark.sql.functions._
  * byte-copied table.
  *
  * Changeset dial: batches up to `maxDriverKeys` distinct keys (default
- * [[MaxDriverKeysDefault]]) take the DRIVER path — keys collect to the
- * driver for per-file Bloom + stats admission (a CDC trickle: thousands of
+ * [[MaxDriverKeysDefault]]) take the DRIVER path — the one changeset
+ * summary ([[Changeset]]) hands the keys to the driver for per-file
+ * Bloom + stats admission (a CDC trickle: thousands of
  * keys, metadata-sized). A larger batch (a restatement, a bulk backfill)
  * would make that collect a driver OOM and the `isin` survivor filter an
  * expression-tree bomb, so it takes the DISTRIBUTED path instead: touched
@@ -79,7 +80,10 @@ object Upsert {
             maxDriverKeys: Int = MaxDriverKeysDefault,
             insertOnly: Boolean = false): Long = {
     Constraints.enforce(spark, table, changes, "merge")
-    Versioned.withWriteRetry() { // re-derives from the new live on conflict
+    // every row an upsert: the changeset summary of an all-"U" batch
+    val cs = Changeset.summarize(changes.withColumn(MergeOp, lit("U")),
+      keyCol, MergeOp, maxDriverKeys = maxDriverKeys)
+    try Versioned.withWriteRetry() { // re-derives from the new live on conflict
       // insert-only contract (SQL INSERT INTO): re-checked INSIDE the
       // retry, against the live version each attempt re-reads — a
       // competitor inserting the same key between attempts must flip
@@ -93,94 +97,60 @@ object Upsert {
             s"$table — an insert on a live key is an UPDATE (or a " +
             "MERGE); refusing to guess which was meant")
       }
-      applyChanges(spark, table, keyCol, changes,
-        deletes = emptyKeys(spark, keyCol), nDeletes = 0L,
+      applyChanges(spark, table, cs, mergeContract = true,
         evolveSchema = evolveSchema, maxDriverKeys = maxDriverKeys)
-    }
+    } finally cs.release()
   }
 
-  private def emptyKeys(spark: SparkSession, keyCol: String): DataFrame =
-    spark.emptyDataset(org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol)
+  // the op column [[merge]] tags its all-upsert changeset with
+  private val MergeOp = "_graft_merge_op"
 
   /** Full CDC apply: `batch` carries an `opCol` of "I"/"U"/"D"; I and U
     * rows upsert, D rows delete (only their key column is read). One
     * file-targeted pass handles all three — a D and a U on keys in the
     * same file cost one rewrite, not two.
     *
-    * BATCH CONTRACT (enforced, one validation action): at most ONE op per
-    * key per batch, and no NULL keys. Multiple ops per key have no
-    * defined order inside a DataFrame — an I then D for the same key
-    * would otherwise silently resurrect the row, and two Us would insert
-    * a duplicate. A producer with intra-batch churn reduces first with
-    * [[lastPerKey]] (needs a sequence column — that is where the order
-    * lives). */
+    * BATCH CONTRACT (enforced from the one changeset summary,
+    * [[Changeset]]): at most ONE op per key per batch, and no NULL keys.
+    * Multiple ops per key have no defined order inside a DataFrame — an
+    * I then D for the same key would otherwise silently resurrect the
+    * row, and two Us would insert a duplicate. A producer with
+    * intra-batch churn reduces first with [[lastPerKey]] (needs a
+    * sequence column — that is where the order lives), or hands the
+    * sequence to [[graft.streaming.CdcSink]], whose summary reduces and
+    * checks in the same query. The summary's keys (within
+    * `maxDriverKeys`) drive file admission directly: no further key
+    * collect, validation or emptiness probe runs. */
   def applyCdc(spark: SparkSession, table: String, keyCol: String,
                batch: DataFrame, opCol: String = "op",
                batchTag: Option[String] = None,
                evolveSchema: Boolean = false,
                maxDriverKeys: Int = MaxDriverKeysDefault): Long = {
-    // respect a caller-held cache (e.g. CdcSink.applyBatchWithView shares
-    // one materialization of the reduced batch across the merge AND the
-    // MatView refresh) — unpersisting a frame we didn't cache would force
-    // the caller's second consumer to recompute the whole batch lineage
-    val owned =
-      batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (owned) batch.persist()
-    try {
-      val p = validateCdc(batch, keyCol, opCol)
-      // table CHECK constraints gate the ADDED rows (deletes exempt) —
-      // once per statement, before any version claim
-      Constraints.enforce(spark, table, p.upserts, "applyCdc")
-      Versioned.withWriteRetry() { // re-derive from the new live on conflict
-        applyChanges(spark, table, keyCol,
-          p.upserts, p.deletes,
-          nDeletes = p.nDeletes, batchTag,
-          prevalidated = true, nKeysHint = p.nKeys,
-          evolveSchema = evolveSchema, maxDriverKeys = maxDriverKeys)
-      }
-    } finally { if (owned) { batch.unpersist(); () } }
+    // a caller-held cache is respected (see Changeset.release)
+    val cs = Changeset.summarize(batch, keyCol, opCol,
+      maxDriverKeys = maxDriverKeys)
+    try applySummarized(spark, table, cs, batchTag, evolveSchema,
+      maxDriverKeys)
+    finally cs.release()
   }
 
-  /** The validated split of an I/U/D batch: payload upserts (op column
-    * dropped), delete keys (one `keyCol` column), total distinct keys and
-    * delete count. */
-  private[lake] final case class CdcParts(upserts: DataFrame,
-                                          deletes: DataFrame,
-                                          nKeys: Long, nDeletes: Long)
-
-  /** Enforce the CDC BATCH CONTRACT (see [[applyCdc]]) in one aggregate
-    * action — op domain (incl. NULL ops, which collect_set would silently
-    * ignore and the D/non-D filters would then silently DROP), NULL keys,
-    * one-op-per-key — and split the batch. Shared with the zero-copy
-    * merge ([[Dv.applyCdc]]); call on a persisted batch. */
-  private[lake] def validateCdc(batch: DataFrame, keyCol: String,
-                                opCol: String): CdcParts = {
-    val v = batch.agg(
-      collect_set(col(opCol)).as("ops"),
-      count(when(col(opCol).isNull, 1)).as("nullops"),
-      count(when(col(keyCol).isNull, 1)).as("nulls"),
-      count(lit(1)).as("n"),
-      countDistinct(col(keyCol)).as("nk"),
-      count(when(col(opCol) === "D", 1)).as("nd")).head()
-    val ops = v.getSeq[String](0).toSet
-    require(ops.subsetOf(Set("I", "U", "D")),
-      s"unknown ops ${ops -- Set("I", "U", "D")} in $opCol")
-    require(v.getLong(1) == 0L,
-      s"${v.getLong(1)} row(s) with NULL $opCol — refusing to guess")
-    require(v.getLong(2) == 0L,
-      s"changeset has NULL $keyCol keys — a NULL key matches no row")
-    require(v.getLong(3) == v.getLong(4),
-      s"${v.getLong(3) - v.getLong(4)} duplicate key(s) in one batch — " +
-        s"ops per key are unordered in a DataFrame; reduce with " +
-        s"Upsert.lastPerKey first")
-    // deletes stay a DataFrame end-to-end: the driver path collects them
-    // (bounded by the budget it just checked), the distributed path
-    // never does
-    CdcParts(
-      batch.filter(col(opCol) =!= "D").drop(opCol),
-      batch.filter(col(opCol) === "D")
-        .select(col(keyCol).cast("long").as(keyCol)),
-      v.getLong(3), v.getLong(5))
+  /** [[applyCdc]] of an already-summarized changeset — the entry the
+    * streaming sink and [[Cdf.sync]] use, so the summary their own
+    * reduction built is the only probe of the batch. */
+  private[graft] def applySummarized(spark: SparkSession, table: String,
+                                     cs: Changeset,
+                                     batchTag: Option[String] = None,
+                                     evolveSchema: Boolean = false,
+                                     maxDriverKeys: Int = MaxDriverKeysDefault)
+      : Long = {
+    cs.requireCdcContract()
+    // table CHECK constraints gate the ADDED rows (deletes exempt) —
+    // once per statement, before any version claim
+    Constraints.enforce(spark, table, cs.upserts, "applyCdc")
+    Versioned.withWriteRetry() { // re-derive from the new live on conflict
+      applyChanges(spark, table, cs, mergeContract = false, batchTag,
+        evolveSchema = evolveSchema, maxDriverKeys = maxDriverKeys)
+    }
   }
 
   /** Reduce an intra-batch-churn CDC frame to the LAST op per key, by
@@ -206,22 +176,8 @@ object Upsert {
       count(when(
         if (rejectOps.isEmpty) lit(false)
         else col(opCol).isin(rejectOps.toSeq: _*), 1)).as("nrej")).head()
-    require(v.getLong(4) == 0L,
-      s"${v.getLong(4)} feed poison row(s) (op in $rejectOps) — a " +
-        "wholesale replace (op B: full publish, clone seed, RESTORE) or " +
-        "a schema change (op S: ALTER TABLE ADD/DROP COLUMNS, evolving " +
-        "merge) landed mid-stream and a fixed-schema consumer cannot " +
-        "represent it; stop this consumer and restart from a fresh " +
-        "snapshot/checkpoint (the restart picks up the new schema)")
-    require(v.getLong(0) == 0L,
-      s"${v.getLong(0)} row(s) with NULL $seqCol — an unsequenced op " +
-        "cannot be ordered")
-    require(v.getLong(1) == 0L,
-      s"changeset has NULL $keyCol keys — a NULL key matches no row")
-    require(v.getLong(2) == v.getLong(3),
-      s"${v.getLong(2) - v.getLong(3)} (key, $seqCol) collision(s) — the " +
-        "sequence does not order this feed; the last-op winner would be " +
-        "arbitrary")
+    Changeset.requireSequenced(keyCol, seqCol, rejectOps, v.getLong(4),
+      v.getLong(0), v.getLong(1), v.getLong(2) - v.getLong(3))
     val w = Window.partitionBy(col(keyCol)).orderBy(col(seqCol).desc)
     batch.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
@@ -316,15 +272,19 @@ object Upsert {
       }: _*)
   }
 
-  private def applyChanges(spark: SparkSession, table: String, keyCol: String,
-                           upserts: DataFrame, deletes: DataFrame,
-                           nDeletes: Long,
+  /** `mergeContract`: [[merge]]'s NULL-key and duplicate-key rejects,
+    * checked after the schema checks as they always were; a CDC batch
+    * was held to its contract before the retry. */
+  private def applyChanges(spark: SparkSession, table: String,
+                           cs: Changeset, mergeContract: Boolean,
                            batchTag: Option[String] = None,
-                           prevalidated: Boolean = false,
-                           nKeysHint: Long = -1L,
                            evolveSchema: Boolean = false,
                            maxDriverKeys: Int = MaxDriverKeysDefault): Long = {
     import spark.implicits._
+    val keyCol = cs.keyCol
+    val upserts = cs.upserts
+    val deletes = cs.deletes
+    val nDeletes = cs.nDeletes
     val live = Versioned.currentVersion(spark, table).getOrElse(
       throw new IllegalStateException(s"no published version at $table"))
     require(!Versioned.isShallowRef(spark, table, live),
@@ -337,7 +297,7 @@ object Upsert {
     // inference would be ambiguous over mixed-schema files), footer
     // inference otherwise
     val hadMarker = Versioned.readSchemaMarker(fMeta, liveDir)
-    val liveSchema = hadMarker.getOrElse(spark.read.parquet(liveDir).schema)
+    val liveSchema = hadMarker.getOrElse(Versioned.schemaOf(spark, liveDir))
     val tableCols = liveSchema.fieldNames.toSeq
     val missing = tableCols.filterNot(upserts.columns.contains)
     val extra = upserts.columns.toSeq.filterNot(tableCols.contains)
@@ -378,30 +338,19 @@ object Upsert {
       else org.apache.spark.sql.types.StructType(liveSchema.fields ++
         extra.map(c => upserts.schema(c).copy(nullable = true)))
     val outCols = outSchema.fieldNames.toSeq
-    // applyCdc pre-validates (and persists) its WHOLE batch, which covers
-    // the upsert subset — re-running the agg and double-caching the child
-    // frame would cost an extra shuffle per micro-batch on the CDC hot
-    // path. merge() reaches here directly and validates now.
-    if (!prevalidated) upserts.persist()
     // the distributed path's key frame — persisted there, released in the
     // outer finally so the publish block can reference it lazily
     var keyFrame: Option[DataFrame] = None
     try {
-      val nKeys =
-        if (prevalidated) nKeysHint
-        else {
-          val v = upserts.agg(
-            count(when(col(keyCol).isNull, 1)).as("nulls"),
-            count(lit(1)).as("n"),
-            countDistinct(col(keyCol)).as("nk")).head()
-          require(v.getLong(0) == 0L,
-            s"changeset has NULL $keyCol keys — a NULL key matches no row")
-          require(v.getLong(1) == v.getLong(2),
-            s"${v.getLong(1) - v.getLong(2)} duplicate $keyCol key(s) in the " +
-              "changeset — each would insert its own row; reduce to one row " +
-              "per key first")
-          v.getLong(1) + nDeletes
-        }
+      if (mergeContract) {
+        require(cs.nNullKeys == 0L,
+          s"changeset has NULL $keyCol keys — a NULL key matches no row")
+        require(cs.nDuplicates == 0L,
+          s"${cs.nDuplicates} duplicate $keyCol key(s) in the " +
+            "changeset — each would insert its own row; reduce to one row " +
+            "per key first")
+      }
+      val nKeys = cs.nKeys
       require(nKeys > 0, "empty changeset")
       val nUpserts = nKeys - nDeletes
 
@@ -415,33 +364,24 @@ object Upsert {
       val stats = StatsIndex.load(spark, liveDir)
 
       // admission + survivor filter, by changeset size (scaladoc dial):
-      //  - DRIVER path: keys collect (budget-bounded), per-file Bloom +
-      //    range admission, `isin` survivor filter — metadata-cost, no
+      //  - DRIVER path: the summary's keys (budget-bounded), per-file
+      //    Bloom + range admission, `isin` survivor filter — metadata-cost, no
       //    scan, right for CDC trickles;
       //  - DISTRIBUTED path: touched files from ONE column-pruned scan of
       //    the live version joined against the batch keys (exact
       //    admission), anti-join survivor filter — no key ever resides on
       //    the driver, right for restatement-sized batches.
       val (affected, untouched, keepSurvivors, driverKeys) =
-        if (nKeys <= maxDriverKeys) {
-          val upsertKeys = upserts.select(col(keyCol).cast("long"))
-            .as[Long].collect().toSeq
-          val deleteKeys = deletes.select(col(keyCol).cast("long"))
-            .as[Long].collect().toSeq
-          val ks = (upsertKeys ++ deleteKeys).distinct
-          val (aff, unt) = parts.partition { p =>
-            BloomIndex.mightContainAny(f, liveDir, p.getName, ks) &&
-              (stats.flatMap(_.get(p.getName)) match {
-                case Some(st) => st.admitsAny(ks)
-                case None => Forget.rangeAdmitsAny(conf, p, keyCol, ks)
-              })
-          }
+        cs.keys.filter(_ => nKeys <= maxDriverKeys) match {
+        case Some(ks) =>
+          val (aff, unt) =
+            parts.partition(Forget.admitter(spark, liveDir, keyCol, ks, stats))
           // NULL-key guard as in Forget.purge — `!isin` is NULL for NULL
           // keys, and NULL-key rows always survive (no key names them)
           (aff, unt, (df: DataFrame) =>
             df.filter(col(keyCol).isNull || !col(keyCol).isin(ks: _*)),
             Some(ks))
-        } else {
+        case None =>
           val keys = upserts.select(col(keyCol).cast("long").as("_k"))
             .union(deletes.select(col(keyCol).cast("long").as("_k")))
             .distinct().persist()
@@ -460,7 +400,7 @@ object Upsert {
             df.join(keys, df(keyCol).cast("long") === keys("_k"),
               "left_anti"),
             None)
-        }
+      }
       // vacuous batch (e.g. a delete-only replay whose keys no file can
       // hold, nothing to insert): Forget.purge's idempotent no-op — a
       // publish here would byte-copy the WHOLE table for nothing
@@ -511,14 +451,9 @@ object Upsert {
           // re-derivation, but the exact pass keeps rebase effective for
           // wide changesets (100 keys × fpp 0.01 would spuriously admit)
           val compStats = StatsIndex.load(spark, compDir)
-          val candidates = info.added.toSeq.filter { n =>
-            BloomIndex.mightContainAny(f, compDir, n, ks) &&
-              (compStats.flatMap(_.get(n)) match {
-                case Some(st) => st.admitsAny(ks)
-                case None => Forget.rangeAdmitsAny(conf,
-                  new Path(s"$compDir/$n"), keyCol, ks)
-              })
-          }
+          val admits = Forget.admitter(spark, compDir, keyCol, ks, compStats)
+          val candidates = info.added.toSeq
+            .filter(n => admits(new Path(s"$compDir/$n")))
           if (candidates.nonEmpty && !spark.read
               .parquet(candidates.map(n => s"$compDir/$n"): _*)
               .filter(col(keyCol).cast("long").isin(ks: _*))
@@ -629,7 +564,6 @@ object Upsert {
       })(tryRebase)
     } finally {
       keyFrame.foreach(_.unpersist())
-      if (!prevalidated) upserts.unpersist()
       ()
     }
   }

@@ -639,7 +639,38 @@ object Versioned {
   private[graft] def schemaAt(spark: SparkSession, table: String,
       v: Long): org.apache.spark.sql.types.StructType =
     schemaMarkerAt(spark, table, v)
-      .getOrElse(spark.read.parquet(dataDir(spark, table, v)).schema)
+      .getOrElse(schemaOf(spark, dataDir(spark, table, v)))
+
+  /** The schema of a data dir with no Spark job: its `_table_schema`
+    * marker when present ([[readSchemaMarker]]), otherwise the footer of
+    * the one file Spark's inference would pick, read on the driver
+    * ([[filesSchema]]). Every marker-or-inference read of the lake goes
+    * through here. */
+  private[graft] def schemaOf(
+      spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType =
+    readSchemaMarker(fs(spark, dir), dir).getOrElse {
+      val f = fs(spark, dir)
+      val top = if (f.exists(new Path(dir))) f.listStatus(new Path(dir)).toSeq
+        else Seq.empty
+      val visible = top.filterNot { s =>
+        val n = s.getPath.getName; n.startsWith("_") || n.startsWith(".") }
+      // a partitioned tree or an empty dir: Spark's own inference
+      if (visible.isEmpty || visible.exists(_.isDirectory))
+        spark.read.parquet(dir).schema
+      else filesSchema(spark, visible.map(_.getPath.toString))
+    }
+
+  /** Footer inference over an explicit file list, as Spark runs it (no
+    * schema merging: the first file by path string is the one footer
+    * read), but on the driver instead of in a one-task job. */
+  private[graft] def filesSchema(
+      spark: SparkSession,
+      paths: Seq[String]): org.apache.spark.sql.types.StructType = {
+    require(paths.nonEmpty, "filesSchema needs at least one path")
+    val f = fs(spark, paths.head)
+    org.apache.spark.sql.graftbridge.bridge.footerSchema(spark,
+      paths.map(p => f.makeQualified(new Path(p))).minBy(_.toString))
+  }
 
   /** `part-` data files of one dir, as full path strings. */
   private[graft] def dataFilePaths(spark: SparkSession,
@@ -712,10 +743,7 @@ object Versioned {
     * authoritative schema; parquet schema-on-read null-fills columns a file
     * lacks, deterministically. */
   private[lake] def readDataDir(spark: SparkSession, dir: String): DataFrame =
-    readSchemaMarker(fs(spark, dir), dir) match {
-      case Some(s) => spark.read.schema(s).parquet(dir)
-      case None => spark.read.parquet(dir)
-    }
+    spark.read.schema(schemaOf(spark, dir)).parquet(dir)
 
   /** Read an EXPLICIT file list under `dir`'s `_table_schema` marker when
     * one exists (footer inference otherwise) — the one definition of
@@ -727,10 +755,9 @@ object Versioned {
   private[lake] def readFiles(spark: SparkSession, dir: String,
                               paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "readFiles needs at least one path")
-    readSchemaMarker(fs(spark, dir), dir) match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val schema = readSchemaMarker(fs(spark, dir), dir)
+      .getOrElse(filesSchema(spark, paths))
+    spark.read.schema(schema).parquet(paths: _*)
   }
 
   /** The `_table_schema` marker of a version DATA dir: the table's

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 
-import graft.lake.{Expect, Maintain, Txn, Upsert, Versioned}
+import graft.lake.{Changeset, Expect, Maintain, Txn, Upsert, Versioned}
 
 /**
  * Streaming CDC sink: apply a change stream (`op` = "I"/"U"/"D" + the
@@ -35,6 +35,12 @@ import graft.lake.{Expect, Maintain, Txn, Upsert, Versioned}
  * only the Bloom/footer-admitted files, byte-copy the rest — so a trickle
  * of CDC against a 100 TB table touches the changed fraction, not the
  * table. Empty micro-batches (idle triggers) publish nothing.
+ *
+ * Per micro-batch the batch is probed ONCE: one changeset summary query
+ * ([[graft.lake.Changeset]]) reduces it by `seqCol`, checks it, says
+ * whether it is empty and hands the merge (and, in [[applyBatchWithView]],
+ * the view refresh) its keys and counts — no separate emptiness probe,
+ * validation aggregate or key collect runs.
  *
  * Intra-batch churn: [[Upsert.applyCdc]] enforces ONE op per key per
  * batch (ops inside a DataFrame are unordered — an I-then-D for one key
@@ -100,27 +106,28 @@ object CdcSink {
                  expectMode: Expect.Mode = Expect.Mode.Fail,
                  quarantine: Option[String] = None,
                  maintain: Option[MaintainPolicy] = None): Unit =
-    if (!batch.isEmpty &&
-        !Upsert.recentBatchTags(spark, table).contains(batchId.toString)) {
-      val reduced = seqCol.fold(batch)(s =>
-        Upsert.lastPerKey(batch, keyCol, s, opCol))
+    if (!Upsert.recentBatchTags(spark, table).contains(batchId.toString)) {
+      // ONE summary query reduces (by seqCol) and checks the batch, says
+      // whether it is empty and carries the keys the merge admits by
+      val cs = Changeset.summarize(batch, keyCol, opCol, seqCol)
       // heal scope: the sink-owned target only — never the (possibly
       // shared) quarantine; a pending collision THERE is a foreign
       // writer's and fails loudly toward a manual, exclusive heal
-      selfHealing(spark, Seq(table)) {
+      try if (!cs.isEmpty) selfHealing(spark, Seq(table)) {
         if (rules.isEmpty)
-          Upsert.applyCdc(spark, table, keyCol, reduced, opCol,
+          Upsert.applySummarized(spark, table, cs,
             batchTag = Some(batchId.toString), evolveSchema = evolveSchema)
         else
-          Expect.applyCdc(spark, table, keyCol, reduced, rules, expectMode,
+          Expect.applyCdc(spark, table, keyCol, cs.rows, rules, expectMode,
             quarantine, opCol, batchTag = Some(batchId.toString),
             evolveSchema = evolveSchema)
-      }
+      } finally cs.release()
       // post-batch auto-maintenance ([[MaintainPolicy]]): runs only on
       // the dialed cadence, after the merge committed — a replayed
       // batch skips the merge above and this with it (the original
       // application already paid), and an extra pass is a no-op anyway
-      maintain.filter(p => p.every > 0 && batchId % p.every == p.every - 1)
+      maintain.filter(p => !cs.isEmpty && p.every > 0 &&
+          batchId % p.every == p.every - 1)
         .foreach { p =>
           Maintain.auto(spark, table, keyCol, p.maxDataFiles,
             p.maxAppendedFiles, p.maxVectorRows, p.materializeRefs)
@@ -165,21 +172,19 @@ object CdcSink {
                          opCol: String = "op",
                          seqCol: Option[String] = None,
                          evolveSchema: Boolean = false,
-                         atomic: Boolean = false): Unit =
-    if (!batch.isEmpty) {
-      // ONE materialization of the reduced batch serves both halves —
-      // applyCdc and MatView.refresh each respect a caller-held cache, so
-      // the per-key reduction window and validation never re-run
-      val reduced = seqCol.fold(batch)(s =>
-        Upsert.lastPerKey(batch, keyCol, s, opCol)).persist()
+                         atomic: Boolean = false): Unit = {
+    // ONE changeset summary (reduction, checks, emptiness, keys) and one
+    // materialization of the reduced batch serve both halves
+    val cs = Changeset.summarize(batch, keyCol, opCol, seqCol)
+    try if (!cs.isEmpty) {
       def halves(): Unit = {
         if (!Upsert.recentBatchTags(spark, table).contains(batchId.toString))
-          Upsert.applyCdc(spark, table, keyCol, reduced, opCol,
+          Upsert.applySummarized(spark, table, cs,
             batchTag = Some(batchId.toString), evolveSchema = evolveSchema)
-        graft.lake.MatView.refresh(spark, view, reduced, opCol)
+        graft.lake.MatView.refreshSummarized(spark, view, cs)
         ()
       }
-      try selfHealing(spark, Seq(table, view)) {
+      selfHealing(spark, Seq(table, view)) {
         if (atomic)
           // ONE cross-table transaction ([[graft.lake.Txn]]): the source
           // version and the view version flip visible in one atomic
@@ -193,8 +198,9 @@ object CdcSink {
           // unflipped txn is invisible to recentBatchTags by design.
           Txn.atomically(spark)(halves())
         else halves()
-      } finally { reduced.unpersist(); () }
-    }
+      }
+    } finally cs.release()
+  }
 
   /** Wire a change stream into `table` AND keep `view` (a
     * [[graft.lake.MatView]] over it) refreshed per micro-batch.

@@ -20,7 +20,9 @@ import graft.lake.{Clone, Dv, Forget, MatView, Upsert, Versioned}
   * nFiles footer opens.
   *
   * Arms (each printed human-readable, all collected into ONE final JSON
-  * line for programmatic budget capture — tools/budget_table.py style):
+  * line for programmatic budget capture — tools/budget_table.py style;
+  * the line's `jobs` object holds each arm's Spark job count, from a
+  * listener on the timed block):
   *   publish, purge (rewriting), merge_driver (Bloom-admission CDC
   *   trickle), republish_full (the naive alternative), dv_purge
   *   (zero-copy delete), dv_merge (zero-copy CDC), materialize (the DV
@@ -49,10 +51,18 @@ object LakeOpsBench {
     val root = Files.createTempDirectory("graft-lakeops").toString
     val t = s"$root/t"
     val arms = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // Spark jobs per arm, counted by a listener on the timed block
+    val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val counter = new JobCounter(spark)
+    var lastJobs = 0L
 
     def timeS[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f
+      val t0 = System.nanoTime(); val (a, n) = counter.count(f)
+      lastJobs = n
       (a, (System.nanoTime() - t0) / 1e9)
+    }
+    def arm(name: String, secs: Double): Unit = {
+      arms(name) = secs; jobs(name) = lastJobs
     }
     def partNames(v: Long): Set[String] =
       Option(new java.io.File(s"$t/v=$v").listFiles())
@@ -62,18 +72,18 @@ object LakeOpsBench {
     val df = spark.range(nRows).select(col("id").as("k"),
       concat(lit("payload-"), col("id")).as("v"))
     val (_, tPub) = timeS(Forget.publishIndexed(df, t, nFiles, "k"))
-    arms("publish") = tPub
+    arm("publish", tPub)
     println(f"publish   $nRows%,d rows x $nFiles files: $tPub%.2f s")
     if (useStats) {
       val (_, tStats) = timeS(
         graft.lake.StatsIndex.build(spark, s"$t/v=1", "k"))
-      arms("stats_build") = tStats
+      arm("stats_build", tStats)
       println(f"stats manifest build: $tStats%.2f s")
     }
 
     val purgeKeys = (0 until nKeys).map(i => i.toLong * (nRows / nKeys) + 7)
     val (v2, tPurge) = timeS(Forget.purge(spark, t, "k", purgeKeys))
-    arms("purge") = tPurge
+    arm("purge", tPurge)
     val rewrote = partNames(v2).diff(partNames(v2 - 1)).size
     println(f"purge     $nKeys keys: $tPurge%.2f s  " +
       f"(rewrote $rewrote%d of $nFiles files, carried ${nFiles - rewrote}%d)")
@@ -83,7 +93,7 @@ object LakeOpsBench {
     import spark.implicits._
     val (v3, tMerge) = timeS(Upsert.applyCdc(spark, t, "k",
       changes.toDF("op", "k", "v")))
-    arms("merge_driver") = tMerge
+    arm("merge_driver", tMerge)
     val rewroteM = partNames(v3).diff(partNames(v3 - 1)).size
     println(f"merge     ${changes.size} I/U ops (driver path): $tMerge%.2f s  " +
       f"(rewrote $rewroteM%d of $nFiles files)")
@@ -98,7 +108,7 @@ object LakeOpsBench {
         cur.join(ch.select(col("k")), Seq("k"), "left_anti").unionByName(ch),
         t, nFiles, "k")
     }
-    arms("republish_full") = tFull
+    arm("republish_full", tFull)
     println(f"republish full table (same changeset): $tFull%.2f s")
     println(f"targeted/full ratio: ${tMerge / tFull}%.2f  " +
       f"(versions $v2%d/$v3%d/$v4%d)")
@@ -107,7 +117,7 @@ object LakeOpsBench {
     // deletion-vector MERGE appends changeset-sized files beside a _ref
     val dvKeys = (0 until nKeys).map(i => i.toLong * (nRows / nKeys) + 13)
     val (v5, tDv) = timeS(Dv.purge(spark, t, "k", dvKeys))
-    arms("dv_purge") = tDv
+    arm("dv_purge", tDv)
     val dvParts = partNames(v5).size
     println(f"dv purge  $nKeys keys (zero-copy): $tDv%.2f s  " +
       f"(wrote $dvParts%d data files; " +
@@ -118,13 +128,13 @@ object LakeOpsBench {
       (("I", nRows + 50L, "dv-inserted"))
     val (v6, tDvMerge) = timeS(Dv.applyCdc(spark, t, "k",
       dvChanges.toDF("op", "k", "v")))
-    arms("dv_merge") = tDvMerge
+    arm("dv_merge", tDvMerge)
     println(f"dv merge  ${dvChanges.size} I/U ops (zero-copy): " +
       f"$tDvMerge%.2f s  (${partNames(v6).size}%d appended files; " +
       f"${Dv.deletedRows(spark, t, v6)}%d rows vectored)")
 
     val (_, tMat) = timeS(Clone.materialize(spark, t))
-    arms("materialize") = tMat
+    arm("materialize", tMat)
     println(f"materialize (DV compactor, full rewrite): $tMat%.2f s")
 
     // distributed-path merge: the same trickle FORCED through the
@@ -133,7 +143,7 @@ object LakeOpsBench {
       ("U", i.toLong * 41 + 3, s"dist-updated-$i"))
     val (_, tDist) = timeS(Upsert.applyCdc(spark, t, "k",
       distChanges.toDF("op", "k", "v"), maxDriverKeys = 0))
-    arms("merge_distributed") = tDist
+    arm("merge_distributed", tDist)
     println(f"merge     ${distChanges.size} ops (distributed path): " +
       f"$tDist%.2f s")
 
@@ -145,10 +155,10 @@ object LakeOpsBench {
       .coalesce(1).write.parquet(land)
     val (r1, tCopy) = timeS(
       graft.lake.CopyInto.load(spark, t, "k", land))
-    arms("copy_into_fresh") = tCopy
+    arm("copy_into_fresh", tCopy)
     val (r2, tCopyNoop) = timeS(
       graft.lake.CopyInto.load(spark, t, "k", land))
-    arms("copy_into_noop") = tCopyNoop
+    arm("copy_into_noop", tCopyNoop)
     println(f"copy into 10,000-row landing file: $tCopy%.2f s " +
       f"(${r1.loaded.size}%d files); rerun no-op: $tCopyNoop%.2f s " +
       f"(${r2.loaded.size}%d files)")
@@ -157,10 +167,10 @@ object LakeOpsBench {
     // a ref + a marker), never the table's rows
     val (_, tEvoAdd) = timeS(graft.lake.Evolve.addColumns(spark, t,
       org.apache.spark.sql.types.StructType.fromDDL("bench_extra DOUBLE")))
-    arms("evolve_add") = tEvoAdd
+    arm("evolve_add", tEvoAdd)
     val (_, tEvoDrop) = timeS(
       graft.lake.Evolve.dropColumns(spark, t, Seq("bench_extra"), "k"))
-    arms("evolve_drop") = tEvoDrop
+    arm("evolve_drop", tEvoDrop)
     println(f"evolve    add column $tEvoAdd%.2f s, drop column " +
       f"$tEvoDrop%.2f s ($nRows%,d-row table untouched)")
 
@@ -170,12 +180,12 @@ object LakeOpsBench {
     // written under physical names)
     val (_, tRename) = timeS(
       graft.lake.Evolve.renameColumn(spark, t, "v", "v_renamed", "k"))
-    arms("rename_column") = tRename
+    arm("rename_column", tRename)
     val renameCh = (0 until nKeys)
       .map(i => (i.toLong * 53 + 11, s"renamed-$i"))
       .toDF("k", "v_renamed")
     val (_, tDvRen) = timeS(Dv.merge(spark, t, "k", renameCh))
-    arms("dv_merge_renamed") = tDvRen
+    arm("dv_merge_renamed", tDvRen)
     println(f"rename    column (mapping overlay): $tRename%.2f s; " +
       f"dv merge through the renamed schema: $tDvRen%.2f s")
     graft.lake.Evolve.renameColumn(spark, t, "v_renamed", "v", "k")
@@ -193,9 +203,9 @@ object LakeOpsBench {
       .toDF("op", "k", "g", "amt")
     Upsert.applyCdc(spark, src, "k", mvBatch)
     val (_, tRefresh) = timeS(MatView.refresh(spark, view, mvBatch))
-    arms("matview_refresh") = tRefresh
+    arm("matview_refresh", tRefresh)
     val (_, tRecreate) = timeS(MatView.recreate(spark, view))
-    arms("matview_recreate") = tRecreate
+    arm("matview_recreate", tRecreate)
     println(f"matview   refresh $tRefresh%.2f s vs recreate $tRecreate%.2f s")
 
     // MV automatic rewrite ([[graft.SqlDml.rewriteViaMv]]): the same
@@ -212,9 +222,9 @@ object LakeOpsBench {
     require(graft.SqlDml.rewriteViaMv(spark, rwQ).isDefined,
       "rewrite did not engage — the arm would time the base")
     val (rwRows, tMvAns) = timeS(graft.Sql.sql(spark, rwQ).collect())
-    arms("mv_rewrite_answer") = tMvAns
+    arm("mv_rewrite_answer", tMvAns)
     val (_, tBaseAns) = timeS(spark.sql(rwQ).collect())
-    arms("mv_rewrite_base") = tBaseAns
+    arm("mv_rewrite_base", tBaseAns)
     println(f"mv rewrite: answered from the view in $tMvAns%.2f s " +
       f"(${rwRows.length}%d groups) vs base recompute $tBaseAns%.2f s")
 
@@ -232,9 +242,9 @@ object LakeOpsBench {
     require(graft.SqlDml.rewriteViaMv(spark, rwjQ).isDefined,
       "join rewrite did not engage — the arm would time the base")
     val (rwjRows, tMvJoin) = timeS(graft.Sql.sql(spark, rwjQ).collect())
-    arms("mv_rewrite_join_answer") = tMvJoin
+    arm("mv_rewrite_join_answer", tMvJoin)
     val (_, tBaseJoin) = timeS(spark.sql(rwjQ).collect())
-    arms("mv_rewrite_join_base") = tBaseJoin
+    arm("mv_rewrite_join_base", tBaseJoin)
     println(f"mv join rewrite: ${rwjRows.length}%d segments from the " +
       f"view in $tMvJoin%.2f s vs base join $tBaseJoin%.2f s")
 
@@ -251,7 +261,7 @@ object LakeOpsBench {
       Upsert.applyCdc(spark, src, "k", seqBatch)
       MatView.refresh(spark, view, seqBatch)
     }
-    arms("pair_sequential") = tPairSeq
+    arm("pair_sequential", tPairSeq)
     val txnBatch = (0 until nKeys).map(i =>
       ("U", i.toLong * 59 + 13, i.toLong % 1024, 11L))
       .toDF("op", "k", "g", "amt")
@@ -261,7 +271,7 @@ object LakeOpsBench {
         MatView.refresh(spark, view, txnBatch)
       }
     }
-    arms("pair_txn") = tPairTxn
+    arm("pair_txn", tPairTxn)
     println(f"txn pair  merge+refresh sequential $tPairSeq%.2f s vs " +
       f"one atomic flip $tPairTxn%.2f s " +
       f"(overhead ${(tPairTxn - tPairSeq) * 1000}%.0f ms)")
@@ -288,7 +298,7 @@ object LakeOpsBench {
     val bigCh = spark.range(bigLo, bigLo + bigN).select(col("id").as("k"),
       concat(lit("big-"), col("id")).as("v"))
     val (vBig, tBig) = timeS(Upsert.merge(spark, tOcc, "k", bigCh))
-    arms("merge_bigbatch") = tBig
+    arm("merge_bigbatch", tBig)
     val bigRewrote = Option(new java.io.File(s"$tOcc/v=$vBig").listFiles())
       .map(_.count(f => f.isFile && f.getName.startsWith("part-")))
       .getOrElse(0)
@@ -296,34 +306,36 @@ object LakeOpsBench {
       f"budget ${Upsert.MaxDriverKeysDefault}%,d): $tBig%.2f s  " +
       f"(version holds $bigRewrote%d data files)")
 
-    val d0 = System.nanoTime()
-    val barrier = new java.util.concurrent.CyclicBarrier(2)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      import scala.concurrent._
-      import scala.concurrent.duration._
-      implicit val ec: ExecutionContextExecutorService =
-        ExecutionContext.fromExecutorService(pool)
-      val writers = (0 to 1).map { w =>
-        Future {
-          val lo = w.toLong * (nRows - nKeys.toLong)
-          val ch = (0 until nKeys).map(i => (lo + i, s"occ-$w-$i"))
-            .toDF("k", "v")
-          barrier.await()
-          Upsert.merge(spark, tOcc, "k", ch)
+    val (_, tOccWall) = timeS {
+      val barrier = new java.util.concurrent.CyclicBarrier(2)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        import scala.concurrent._
+        import scala.concurrent.duration._
+        implicit val ec: ExecutionContextExecutorService =
+          ExecutionContext.fromExecutorService(pool)
+        val writers = (0 to 1).map { w =>
+          Future {
+            val lo = w.toLong * (nRows - nKeys.toLong)
+            val ch = (0 until nKeys).map(i => (lo + i, s"occ-$w-$i"))
+              .toDF("k", "v")
+            barrier.await()
+            Upsert.merge(spark, tOcc, "k", ch)
+          }
         }
-      }
-      Await.result(Future.sequence(writers), 10.minutes)
-    } finally pool.shutdown()
-    val tOccWall = (System.nanoTime() - d0) / 1e9
-    arms("occ_contention_pair") = tOccWall
+        Await.result(Future.sequence(writers), 10.minutes)
+      } finally pool.shutdown()
+    }
+    arm("occ_contention_pair", tOccWall)
     println(f"occ pair  2 barrier-synced disjoint merges: $tOccWall%.2f s " +
       f"(rebases so far: ${Upsert.rebases.get}%d)")
 
     val armsJson = arms.map { case (k, s) => s""""$k":${f"$s%.3f"}""" }
       .mkString(",")
+    val jobsJson = jobs.map { case (k, n) => s""""$k":$n""" }.mkString(",")
     println(s"""{"metric":"lake_ops","rows":$nRows,"files":$nFiles,""" +
-      s""""keys":$nKeys,"stats":$useStats,"arms":{$armsJson}}""")
+      s""""keys":$nKeys,"stats":$useStats,"arms":{$armsJson},""" +
+      s""""jobs":{$jobsJson}}""")
     spark.stop()
     // reclaim the bench table: at the default dial the version history
     // holds tens of GB — leaked temp dirs from a few runs fill the disk

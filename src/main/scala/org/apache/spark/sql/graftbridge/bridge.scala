@@ -31,4 +31,31 @@ object bridge {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     spark.internalCreateDataFrame(ds.queryExecution.toRdd, df.schema)
   }
+
+  /**
+   * The schema Spark's parquet inference job would derive from ONE data
+   * file, computed on the driver: the file's footer is read without its
+   * row groups and converted by the same `ParquetFileFormat
+   * .readSchemaFromFooter` + session-configured converter the inference
+   * job runs per footer, then made nullable as every file-source read is.
+   */
+  def footerSchema(session: org.apache.spark.sql.SparkSession,
+                   file: org.apache.hadoop.fs.Path)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val state = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    val input = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(file, state.newHadoopConf())
+    val footer = new org.apache.parquet.hadoop.Footer(file,
+      ParquetFooterReader.readFooter(input, org.apache.parquet.format
+        .converter.ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(state.conf)).asNullable
+  }
+
+  /** Block until the listener bus has delivered every event posted so
+    * far — a job count read right after an action is then complete. */
+  def drainListeners(session: org.apache.spark.sql.SparkSession): Unit =
+    session.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -10,7 +10,10 @@ Usage:
 
 --check parses the budget table out of BASELINE.md's "Lake DML budget
 table" section and exits non-zero if any arm in fresh.json exceeds its
-recorded 2x budget."""
+recorded 2x budget.
+
+Lines may carry a "jobs" object (Spark jobs per arm); the table and the
+check read "arms" only, so lines with and without it both parse."""
 import json
 import re
 import sys
