@@ -50,14 +50,15 @@ object Cdf {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Record a version's changeset: `upserts` rows land with `_op` = "U",
-    * `deletes` (a one-column frame of deleted keys, column-named `keyCol`)
-    * as key-only rows with `_op` = "D". Called INSIDE the publishing
+    * `deletes` (the deleted rows' key column — or, where a purge cannot
+    * name them by the table key, their whole rows) with `_op` = "D", the
+    * columns `deletes` lacks NULL. Called INSIDE the publishing
     * `build` so the sidecar appears atomically with the version.
     * Changeset-sized — one coalesced file per ~1M rows. A DataFrame (not a
     * driver Seq) so oversized batches ([[Upsert]]'s distributed path)
     * never round-trip their keys through the driver. */
   private[lake] def record(spark: SparkSession, newDir: String,
-                           schema: StructType, keyCol: String,
+                           schema: StructType,
                            upserts: DataFrame, upsertRows: Long,
                            deletes: DataFrame, deleteRows: Long): Unit = {
     val cols = schema.fieldNames.toSeq
@@ -65,8 +66,10 @@ object Cdf {
       .withColumn("_op", lit("U"))
     val dels = deletes.select(cols.map { c =>
       val field = schema(c)
-      if (c == keyCol) col(c).cast(field.dataType).as(c)
-      else lit(null).cast(field.dataType).as(c)
+      deletes.columns.find(_.equalsIgnoreCase(c)) match {
+        case Some(d) => deletes(d).cast(field.dataType).as(c)
+        case None => lit(null).cast(field.dataType).as(c)
+      }
     }: _*).withColumn("_op", lit("D"))
     val changes = ups.unionByName(dels)
     // sizing from the caller-known row counts (already on hand from the

@@ -1,6 +1,7 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -17,14 +18,15 @@ import org.apache.spark.storage.StorageLevel
  *
  * Shape: with a sequence column the batch reduces to its last op per key
  * ([[Upsert.lastPerKey]]'s window) and the same window annotates each
- * kept row with its key's raw-row, NULL-seq, distinct-seq and poison-op
- * counts; without one the batch is taken as is. The summary query
- * collects one small row per reduced row, LIMITED to `maxDriverKeys + 1`:
- * within the budget every number is derived on the driver from those
- * rows (for a sequenced trickle: three jobs — the window's exchange, the
- * reduced rows' cache and the collect). Past it the
- * limit tells the batch is large, and one global aggregate derives the
- * same numbers with no key ever reaching the driver (`keys` is None).
+ * kept row with its key's raw-row, NULL-seq and distinct-seq counts;
+ * without one the batch is taken as is. The summary query then runs ONE
+ * job at the batch's own parallelism: each task counts over all of its
+ * rows and ships its keys only while they fit its share of the
+ * `maxDriverKeys` budget, and the driver adds the counts up. Within the
+ * budget the keys come with them (a skewed batch whose keys outgrew one
+ * task's share collects them in one more job); past it one global
+ * distinct count runs instead and no key reaches the driver (`keys` is
+ * None).
  *
  * The reduced rows are persisted (unless the caller already cached the
  * batch) so the merge, the change feed and a view refresh read them once;
@@ -89,19 +91,16 @@ private[graft] object Changeset {
   private val N = "_cs_n"
   private val NSeq = "_cs_nseq"
   private val NullSeq = "_cs_nullseq"
-  private val Rej = "_cs_rej"
 
   /** Summarize `batch` in one query. With `seqCol`, reduce to the last op
     * per key first and enforce [[Upsert.lastPerKey]]'s determinism
-    * contract (poison ops in `rejectOps`, NULL sequences, NULL keys,
-    * (key, seq) collisions — its messages, in its order). The CDC batch
-    * contract itself is the caller's to require
-    * ([[Changeset.requireCdcContract]]): not every consumer holds a batch
-    * to it. */
+    * contract (NULL sequences, NULL keys, (key, seq) collisions — its
+    * messages, in its order). The CDC batch contract itself is the
+    * caller's to require ([[Changeset.requireCdcContract]]): not every
+    * consumer holds a batch to it. */
   def summarize(batch: DataFrame, keyCol: String, opCol: String,
                 seqCol: Option[String] = None,
-                maxDriverKeys: Int = Upsert.MaxDriverKeysDefault,
-                rejectOps: Set[String] = Set.empty): Changeset = {
+                maxDriverKeys: Int = Upsert.MaxDriverKeysDefault): Changeset = {
     val annotated = seqCol match {
       case Some(s) =>
         val byKey = Window.partitionBy(col(keyCol))
@@ -111,9 +110,6 @@ private[graft] object Changeset {
           .withColumn(N, count(lit(1)).over(byKey))
           .withColumn(NSeq, size(collect_set(col(s)).over(byKey)).cast("long"))
           .withColumn(NullSeq, count(when(col(s).isNull, 1)).over(byKey))
-          .withColumn(Rej, count(when(
-            if (rejectOps.isEmpty) lit(false)
-            else col(opCol).isin(rejectOps.toSeq: _*), 1)).over(byKey))
           .filter(col("_cs_rn") === 1)
           .drop("_cs_rn", s)
       case None => batch
@@ -121,7 +117,7 @@ private[graft] object Changeset {
     val owned = annotated.storageLevel == StorageLevel.NONE
     if (owned) annotated.persist()
     try summarizeCached(annotated, keyCol, opCol, seqCol, maxDriverKeys,
-      rejectOps, if (owned) Some(annotated) else None)
+      if (owned) Some(annotated) else None)
     catch {
       case e: Throwable => if (owned) annotated.unpersist(); throw e
     }
@@ -129,54 +125,39 @@ private[graft] object Changeset {
 
   private def summarizeCached(annotated: DataFrame, keyCol: String,
                               opCol: String, seqCol: Option[String],
-                              maxDriverKeys: Int, rejectOps: Set[String],
+                              maxDriverKeys: Int,
                               cached: Option[DataFrame]): Changeset = {
     val sequenced = seqCol.isDefined
-    val rows = if (sequenced) annotated.drop(N, NSeq, NullSeq, Rej)
-      else annotated
-    val key = col(keyCol)
-    val perRow = Seq(key.isNull.as("nullkey"), key.as("raw"),
-      key.cast("long").as("k"), col(opCol).as("op")) ++
-      (if (sequenced) Seq(col(N), col(NSeq), col(NullSeq), col(Rej))
-       else Seq.empty)
-    // one task reads at most budget + 1 rows: a single job, where a
-    // plain limit would scan the partitions in growing rounds
-    val got = annotated.select(perRow: _*).coalesce(1)
-      .limit(math.min(maxDriverKeys.toLong + 1, Int.MaxValue).toInt).collect()
-    // (rows, null-key rows, distinct keys, deletes, ops, NULL ops,
-    //  poison, NULL seqs, collisions)
-    val (t, keys) =
-      if (got.length <= maxDriverKeys) {
-        val keyed = got.filterNot(_.getBoolean(0))
-        def sum(i: Int) = if (sequenced) got.map(_.getLong(i)).sum else 0L
-        (Totals(got.length.toLong, got.length.toLong - keyed.length,
-          keyed.map(_.get(1)).distinct.length.toLong,
-          got.count(r => r.get(3) == "D").toLong,
-          got.flatMap(r => Option(r.getString(3))).toSet,
-          got.count(_.isNullAt(3)).toLong,
-          sum(7), sum(6), sum(4) - sum(5)),
-          Some(keyed.map(_.getLong(2)).distinct.toSeq))
-      } else (distributedTotals(annotated, keyCol, opCol, sequenced), None)
+    val rows = if (sequenced) annotated.drop(N, NSeq, NullSeq) else annotated
+    val perRow = annotated.select(Seq(col(keyCol).as("raw"),
+      col(keyCol).cast("long").as("k"), col(opCol).as("op")) ++
+      (if (sequenced) Seq(col(N), col(NSeq), col(NullSeq)) else Seq.empty)
+      : _*)
+    val p = perRow
+      .mapPartitions(it => Iterator(part(it, sequenced, maxDriverKeys)))(
+        Encoders.javaSerialization(classOf[Part]))
+      .collect().foldLeft(NoRows)(_ + _)
     if (sequenced)
-      requireSequenced(keyCol, seqCol.get, rejectOps, t.nRej, t.nNullSeq,
-        t.nNullKeys, t.nCollisions)
-    new Changeset(rows, keyCol, opCol, t.nRows, t.nNullKeys, t.nKeys,
-      t.nDeletes, t.ops, t.nNullOps, keys, cached)
+      requireSequenced(keyCol, seqCol.get, p.nNullSeq, p.nNullKeys,
+        p.nCollisions)
+    val (nKeys, keys) =
+      if (p.nRows > maxDriverKeys)
+        (annotated.agg(countDistinct(col(keyCol))).head().getLong(0), None)
+      else {
+        val pairs = p.keys.getOrElse(
+          perRow.filter(col("raw").isNotNull).select("raw", "k").collect()
+            .map(r => (r.get(0), r.getLong(1))).toVector)
+        (pairs.map(_._1).distinct.size.toLong, Some(pairs.map(_._2).distinct))
+      }
+    new Changeset(rows, keyCol, opCol, p.nRows, p.nNullKeys, nKeys,
+      p.nDeletes, p.ops, p.nNullOps, keys, cached)
   }
 
-  /** [[Upsert.lastPerKey]]'s determinism contract, in its order: poison
-    * ops, NULL sequences, NULL keys, (key, seq) collisions. */
+  /** [[Upsert.lastPerKey]]'s determinism contract, in its order: NULL
+    * sequences, NULL keys, (key, seq) collisions. */
   private[lake] def requireSequenced(keyCol: String, seqCol: String,
-                                     rejectOps: Set[String], nRej: Long,
                                      nNullSeq: Long, nNullKeys: Long,
                                      nCollisions: Long): Unit = {
-    require(nRej == 0L,
-      s"$nRej feed poison row(s) (op in $rejectOps) — a " +
-        "wholesale replace (op B: full publish, clone seed, RESTORE) or " +
-        "a schema change (op S: ALTER TABLE ADD/DROP COLUMNS, evolving " +
-        "merge) landed mid-stream and a fixed-schema consumer cannot " +
-        "represent it; stop this consumer and restart from a fresh " +
-        "snapshot/checkpoint (the restart picks up the new schema)")
     require(nNullSeq == 0L,
       s"$nNullSeq row(s) with NULL $seqCol — an unsequenced op " +
         "cannot be ordered")
@@ -188,26 +169,53 @@ private[graft] object Changeset {
         "arbitrary")
   }
 
-  private final case class Totals(nRows: Long, nNullKeys: Long, nKeys: Long,
-                                  nDeletes: Long, ops: Set[String],
-                                  nNullOps: Long, nRej: Long, nNullSeq: Long,
-                                  nCollisions: Long)
+  /** One task's share of the summary: counts over all of its rows, and
+    * its non-NULL (key, key as long) pairs while they fit its share of
+    * the key budget (None past it). */
+  private[lake] final case class Part(nRows: Long, nNullKeys: Long,
+                                      nDeletes: Long, ops: Set[String],
+                                      nNullOps: Long, nNullSeq: Long,
+                                      nCollisions: Long,
+                                      keys: Option[Vector[(Any, Long)]]) {
+    def +(o: Part): Part = Part(nRows + o.nRows, nNullKeys + o.nNullKeys,
+      nDeletes + o.nDeletes, ops ++ o.ops, nNullOps + o.nNullOps,
+      nNullSeq + o.nNullSeq, nCollisions + o.nCollisions,
+      for (a <- keys; b <- o.keys) yield a ++ b)
+  }
 
-  // past the driver budget: the same numbers from one global aggregate
-  private def distributedTotals(annotated: DataFrame, keyCol: String,
-                                opCol: String, sequenced: Boolean): Totals = {
-    val key = col(keyCol)
-    val seqAggs =
-      if (sequenced) Seq(sum(col(Rej)), sum(col(NullSeq)),
-        sum(col(N) - col(NSeq)))
-      else Seq(lit(0L), lit(0L), lit(0L))
-    val aggs = Seq(count(lit(1)), count(when(key.isNull, 1)),
-      countDistinct(key), count(when(col(opCol) === "D", 1)),
-      collect_set(col(opCol)), count(when(col(opCol).isNull, 1))) ++
-      seqAggs.map(_.cast("long"))
-    val r: Row = annotated.agg(aggs.head, aggs.tail: _*).head()
-    def long(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
-    Totals(long(0), long(1), long(2), long(3), r.getSeq[String](4).toSet,
-      long(5), long(6), long(7), long(8))
+  private val NoRows = Part(0L, 0L, 0L, Set.empty, 0L, 0L, 0L,
+    Some(Vector.empty))
+
+  // `it` holds (raw key, key as long, op[, N, NSeq, NullSeq]) rows; the
+  // tasks split `budget + 1` keys between them, so a batch past the
+  // budget sends the driver about that many keys in all, never more
+  private def part(it: Iterator[Row], sequenced: Boolean,
+                   budget: Int): Part = {
+    val tasks = TaskContext.get().numPartitions().toLong
+    val share = (budget.toLong + tasks) / tasks
+    var nRows, nNullKeys, nDeletes, nNullOps, nNullSeq, nCollisions = 0L
+    val ops = scala.collection.mutable.Set.empty[String]
+    val keys = Vector.newBuilder[(Any, Long)]
+    var nKeys = 0L
+    it.foreach { r =>
+      nRows += 1
+      if (r.isNullAt(0)) nNullKeys += 1
+      else {
+        nKeys += 1
+        if (nKeys <= share) keys += ((r.get(0), r.getLong(1)))
+      }
+      if (r.isNullAt(2)) nNullOps += 1
+      else {
+        val op = r.getString(2)
+        ops += op
+        if (op == "D") nDeletes += 1
+      }
+      if (sequenced) {
+        nNullSeq += r.getLong(5)
+        nCollisions += r.getLong(3) - r.getLong(4)
+      }
+    }
+    Part(nRows, nNullKeys, nDeletes, ops.toSet, nNullOps, nNullSeq,
+      nCollisions, if (nKeys <= share) Some(keys.result()) else None)
   }
 }

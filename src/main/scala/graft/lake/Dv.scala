@@ -101,7 +101,9 @@ object Dv {
     * [[Forget.purge]] (a deletion request: driver-resident). Idempotent:
     * keys no live row matches publish nothing (returns the live version).
     * Works on an already-DV'd live version (vectors accumulate — refs
-    * never chain, both versions share one data dir). Returns the live
+    * never chain, both versions share one data dir). The change feed
+    * names the deleted rows by `keyCol` when it is the key the table's
+    * indexes name, and by their whole rows otherwise. Returns the live
     * version. */
   def purge(spark: SparkSession, table: String, keyCol: String,
             keys: Seq[Long]): Long =
@@ -333,7 +335,7 @@ object Dv {
           org.apache.hadoop.fs.FileUtil.copy(f, sm, fd,
             new Path(s"$dir/_table_schema"), false, true, conf)
         Versioned.carryColumnMapping(f, liveVDir, fd, dir, conf)
-        Cdf.record(spark, dir, schema, keyCol,
+        Cdf.record(spark, dir, schema,
           upserts.select(cols.map(col): _*), nUpserts, deletes, nDeletes)
       }
     } finally { victims.unpersist(); () }
@@ -371,44 +373,50 @@ object Dv {
       else spark.emptyDataset(org.apache.spark.sql.Encoders.product[(String, Long)])
         .toDF("file", "row_index")
     // the change feed names deleted rows by the TABLE's key: a purge on
-    // another column (a user id over an event-keyed table) records the
-    // victims' table keys, read in the same scan
-    val feedKey = tableKey(spark, dataDir).filterNot(_.equalsIgnoreCase(keyCol))
-    val located = Versioned.readFiles(spark, dataDir, admitted.map(_.toString))
+    // that key records the named keys; any other purge (on another
+    // column, or on a table whose key no index names) records the
+    // victims' whole rows, read in the same scan, so a consumer keyed on
+    // any column can name each deletion
+    val tk = tableKey(spark, dataDir)
+    val byKey = tk.exists(_.equalsIgnoreCase(keyCol))
+    val data = Versioned.readFiles(spark, dataDir, admitted.map(_.toString))
+    val located = data
       .select(Seq(col("_metadata.file_name").as("file"),
         col("_metadata.row_index").as("row_index"),
         col(keyCol).cast("long").as("_k")) ++
-        feedKey.map(k => col(k).as("_tk")): _*)
+        (if (byKey) Seq.empty
+         else Seq(struct(data.columns.toSeq.map(col): _*).as("_row"))): _*)
       .filter(col("_k").isin(ks: _*))
       .drop("_k")
     val scan =
       if (hadVector)
         located.join(broadcast(prior), Seq("file", "row_index"), "left_anti")
       else located
+    // a non-key purge of a keyed table names its victims by that key
+    val otherKey = tk.filterNot(_ => byKey)
     scan.persist()
     try {
       // ONE job, no exchange: new deletes (0 = all named rows already
-      // deleted or absent) and, on a non-key purge, victims whose table
-      // key is NULL
+      // deleted or absent) and, on a non-key purge of a keyed table,
+      // victims whose table key is NULL
       val (nNew, nNullKeys) = scan
-        .select(feedKey.fold(lit(false))(_ => col("_tk").isNull))
+        .select(otherKey.fold(lit(false))(k => col("_row").getField(k).isNull))
         .queryExecution.toRdd.aggregate((0L, 0L))(
           (a, r) => (a._1 + 1, a._2 + (if (r.getBoolean(0)) 1 else 0)),
           (a, b) => (a._1 + b._1, a._2 + b._2))
       if (nNew == 0L) return live
-      feedKey.foreach { k =>
+      otherKey.foreach { k =>
         require(nNullKeys == 0L,
           s"$nNullKeys row(s) matching the ${ks.size} $keyCol " +
             s"value(s) have a NULL $k — the change feed could not name " +
             s"their deletion; purge them by $k instead")
       }
       val victims = scan.select(col("file"), col("row_index"))
-      val feed = feedKey match {
-        case Some(k) => (k, scan.select(col("_tk").as(k)), nNew)
-        case None => (keyCol, spark.createDataset(ks)(
+      val feed =
+        if (byKey) (spark.createDataset(ks)(
           org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol),
           ks.size.toLong)
-      }
+        else (scan.select(col("_row.*")), nNew)
       // pin the shared data dir BEFORE publishing the ref (Clone.shallow's
       // ordering argument: an orphaned pin blocks reclaim, a missing pin
       // breaks reads silently). An OCC conflict below may abandon the pin
@@ -434,7 +442,7 @@ object Dv {
   private def publishPurge(spark: SparkSession, table: String, live: Long,
                            liveVDir: String, dataDir: String,
                            prior: DataFrame, victims: DataFrame,
-                           nNew: Long, feed: (String, DataFrame, Long),
+                           nNew: Long, feed: (DataFrame, Long),
                            f: org.apache.hadoop.fs.FileSystem,
                            conf: org.apache.hadoop.conf.Configuration)
       : Long =
@@ -479,8 +487,8 @@ object Dv {
             new Path(s"$dir/_table_schema"), false, true, conf)
         Versioned.carryColumnMapping(f, liveVDir, fd, dir, conf)
         val schema = Versioned.schemaAt(spark, table, live)
-        val (feedKey, deletes, nDeletes) = feed
-        Cdf.record(spark, dir, schema, feedKey,
+        val (deletes, nDeletes) = feed
+        Cdf.record(spark, dir, schema,
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
           upsertRows = 0L, deletes = deletes, deleteRows = nDeletes)

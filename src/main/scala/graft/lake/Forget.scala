@@ -167,7 +167,8 @@ object Forget {
   /** Delete every row whose `keyCol` is in `keys`, rewriting only
     * Bloom-admitted files; returns the new live version (or the current
     * one unchanged when no file can contain any key — an idempotent
-    * no-op, e.g. a re-submitted deletion request). */
+    * no-op, e.g. a re-submitted deletion request). The change feed names
+    * the deleted rows as [[Dv.purge]]'s does. */
   def purge(spark: SparkSession, table: String, keyCol: String,
             keys: Seq[Long]): Long =
     Versioned.withWriteRetry() { purgeOnce(spark, table, keyCol, keys) }
@@ -200,23 +201,29 @@ object Forget {
     val marker = Versioned.readSchemaMarker(f, liveDir)
     def affectedRows =
       Versioned.readFiles(spark, liveDir, affected.map(_.toString))
-    // the key the table's indexes (and so its change feed) name rows by;
-    // a purge on another column keeps the layout, the sidecars and the
-    // feed on that key — the feed records the victims' table keys, and a
-    // victim whose table key is NULL could not be named there: reject
-    val indexKey = Dv.tableKey(spark, liveDir)
-      .filterNot(_.equalsIgnoreCase(keyCol)).getOrElse(keyCol)
-    val byOtherCol = indexKey != keyCol
+    // the key the table's indexes (and so its change feed) name rows by.
+    // A purge on that key records the named keys; any other purge (on
+    // another column, or on a table whose key no index names) records the
+    // victims' whole rows, so a consumer keyed on any column can name each
+    // deletion — and a victim of a keyed table whose key is NULL could
+    // not be named there: reject
+    val tk = Dv.tableKey(spark, liveDir)
+    val byKey = tk.exists(_.equalsIgnoreCase(keyCol))
+    // the rewritten files keep the table key's layout (keyCol's when no
+    // index names one)
+    val layoutKey = tk.getOrElse(keyCol)
+    def victimRows = affectedRows.filter(col(keyCol).isin(ks: _*))
     val nFeedDeletes =
-      if (!byOtherCol) ks.size.toLong
+      if (byKey) ks.size.toLong
       else {
-        val named = col(keyCol).isin(ks: _*)
-        val r = affectedRows.agg(count(when(named, 1)),
-          count(when(named && col(indexKey).isNull, 1))).head()
-        require(r.getLong(1) == 0L,
-          s"${r.getLong(1)} row(s) matching the ${ks.size} $keyCol " +
-            s"value(s) have a NULL $indexKey — the change feed could not " +
-            s"name their deletion; purge them by $indexKey instead")
+        val r = victimRows.agg(count(lit(1)),
+          count(when(tk.fold(lit(false))(col(_).isNull), 1))).head()
+        tk.foreach { k =>
+          require(r.getLong(1) == 0L,
+            s"${r.getLong(1)} row(s) matching the ${ks.size} $keyCol " +
+              s"value(s) have a NULL $k — the change feed could not " +
+              s"name their deletion; purge them by $k instead")
+        }
         r.getLong(0)
       }
 
@@ -235,20 +242,20 @@ object Forget {
       //    request never named would vanish from rewritten files
       affectedRows
         .filter(col(keyCol).isNull || !col(keyCol).isin(ks: _*))
-        .repartitionByRange(affected.size, col(indexKey))
-        .sortWithinPartitions(col(indexKey))
+        .repartitionByRange(affected.size, col(layoutKey))
+        .sortWithinPartitions(col(layoutKey))
         .write.mode("overwrite").parquet(newDir)
       // 2. fresh sidecars for the rewritten files (only they exist in
-      //    newDir at this point), on the key the carried ones describe
-      BloomIndex.indexExisting(spark, newDir,
-        BloomIndex.keyOf(spark, liveDir).getOrElse(indexKey))
+      //    newDir at this point), on the table key; a table whose key no
+      //    index names gets none (they would name keyCol its key)
+      tk.foreach(BloomIndex.indexExisting(spark, newDir, _))
       // 3. untouched files + their sidecars: raw byte copy, bitwise-equal
       copyUntouched(f, conf, liveDir, newDir, untouched)
       // 4. stats manifest rides along when the table keeps one: carried
       //    files keep their rows, only the rewritten files read their own
       //    footers (reuses the manifest the prune step already loaded)
       StatsIndex.rebuildAfterRewrite(spark, liveDir, newDir,
-        StatsIndex.keyOf(spark, liveDir).getOrElse(indexKey),
+        StatsIndex.keyOf(spark, liveDir).getOrElse(layoutKey),
         preloaded = stats)
       //    token-Bloom twin: carried files' sidecars were byte-copied in
       //    step 3; re-index just the rewritten files from the carried
@@ -267,15 +274,14 @@ object Forget {
       marker.foreach(Versioned.writeSchemaMarker(f, newDir, _))
       // 7. change feed: a purge's changeset is its deletions
       val schema = marker.getOrElse(Versioned.schemaOf(spark, liveDir))
-      Cdf.record(spark, newDir, schema, indexKey,
+      Cdf.record(spark, newDir, schema,
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
         upsertRows = 0L,
         deletes =
-          if (byOtherCol) affectedRows.filter(col(keyCol).isin(ks: _*))
-            .select(col(indexKey))
-          else spark.createDataset(ks)(
-            org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol),
+          if (byKey) spark.createDataset(ks)(
+            org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol)
+          else victimRows,
         deleteRows = nFeedDeletes)
       // 8. file-level commit record (what this purge removed/added vs its
       //    base) — lets a concurrent disjoint-file MERGE rebase over this

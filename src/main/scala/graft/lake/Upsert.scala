@@ -176,8 +176,15 @@ object Upsert {
       count(when(
         if (rejectOps.isEmpty) lit(false)
         else col(opCol).isin(rejectOps.toSeq: _*), 1)).as("nrej")).head()
-    Changeset.requireSequenced(keyCol, seqCol, rejectOps, v.getLong(4),
-      v.getLong(0), v.getLong(1), v.getLong(2) - v.getLong(3))
+    require(v.getLong(4) == 0L,
+      s"${v.getLong(4)} feed poison row(s) (op in $rejectOps) — a " +
+        "wholesale replace (op B: full publish, clone seed, RESTORE) or " +
+        "a schema change (op S: ALTER TABLE ADD/DROP COLUMNS, evolving " +
+        "merge) landed mid-stream and a fixed-schema consumer cannot " +
+        "represent it; stop this consumer and restart from a fresh " +
+        "snapshot/checkpoint (the restart picks up the new schema)")
+    Changeset.requireSequenced(keyCol, seqCol, v.getLong(0), v.getLong(1),
+      v.getLong(2) - v.getLong(3))
     val w = Window.partitionBy(col(keyCol)).orderBy(col(seqCol).desc)
     batch.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
@@ -547,7 +554,7 @@ object Upsert {
           Versioned.writeSchemaMarker(f, newDir, outSchema)
         // change feed: this version's OWN changeset, atomic with the swap
         // (row count == distinct keys, enforced above — no extra action)
-        Cdf.record(spark, newDir, outSchema, keyCol,
+        Cdf.record(spark, newDir, outSchema,
           upserts.select(outCols.map(col): _*), nUpserts, deletes, nDeletes)
         // an EVOLVING merge also poisons the streaming tail (one _op="S"
         // row — a fixed-schema raw tail would silently drop the new

@@ -42,15 +42,26 @@ final class JobCounter(spark: SparkSession) extends SparkListener {
 
   /** `body`'s result and the number of Spark jobs it started. */
   def count[A](body: => A): (A, Long) = {
+    val (a, _, n) = time(body)
+    (a, n)
+  }
+
+  /** `body`'s result, its wall seconds and the number of Spark jobs it
+    * started. The listener-bus drains that make the count exact run
+    * outside the timed interval. */
+  def time[A](body: => A): (A, Double, Long) = {
     val sc = spark.sparkContext
     bridge.drainListeners(spark)
     val before = sites.size
     sc.setJobGroup(group, "job count", interruptOnCancel = false)
-    try {
-      val a = body
-      bridge.drainListeners(spark)
-      (a, (sites.size - before).toLong)
-    } finally sc.clearJobGroup()
+    val (a, secs) =
+      try {
+        val t0 = System.nanoTime()
+        val a = body
+        (a, (System.nanoTime() - t0) / 1e9)
+      } finally sc.clearJobGroup()
+    bridge.drainListeners(spark)
+    (a, secs, (sites.size - before).toLong)
   }
 
   def close(): Unit = spark.sparkContext.removeSparkListener(this)

@@ -57,9 +57,9 @@ object LakeOpsBench {
     var lastJobs = 0L
 
     def timeS[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val (a, n) = counter.count(f)
+      val (a, secs, n) = counter.time(f)
       lastJobs = n
-      (a, (System.nanoTime() - t0) / 1e9)
+      (a, secs)
     }
     def arm(name: String, secs: Double): Unit = {
       arms(name) = secs; jobs(name) = lastJobs

@@ -12,7 +12,9 @@ import graft.SparkSpec
  * Bloom sidecars or stats manifest with the other column's values, the
  * named rows must all be gone, and the change feed must name each
  * deleted row by the table key, so a materialized view's catch-up still
- * equals a full recompute.
+ * equals a full recompute. On a table whose key no index names, the feed
+ * carries the deleted rows whole, so a consumer keyed on any column can
+ * name them.
  */
 class PurgeByColumnSpec extends SparkSpec {
 
@@ -81,6 +83,38 @@ class PurgeByColumnSpec extends SparkSpec {
 
   test("Forget.purge on a non-key column deletes every named row; the view catches up exactly") {
     check((t, c, ks) => Forget.purge(spark, t, c, ks), "forget")
+  }
+
+  test("a purge on a table whose key no index names records whole rows; the view catches up exactly") {
+    for ((name, purge) <- Seq[(String, (String, String, Seq[Long]) => Long)](
+        ("plain_dv", (t, c, ks) => Dv.purge(spark, t, c, ks)),
+        ("plain_forget", (t, c, ks) => Forget.purge(spark, t, c, ks)))) {
+      val t = s"$root/$name"
+      val mv = s"$root/${name}_mv"
+      Versioned.publish(spark.range(0, 20000).select($"id".as("event_id"),
+        ($"id" % 97).as("user_id"), ($"id" % 13).cast("double").as("value"))
+        .repartition(4), t)
+      assert(Dv.tableKey(spark, Versioned.dataDir(spark, t, 1L)).isEmpty)
+      MatView.create(spark, t, "event_id", mv, Seq("user_id"), Seq("value"))
+      val v = purge(t, "user_id", Seq(42L))
+      val after = Versioned.read(spark, t)
+      assert(after.filter($"user_id" === 42L).isEmpty, name)
+      assert(after.count() == 20000L - 206L, name)
+      // the feed's deletes carry whole rows, so the view's key is there
+      val feed = Cdf.changesSince(spark, t, v - 1).filter($"_op" === "D")
+      assert(feed.filter($"event_id".isNull || $"user_id" =!= 42L).isEmpty,
+        name)
+      assert(feed.select("event_id").distinct().count() == 206L, name)
+      // and no index now names user_id the table key
+      assert(Dv.tableKey(spark, Versioned.dataDir(spark, t, v)).isEmpty, name)
+      MatView.catchUp(spark, mv)
+      assert(viewRows(mv) == recompute(t), name)
+      Dv.purge(spark, t, "event_id", Seq(43L, 141L))
+      assert(Versioned.read(spark, t).filter($"event_id".isin(43L, 141L))
+        .isEmpty, name)
+      MatView.catchUp(spark, mv)
+      assert(viewRows(mv) == recompute(t), name)
+    }
   }
 
   test("a non-key purge whose rows have a NULL table key rejects loudly") {
