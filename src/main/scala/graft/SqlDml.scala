@@ -5,8 +5,8 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.lake.{BloomIndex, Clone, Compact, Dv, Expect, Forget, History,
-  MatView, Restore, StatsIndex, Upsert, Versioned, ZOrder}
+import graft.lake.{BloomIndex, Changeset, Clone, Compact, Dv, Expect, Forget,
+  History, MatView, Restore, StatsIndex, Upsert, Versioned, ZOrder}
 
 /**
  * SQL DML statements against registered lake tables — the write-side of
@@ -1573,21 +1573,23 @@ object SqlDml {
     val (table, keyCol) = lookup(name)
     val live = liveForDml(spark, table)
     val matched = cond.map(c => live.filter(expr(c))).getOrElse(live)
-    val agg = matched.agg(
-      count(when(col(keyCol).isNull, 1)).as("nulls"),
-      count(lit(1)).as("n")).head()
-    require(agg.getLong(0) == 0L,
-      s"DELETE matches ${agg.getLong(0)} row(s) with NULL $keyCol — " +
-        "key-targeted purge cannot name them")
-    if (agg.getLong(1) == 0L)
-      return Versioned.currentVersion(spark, table).get // matched nothing
-    require(agg.getLong(1) <= Upsert.MaxDriverKeysDefault,
-      s"DELETE matches ${agg.getLong(1)} rows — past the driver key " +
-        s"budget (${Upsert.MaxDriverKeysDefault}); a predicate this wide " +
-        "is a restatement: publish read().filter(!pred) instead")
-    import spark.implicits._
-    val keys = matched.select(col(keyCol).cast("long")).distinct()
-      .as[Long].collect().toSeq
+    // one changeset summary of the matched keys: the NULL-key and row
+    // counts and, within the driver budget, the distinct keys
+    val op = "_graft_delete_op"
+    val cs = Changeset.summarize(
+      matched.select(col(keyCol), lit("D").as(op)), keyCol, op)
+    val keys = try {
+      require(cs.nNullKeys == 0L,
+        s"DELETE matches ${cs.nNullKeys} row(s) with NULL $keyCol — " +
+          "key-targeted purge cannot name them")
+      if (cs.isEmpty)
+        return Versioned.currentVersion(spark, table).get // matched nothing
+      require(cs.nRows <= Upsert.MaxDriverKeysDefault,
+        s"DELETE matches ${cs.nRows} rows — past the driver key " +
+          s"budget (${Upsert.MaxDriverKeysDefault}); a predicate this wide " +
+          "is a restatement: publish read().filter(!pred) instead")
+      cs.keys.get
+    } finally cs.release()
     val v =
       if (zeroCopy || liveIsRef(spark, table))
         Dv.purge(spark, table, keyCol, keys)

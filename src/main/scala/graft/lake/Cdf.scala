@@ -19,7 +19,10 @@ import org.apache.spark.sql.types.StructType
  *  - [[Upsert.applyCdc]]/merge record their upsert rows (`_op` = "U";
  *    I and U both apply as upserts, so one op serves) and delete keys
  *    (`_op` = "D", key column only);
- *  - [[Forget.purge]] records its deletions;
+ *  - purges ([[Forget.purge]], [[Dv.purge]]) are delete-only changesets
+ *    committed by the same rewrite and zero-copy commits, so they record
+ *    their deletions exactly as those commits record a merge's: by key
+ *    when the purge is on the table key, as whole rows otherwise;
  *  - layout-only maintenance ([[Compact.compactVersion]],
  *    [[ZOrder.cluster]]) records an explicit `_changes_none` marker —
  *    "this version changed no rows" is a STATEMENT, not an absence;
@@ -50,9 +53,11 @@ object Cdf {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Record a version's changeset: `upserts` rows land with `_op` = "U",
-    * `deletes` (the deleted rows' key column — or, where a purge cannot
-    * name them by the table key, their whole rows) with `_op` = "D", the
-    * columns `deletes` lacks NULL. Called INSIDE the publishing
+    * `deletes` with `_op` = "D", the columns `deletes` lacks NULL. The
+    * two commits that call this ([[Upsert.applyChanges]] and the
+    * zero-copy one behind [[Dv.applyCdc]], each shared by its mode's
+    * merges and purges) pass the deleted keys when the match column is
+    * the table key and the deleted rows whole otherwise. Called INSIDE the publishing
     * `build` so the sidecar appears atomically with the version.
     * Changeset-sized — one coalesced file per ~1M rows. A DataFrame (not a
     * driver Seq) so oversized batches ([[Upsert]]'s distributed path)

@@ -1,9 +1,10 @@
 package graft.lake
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -31,6 +32,11 @@ import org.apache.spark.storage.StorageLevel
  * The reduced rows are persisted (unless the caller already cached the
  * batch) so the merge, the change feed and a view refresh read them once;
  * [[release]] frees them.
+ *
+ * A purge is a changeset too: [[Changeset.deleting]] builds one whose
+ * rows are all deletes on the driver, with no summary query, so
+ * [[Forget.purge]] and [[Dv.purge]] commit through the same rewrite and
+ * zero-copy commits their storage mode's merge uses.
  */
 private[graft] final class Changeset private (
     /** the batch, reduced to its last op per key when sequenced: the
@@ -151,6 +157,22 @@ private[graft] object Changeset {
       }
     new Changeset(rows, keyCol, opCol, p.nRows, p.nNullKeys, nKeys,
       p.nDeletes, p.ops, p.nNullOps, keys, cached)
+  }
+
+  /** The delete-only changeset of a purge, built on the driver with no
+    * Spark job: one "D" row per distinct key of `keys`, the key in
+    * `keyCol` and every other column of the table `schema` a typed NULL.
+    * Its counts and keys are known, and it holds nothing to release. */
+  def deleting(spark: SparkSession, schema: StructType, keyCol: String,
+               keys: Seq[Long]): Changeset = {
+    val ks = keys.distinct
+    val op = "_graft_purge_op"
+    val rows = spark.createDataset(ks)(Encoders.scalaLong).toDF("_k")
+      .select(schema.fields.toSeq.map(f =>
+        (if (f.name.equalsIgnoreCase(keyCol)) col("_k") else lit(null))
+          .cast(f.dataType).as(f.name)) :+ lit("D").as(op): _*)
+    val n = ks.size.toLong
+    new Changeset(rows, keyCol, op, n, 0L, n, n, Set("D"), 0L, Some(ks), None)
   }
 
   /** [[Upsert.lastPerKey]]'s determinism contract, in its order: NULL

@@ -98,16 +98,29 @@ object Dv {
   /** Zero-copy delete: every row whose `keyCol` is in `keys` becomes
     * invisible behind a new version that REWRITES NOTHING — `_ref` to the
     * live data dir + a deletion-vector sidecar. Key-set dial as
-    * [[Forget.purge]] (a deletion request: driver-resident). Idempotent:
-    * keys no live row matches publish nothing (returns the live version).
-    * Works on an already-DV'd live version (vectors accumulate — refs
-    * never chain, both versions share one data dir). The change feed
-    * names the deleted rows by `keyCol` when it is the key the table's
-    * indexes name, and by their whole rows otherwise. Returns the live
-    * version. */
+    * [[Forget.purge]] (a deletion request: driver-resident; any key count
+    * is accepted). Idempotent: keys no live row matches publish nothing
+    * (returns the live version). Works on an already-DV'd live version
+    * (vectors accumulate — refs never chain, both versions share one
+    * data dir). The purge is a delete-only changeset
+    * ([[Changeset.deleting]]) committed by the zero-copy commit
+    * [[applyCdc]] and [[merge]] use, with the table key ([[tableKey]])
+    * deciding how the feed names the deleted rows: by `keyCol` when it
+    * is that key, by their whole rows otherwise. Exempt from CHECK
+    * constraints. Returns the live version. */
   def purge(spark: SparkSession, table: String, keyCol: String,
-            keys: Seq[Long]): Long =
-    Versioned.withWriteRetry() { purgeOnce(spark, table, keyCol, keys) }
+            keys: Seq[Long]): Long = {
+    require(keys.nonEmpty, "purge needs a non-empty key set")
+    Versioned.withWriteRetry() {
+      val live = Versioned.currentVersion(spark, table).getOrElse(
+        throw new IllegalStateException(s"no published version at $table"))
+      val cs = Changeset.deleting(spark,
+        Versioned.schemaAt(spark, table, live), keyCol, keys)
+      mergeOnce(spark, table, keyCol,
+        tableKey(spark, Versioned.dataDir(spark, table, live)),
+        cs.upserts, cs.deletes, 0L, cs.nDeletes, cs.keys.get, None)
+    }
+  }
 
   /** Zero-copy MERGE — deletion vectors extended from deletes to the
     * whole CDC triad, so update-heavy CDC stops rewriting admitted files
@@ -143,7 +156,7 @@ object Dv {
           "on Upsert.merge's distributed path")
       Constraints.enforce(spark, table, cs.upserts, "Dv.applyCdc")
       Versioned.withWriteRetry() {
-        mergeOnce(spark, table, keyCol, cs.upserts, cs.deletes,
+        mergeOnce(spark, table, keyCol, Some(keyCol), cs.upserts, cs.deletes,
           cs.nKeys - cs.nDeletes, cs.nDeletes, cs.keys.get, batchTag)
       }
     } finally cs.release()
@@ -171,13 +184,23 @@ object Dv {
       val empty = spark
         .emptyDataset(org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol)
       Versioned.withWriteRetry() {
-        mergeOnce(spark, table, keyCol, cs.upserts, empty,
+        mergeOnce(spark, table, keyCol, Some(keyCol), cs.upserts, empty,
           cs.nRows, 0L, cs.keys.get, None, insertOnly)
       }
     } finally cs.release()
   }
 
+  /** The zero-copy commit every [[applyCdc]], [[merge]] and [[purge]]
+    * shares: the changed keys' live rows vectored out, the upserts
+    * appended beside a `_ref` to the untouched data dir. `keyCol` is the
+    * MATCH column and `tableKey` the key the table's indexes name (a
+    * merge passes its match column, a purge [[tableKey]]); the one rule
+    * between them is [[Upsert.applyChanges]]'s: appends sort on the table
+    * key and get Bloom sidecars only when one is known, and the feed
+    * names deleted rows by the match column when it is the table key and
+    * by the victims' whole rows (from the victim scan) otherwise. */
   private def mergeOnce(spark: SparkSession, table: String, keyCol: String,
+                        tableKey: Option[String],
                         upserts: DataFrame, deletes: DataFrame,
                         nUpserts: Long, nDeletes: Long, ks: Seq[Long],
                         batchTag: Option[String],
@@ -225,42 +248,47 @@ object Dv {
 
     // candidate files: the base data dir AND the live version's own
     // appended files (a prior zero-copy merge) — victims can live in both
-    val stats = StatsIndex.load(spark, dataDir)
-    def admitted(dir: String): Seq[Path] =
-      Versioned.dataFilePaths(spark, dir).map(new Path(_)).filter(
-        Forget.admitter(spark, dir, keyCol, ks,
-          if (dir == dataDir) stats else None))
     val ownParts =
       if (dataDir == liveVDir) Seq.empty
       else Versioned.dataFilePaths(spark, liveVDir).map(new Path(_))
-    val admittedAll = admitted(dataDir) ++
-      (if (dataDir == liveVDir) Seq.empty else admitted(liveVDir))
+    val admitted = admit(spark, liveVDir, dataDir, keyCol, ks)
+    if (admitted.isEmpty && nUpserts == 0L) return live // nothing to do
+    val byKey = tableKey.exists(_.equalsIgnoreCase(keyCol))
+    // a non-key delete of a keyed table names its victims by that key
+    val otherKey = tableKey.filterNot(_ => byKey)
 
+    // victim locations: ONE column-pruned scan of the admitted files (the
+    // victims' whole rows ride along when the feed needs them). Prior-
+    // vector rows are excluded so the count below means NEW deletes
+    // (re-deleting an already-deleted key stays a no-op).
     val hadVector = hasVector(spark, table, live)
     val prior =
       if (hadVector) readVector(spark, liveVDir)
       else spark
         .emptyDataset(org.apache.spark.sql.Encoders.product[(String, Long)])
         .toDF("file", "row_index")
-    val victims =
-      if (admittedAll.isEmpty)
-        prior.limit(0)
+    val scan =
+      if (admitted.isEmpty) prior.limit(0) // an insert-only batch
       else {
-        val located =
-          Versioned.readFiles(spark, dataDir, admittedAll.map(_.toString))
-            .select(col("_metadata.file_name").as("file"),
-              col("_metadata.row_index").as("row_index"),
-              col(keyCol).cast("long").as("_k"))
-            .filter(col("_k").isin(ks: _*))
-            .select(col("file"), col("row_index"))
+        val data =
+          Versioned.readFiles(spark, dataDir, admitted.map(_.toString))
+        val located = data
+          .select(Seq(col("_metadata.file_name").as("file"),
+            col("_metadata.row_index").as("row_index"),
+            col(keyCol).cast("long").as("_k")) ++
+            (if (byKey) Seq.empty
+             else Seq(struct(data.columns.toSeq.map(col): _*).as("_row"))): _*)
+          .filter(col("_k").isin(ks: _*))
+          .drop("_k")
         if (hadVector)
           located.join(broadcast(prior), Seq("file", "row_index"), "left_anti")
         else located
       }
-    victims.persist()
+    scan.persist()
     try {
-      // one job, no exchange (an aggregate count would add one)
-      val nNew = victims.queryExecution.toRdd.count()
+      // new deletes (0 = all named rows already deleted or absent)
+      val nNew = countVictims(if (byKey) scan else scan.select(col("_row.*")),
+        keyCol, ks.size.toLong, otherKey)
       // insert-only contract (SQL INSERT INTO on a zero-copy base):
       // a victim IS a live row carrying a changeset key — re-checked
       // each OCC attempt, same guarantee as Upsert.merge's guard
@@ -270,7 +298,20 @@ object Dv {
           "MERGE); refusing to guess which was meant")
       // nothing vectored AND nothing to upsert: the idempotent no-op
       if (nNew == 0L && nUpserts == 0L) return live
-      Clone.pin(spark, dataDir, table) // ordering argument: see purgeOnce
+      val victims = scan.select(col("file"), col("row_index"))
+      val (feedDeletes, nFeedDeletes) =
+        if (byKey) (deletes, nDeletes) else (scan.select(col("_row.*")), nNew)
+      // pin the shared data dir BEFORE publishing the ref (Clone.shallow's
+      // ordering argument: an orphaned pin blocks reclaim, a missing pin
+      // breaks reads silently). An OCC conflict below may abandon the pin
+      // — deliberately NOT released here: two concurrent commits share ONE
+      // pin file (pinName is (table, dataDir)-keyed), and a loser
+      // releasing it can unpin a winner whose rename is still in flight
+      // cross-process, silently exposing the live DV version to vacuum.
+      // Stale self-pins are instead garbage-collected by the next
+      // [[Versioned.vacuum]], whose exclusivity contract makes the
+      // no-version-references-this-dir check race-free.
+      Clone.pin(spark, dataDir, table)
       Versioned.publishFrom(spark, table, live) { dir =>
         val fd = fs(spark, dir)
         // 1. fresh appends FIRST (the parquet overwrite creates the dir);
@@ -284,11 +325,11 @@ object Dv {
             nUpserts / 1000000L + 1)).toInt
           upserts.select(cols.map(c =>
               col(s"`$c`").as(mapping.getOrElse(c, c))): _*)
-            .repartitionByRange(parts, col(keyCol))
-            .sortWithinPartitions(col(keyCol))
+            .repartitionByRange(parts, col(tableKey.getOrElse(keyCol)))
+            .sortWithinPartitions(col(tableKey.getOrElse(keyCol)))
             .write.mode("overwrite").parquet(dir)
           // Bloom sidecars for the appends (only they exist here yet)
-          BloomIndex.indexExisting(spark, dir, keyCol)
+          tableKey.foreach(BloomIndex.indexExisting(spark, dir, _))
         } else fd.mkdirs(new Path(dir))
         // 2. carry the prior zero-copy merges' appends forward (byte
         //    copies, changeset-scale) so _ref never chains
@@ -302,15 +343,15 @@ object Dv {
               BloomIndex.sidecar(dir, p.getName), false, conf)
         }
         // manifests ride the landing: when the base data dir is
-        // stats-indexed on this key, mint a `_stats` manifest over the
+        // stats-indexed, mint a `_stats` manifest on its key over the
         // new version's OWN files (fresh appends + carried priors) from
         // their footers — driver-side, changeset-scale — so plan-time
         // skipping ([[SkipScan]]) keeps pruning the landed files with
         // no ANALYZE in between
-        if (StatsIndex.keyOf(spark, dataDir).exists(
-            _.equalsIgnoreCase(keyCol)))
-          StatsIndex.buildFromFooters(spark, dir, keyCol)
-        // 3. ref + cumulative vector + tag + change feed, as purge
+        StatsIndex.keyOf(spark, dataDir)
+          .foreach(StatsIndex.buildFromFooters(spark, dir, _))
+        // 3. ref + cumulative vector (prior ∪ new: each version
+        //    self-describing) + tag + change feed
         val out = fd.create(new Path(s"$dir/_ref"), true)
         try out.write(dataDir.getBytes(StandardCharsets.UTF_8))
         finally out.close()
@@ -336,101 +377,44 @@ object Dv {
             new Path(s"$dir/_table_schema"), false, true, conf)
         Versioned.carryColumnMapping(f, liveVDir, fd, dir, conf)
         Cdf.record(spark, dir, schema,
-          upserts.select(cols.map(col): _*), nUpserts, deletes, nDeletes)
+          upserts.select(cols.map(col): _*), nUpserts, feedDeletes,
+          nFeedDeletes)
       }
-    } finally { victims.unpersist(); () }
+    } finally { scan.unpersist(); () }
   }
 
-  private def purgeOnce(spark: SparkSession, table: String, keyCol: String,
-                        keys: Seq[Long]): Long = {
-    require(keys.nonEmpty, "purge needs a non-empty key set")
-    val ks = keys.distinct
-    val live = Versioned.currentVersion(spark, table).getOrElse(
-      throw new IllegalStateException(s"no published version at $table"))
-    val liveVDir = s"$table/v=$live"
-    val dataDir = Versioned.dataDir(spark, table, live) // one hop, always
-    val f = fs(spark, table)
-    val conf = spark.sparkContext.hadoopConfiguration
-    // admission: same Bloom + stats/footer intersection as Forget.purge,
-    // over the DATA dir (the sidecars live beside the data) AND the live
-    // version's own appended files (a prior zero-copy merge leaves
-    // changeset-sized appends beside its _ref — victims can live there)
-    val stats = StatsIndex.load(spark, dataDir)
-    def admit(dir: String): Seq[Path] =
-      Versioned.dataFilePaths(spark, dir).map(new Path(_)).filter(
-        Forget.admitter(spark, dir, keyCol, ks,
-          if (dir == dataDir) stats else None))
-    val admitted = admit(dataDir) ++
-      (if (dataDir == liveVDir) Seq.empty else admit(liveVDir))
-    if (admitted.isEmpty) return live // no file can hold any key: no-op
+  /** The `part-` files of a version (its dir `versionDir`, its data dir
+    * `dataDir`) that may hold one of `keys` in `keyCol`: the data dir's,
+    * admitted with its `_stats` manifest, and the version's own appended
+    * files (a zero-copy merge's, beside its `_ref`), admitted by their
+    * sidecars and footers. The one DV-aware admission of the lake. */
+  private[lake] def admit(spark: SparkSession, versionDir: String,
+                          dataDir: String, keyCol: String,
+                          keys: Seq[Long]): Seq[Path] = {
+    def in(dir: String, stats: Option[Map[String, FileKeyStats]]) =
+      Versioned.dataFilePaths(spark, dir).map(new Path(_))
+        .filter(Forget.admitter(spark, dir, keyCol, keys, stats))
+    in(dataDir, StatsIndex.load(spark, dataDir)) ++
+      (if (versionDir == dataDir) Seq.empty else in(versionDir, None))
+  }
 
-    // victim locations: ONE column-pruned scan of the admitted files.
-    // Prior-vector rows are excluded so the count below means NEW deletes
-    // (re-deleting an already-deleted key stays a no-op).
-    val hadVector = hasVector(spark, table, live)
-    val prior =
-      if (hadVector) readVector(spark, liveVDir)
-      else spark.emptyDataset(org.apache.spark.sql.Encoders.product[(String, Long)])
-        .toDF("file", "row_index")
-    // the change feed names deleted rows by the TABLE's key: a purge on
-    // that key records the named keys; any other purge (on another
-    // column, or on a table whose key no index names) records the
-    // victims' whole rows, read in the same scan, so a consumer keyed on
-    // any column can name each deletion
-    val tk = tableKey(spark, dataDir)
-    val byKey = tk.exists(_.equalsIgnoreCase(keyCol))
-    val data = Versioned.readFiles(spark, dataDir, admitted.map(_.toString))
-    val located = data
-      .select(Seq(col("_metadata.file_name").as("file"),
-        col("_metadata.row_index").as("row_index"),
-        col(keyCol).cast("long").as("_k")) ++
-        (if (byKey) Seq.empty
-         else Seq(struct(data.columns.toSeq.map(col): _*).as("_row"))): _*)
-      .filter(col("_k").isin(ks: _*))
-      .drop("_k")
-    val scan =
-      if (hadVector)
-        located.join(broadcast(prior), Seq("file", "row_index"), "left_anti")
-      else located
-    // a non-key purge of a keyed table names its victims by that key
-    val otherKey = tk.filterNot(_ => byKey)
-    scan.persist()
-    try {
-      // ONE job, no exchange: new deletes (0 = all named rows already
-      // deleted or absent) and, on a non-key purge of a keyed table,
-      // victims whose table key is NULL
-      val (nNew, nNullKeys) = scan
-        .select(otherKey.fold(lit(false))(k => col("_row").getField(k).isNull))
-        .queryExecution.toRdd.aggregate((0L, 0L))(
-          (a, r) => (a._1 + 1, a._2 + (if (r.getBoolean(0)) 1 else 0)),
-          (a, b) => (a._1 + b._1, a._2 + b._2))
-      if (nNew == 0L) return live
-      otherKey.foreach { k =>
-        require(nNullKeys == 0L,
-          s"$nNullKeys row(s) matching the ${ks.size} $keyCol " +
-            s"value(s) have a NULL $k — the change feed could not name " +
-            s"their deletion; purge them by $k instead")
-      }
-      val victims = scan.select(col("file"), col("row_index"))
-      val feed =
-        if (byKey) (spark.createDataset(ks)(
-          org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol),
-          ks.size.toLong)
-        else (scan.select(col("_row.*")), nNew)
-      // pin the shared data dir BEFORE publishing the ref (Clone.shallow's
-      // ordering argument: an orphaned pin blocks reclaim, a missing pin
-      // breaks reads silently). An OCC conflict below may abandon the pin
-      // — deliberately NOT released here: two concurrent purges share ONE
-      // pin file (pinName is (table, dataDir)-keyed), and a loser
-      // releasing it can unpin a winner whose rename is still in flight
-      // cross-process, silently exposing the live DV version to vacuum.
-      // Stale self-pins are instead garbage-collected by the next
-      // [[Versioned.vacuum]], whose exclusivity contract makes the
-      // no-version-references-this-dir check race-free.
-      Clone.pin(spark, dataDir, table)
-      publishPurge(spark, table, live, liveVDir, dataDir,
-        prior, victims, nNew, feed, f, conf)
-    } finally { scan.unpersist(); () }
+  /** Rows of a delete's `victims`, counted in ONE job with no exchange.
+    * On a non-key delete of a keyed table the feed names each victim by
+    * that table key (`otherKey`), so a victim whose key is NULL rejects. */
+  private[lake] def countVictims(victims: DataFrame, keyCol: String,
+                                 nKeys: Long,
+                                 otherKey: Option[String]): Long = {
+    val (n, nNull) = victims.select(otherKey.fold(lit(false))(col(_).isNull))
+      .queryExecution.toRdd.aggregate((0L, 0L))(
+        (a, r) => (a._1 + 1, a._2 + (if (r.getBoolean(0)) 1 else 0)),
+        (a, b) => (a._1 + b._1, a._2 + b._2))
+    otherKey.foreach { k =>
+      require(nNull == 0L,
+        s"$nNull row(s) matching the $nKeys $keyCol value(s) have a NULL " +
+          s"$k — the change feed could not name their deletion; purge " +
+          s"them by $k instead")
+    }
+    n
   }
 
   /** The key the table's file indexes describe (`_bloom/_key`, else
@@ -438,59 +422,4 @@ object Dv {
   private[lake] def tableKey(spark: SparkSession,
                              dataDir: String): Option[String] =
     BloomIndex.keyOf(spark, dataDir).orElse(StatsIndex.keyOf(spark, dataDir))
-
-  private def publishPurge(spark: SparkSession, table: String, live: Long,
-                           liveVDir: String, dataDir: String,
-                           prior: DataFrame, victims: DataFrame,
-                           nNew: Long, feed: (DataFrame, Long),
-                           f: org.apache.hadoop.fs.FileSystem,
-                           conf: org.apache.hadoop.conf.Configuration)
-      : Long =
-    Versioned.publishFrom(spark, table, live) { dir =>
-        val fd = fs(spark, dir)
-        fd.mkdirs(new Path(dir))
-        // carry a prior zero-copy MERGE's appended files forward (byte
-        // copies, changeset-scale) — their rows are part of the snapshot
-        // and _ref only names the base dir
-        if (dataDir != liveVDir)
-          Versioned.dataFilePaths(spark, liveVDir).map(new Path(_))
-            .foreach { p =>
-              require(org.apache.hadoop.fs.FileUtil.copy(
-                f, p, fd, new Path(dir, p.getName), false, conf),
-                s"append carry failed: $p")
-              val bs = BloomIndex.sidecar(liveVDir, p.getName)
-              if (f.exists(bs))
-                org.apache.hadoop.fs.FileUtil.copy(f, bs, fd,
-                  BloomIndex.sidecar(dir, p.getName), false, conf)
-            }
-        // carried appends keep their manifest coverage (see mergeOnce)
-        if (dataDir != liveVDir)
-          StatsIndex.keyOf(spark, dataDir)
-            .foreach(StatsIndex.buildFromFooters(spark, dir, _))
-        val out = fd.create(new Path(s"$dir/_ref"), true)
-        try out.write(dataDir.getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-        // cumulative vector: prior ∪ new — each version self-describing
-        prior.unionByName(victims)
-          .coalesce(math.max(1, (nNew / 4000000L).toInt + 1))
-          .write.mode("overwrite").parquet(dvDir(dir))
-        // replay-dedup tag + change feed ride along like every DML
-        val tag = new Path(s"$liveVDir/_cdc_batch")
-        if (f.exists(tag))
-          org.apache.hadoop.fs.FileUtil.copy(
-            f, tag, f, new Path(s"$dir/_cdc_batch"), false, true, conf)
-        // carry an Evolve overlay's OWN schema marker (wins over the
-        // base dir's — see Versioned.schemaMarkerAt)
-        val sm = new Path(s"$liveVDir/_table_schema")
-        if (f.exists(sm))
-          org.apache.hadoop.fs.FileUtil.copy(f, sm, fd,
-            new Path(s"$dir/_table_schema"), false, true, conf)
-        Versioned.carryColumnMapping(f, liveVDir, fd, dir, conf)
-        val schema = Versioned.schemaAt(spark, table, live)
-        val (deletes, nDeletes) = feed
-        Cdf.record(spark, dir, schema,
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-          upsertRows = 0L, deletes = deletes, deleteRows = nDeletes)
-      }
 }

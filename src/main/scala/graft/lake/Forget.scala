@@ -27,6 +27,16 @@ import org.apache.spark.sql.functions._
  * output (on S3 a server-side copy; on HDFS a block copy) — so the rewrite
  * cost scales with the AFFECTED fraction, not the table.
  *
+ * One commit: a purge is a delete-only changeset ([[Changeset.deleting]])
+ * and commits through the rewrite commit every merge uses
+ * ([[Upsert.applyChanges]]) — admission, rewrite, byte copies, sidecars,
+ * `_stats`, tag, schema marker, change feed and commit record are that
+ * commit's. The table key ([[Dv.tableKey]]) decides the one thing a
+ * purge's commit does differently: a purge on that key records the
+ * named keys in the feed, any other purge the deleted rows whole. This
+ * object keeps the indexed publishes and the admission and byte-copy
+ * helpers the lake's commits use.
+ *
  * Versioning contract: the purged snapshot becomes `v=N+1` behind
  * [[Versioned]]'s manifest swap — readers never see a half-purged table,
  * and the pre-purge version stays readable (time travel) until
@@ -164,134 +174,32 @@ object Forget {
     }
   }
 
-  /** Delete every row whose `keyCol` is in `keys`, rewriting only
-    * Bloom-admitted files; returns the new live version (or the current
-    * one unchanged when no file can contain any key — an idempotent
-    * no-op, e.g. a re-submitted deletion request). The change feed names
-    * the deleted rows as [[Dv.purge]]'s does. */
+  /** Delete every row whose `keyCol` is in `keys`, rewriting only the
+    * admitted files; returns the new live version (or the current one
+    * unchanged when no file can contain any key — an idempotent no-op,
+    * e.g. a re-submitted deletion request). The purge is a delete-only
+    * changeset ([[Changeset.deleting]]) committed by the rewrite commit
+    * every merge uses ([[Upsert.applyChanges]]), with the table key
+    * ([[Dv.tableKey]]) deciding how the feed names the deleted rows and
+    * how the rewritten files are laid out; exempt from CHECK constraints
+    * (a delete adds no row), and rebased over a disjoint concurrent
+    * commit like a merge. */
   def purge(spark: SparkSession, table: String, keyCol: String,
-            keys: Seq[Long]): Long =
-    Versioned.withWriteRetry() { purgeOnce(spark, table, keyCol, keys) }
-
-  private def purgeOnce(spark: SparkSession, table: String, keyCol: String,
-                        keys: Seq[Long]): Long = {
+            keys: Seq[Long]): Long = {
     require(keys.nonEmpty, "purge needs a non-empty key set")
-    val ks = keys.distinct
-    val live = Versioned.currentVersion(spark, table).getOrElse(
-      throw new IllegalStateException(s"no published version at $table"))
-    require(!Versioned.isShallowRef(spark, table, live),
-      s"$table v$live is a shallow-clone reference (no data of its own) — " +
-        "Clone.materialize(...) first, then purge")
-    val liveDir = s"$table/v=$live"
-    val f = fs(spark, table)
-    val parts = f.listStatus(new Path(liveDir)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(_.getPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    // both prunes are conservative, so their INTERSECTION is safe: the
-    // Bloom sidecar carries hash-distributed layouts (min/max blind), the
-    // range stats carry range-clustered layouts (no sidecars needed);
-    // a file must be admitted by every available index to rewrite.
-    // Range source: the [[StatsIndex]] manifest when present (ONE
-    // metadata read for the whole dir), per-file footer opens otherwise.
-    val stats = StatsIndex.load(spark, liveDir)
-    val (affected, untouched) =
-      parts.partition(admitter(spark, liveDir, keyCol, ks, stats))
-    if (affected.isEmpty) return live
-    val marker = Versioned.readSchemaMarker(f, liveDir)
-    def affectedRows =
-      Versioned.readFiles(spark, liveDir, affected.map(_.toString))
-    // the key the table's indexes (and so its change feed) name rows by.
-    // A purge on that key records the named keys; any other purge (on
-    // another column, or on a table whose key no index names) records the
-    // victims' whole rows, so a consumer keyed on any column can name each
-    // deletion — and a victim of a keyed table whose key is NULL could
-    // not be named there: reject
-    val tk = Dv.tableKey(spark, liveDir)
-    val byKey = tk.exists(_.equalsIgnoreCase(keyCol))
-    // the rewritten files keep the table key's layout (keyCol's when no
-    // index names one)
-    val layoutKey = tk.getOrElse(keyCol)
-    def victimRows = affectedRows.filter(col(keyCol).isin(ks: _*))
-    val nFeedDeletes =
-      if (byKey) ks.size.toLong
-      else {
-        val r = victimRows.agg(count(lit(1)),
-          count(when(tk.fold(lit(false))(col(_).isNull), 1))).head()
-        tk.foreach { k =>
-          require(r.getLong(1) == 0L,
-            s"${r.getLong(1)} row(s) matching the ${ks.size} $keyCol " +
-              s"value(s) have a NULL $k — the change feed could not " +
-              s"name their deletion; purge them by $k instead")
-        }
-        r.getLong(0)
-      }
-
-    Versioned.publishFrom(spark, table, live) { newDir =>
-      // 1. rewrite the affected files in ONE distributed job (Spark owns
-      //    the dir): anti-filter the key set, keep file granularity with a
-      //    RANGE repartition + sort — restores sorted, mostly-disjoint
-      //    per-file ranges on the rewritten subset (boundaries are
-      //    sample-derived, so a rewritten file's [min,max] can straddle a
-      //    carried file's range; footer pruning stays conservative either
-      //    way, it just admits the occasional extra file on a later purge)
-      //    and is layout-neutral for hash-Bloom tables (their sidecars are
-      //    rebuilt below either way).
-      //    NULL-key guard: `!isin` is NULL for NULL keys and filter drops
-      //    NULL predicates — without the isNull arm, rows the deletion
-      //    request never named would vanish from rewritten files
-      affectedRows
-        .filter(col(keyCol).isNull || !col(keyCol).isin(ks: _*))
-        .repartitionByRange(affected.size, col(layoutKey))
-        .sortWithinPartitions(col(layoutKey))
-        .write.mode("overwrite").parquet(newDir)
-      // 2. fresh sidecars for the rewritten files (only they exist in
-      //    newDir at this point), on the table key; a table whose key no
-      //    index names gets none (they would name keyCol its key)
-      tk.foreach(BloomIndex.indexExisting(spark, newDir, _))
-      // 3. untouched files + their sidecars: raw byte copy, bitwise-equal
-      copyUntouched(f, conf, liveDir, newDir, untouched)
-      // 4. stats manifest rides along when the table keeps one: carried
-      //    files keep their rows, only the rewritten files read their own
-      //    footers (reuses the manifest the prune step already loaded)
-      StatsIndex.rebuildAfterRewrite(spark, liveDir, newDir,
-        StatsIndex.keyOf(spark, liveDir).getOrElse(layoutKey),
-        preloaded = stats)
-      //    token-Bloom twin: carried files' sidecars were byte-copied in
-      //    step 3; re-index just the rewritten files from the carried
-      //    recipe — touched-fraction maintenance, like `_stats`
-      TokenBloom.carryMeta(spark, liveDir, newDir)
-      TokenBloom.indexMissing(spark, newDir)
-      // 5. carry the CDC replay-dedup tag forward (see compactVersion): a
-      //    purge interleaved inside a streaming sink's crash window must
-      //    not erase the applied-batch watermark
-      val tag = new Path(s"$liveDir/_cdc_batch")
-      if (f.exists(tag))
-        org.apache.hadoop.fs.FileUtil.copy(
-          f, tag, f, new Path(s"$newDir/_cdc_batch"), false, true, conf)
-      // 6. so does the schema marker: byte-copied pre-evolution files keep
-      //    the new version's footer inference ambiguous
-      marker.foreach(Versioned.writeSchemaMarker(f, newDir, _))
-      // 7. change feed: a purge's changeset is its deletions
-      val schema = marker.getOrElse(Versioned.schemaOf(spark, liveDir))
-      Cdf.record(spark, newDir, schema,
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-        upsertRows = 0L,
-        deletes =
-          if (byKey) spark.createDataset(ks)(
-            org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol)
-          else victimRows,
-        deleteRows = nFeedDeletes)
-      // 8. file-level commit record (what this purge removed/added vs its
-      //    base) — lets a concurrent disjoint-file MERGE rebase over this
-      //    commit instead of re-deriving (see Upsert's conflict check)
-      val untouchedNames = untouched.map(_.getName).toSet
-      val added = f.listStatus(new Path(newDir)).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-        .map(_.getPath.getName).toSet -- untouchedNames
-      Versioned.writeCommitInfo(f, newDir,
-        Versioned.CommitInfo(live, affected.map(_.getName).toSet, added))
+    Versioned.withWriteRetry() {
+      val live = Versioned.currentVersion(spark, table).getOrElse(
+        throw new IllegalStateException(s"no published version at $table"))
+      require(!Versioned.isShallowRef(spark, table, live),
+        s"$table v$live is a shallow-clone reference (no data of its own) " +
+          "— Clone.materialize(...) first, then purge")
+      val dir = s"$table/v=$live"
+      val cs = Changeset.deleting(spark, Versioned.schemaOf(spark, dir),
+        keyCol, keys)
+      // the key count is the driver budget: a deletion request's keys
+      // are driver-resident already
+      Upsert.applyChanges(spark, table, cs, Dv.tableKey(spark, dir),
+        maxDriverKeys = cs.nKeys.toInt)
     }
   }
 }

@@ -146,25 +146,28 @@ object MatView {
   // exact additive accumulator type: closed under + and - across refreshes
   private val acc = DecimalType(38, 6)
 
-  // sign=+1 with mmCols adds min_/max_ legs; the MINUS side (sign=-1)
-  // never carries them — a removed row's min/max cannot be subtracted,
-  // that is exactly what the touched-group recompute handles. cntCols'
-  // NON-NULL counts (`cnt_<c>`, what AVG divides by) are sums of signed
-  // indicators, so — like n_rows and the sums — they subtract cleanly
-  // on BOTH sides.
+  // the sign column of a refresh's row-level frames: +1 a row that
+  // arrives, -1 a row that leaves
+  private val Sign = "_mv_sign"
+
+  // One aggregate over row-level rows, each counted with its `Sign` (+1
+  // when the frame has none). n_rows, the sums and cntCols' NON-NULL
+  // counts (`cnt_<c>`, what AVG divides by) are sums of signed terms, so
+  // they subtract cleanly; min_/max_ read the arriving rows only — a
+  // removed row's min/max cannot be subtracted, that is exactly what the
+  // touched-group recompute handles.
   private def grouped(df: DataFrame, groupCols: Seq[String],
-                      sumCols: Seq[String], sign: Int,
-                      mmCols: Seq[String] = Seq.empty,
-                      cntCols: Seq[String] = Seq.empty): DataFrame = {
-    val aggs = sum(lit(sign.toLong)).as("n_rows") +:
+                      sumCols: Seq[String], mmCols: Seq[String],
+                      cntCols: Seq[String]): DataFrame = {
+    val sign = if (df.columns.contains(Sign)) col(Sign) else lit(1)
+    val aggs = sum(sign).as("n_rows") +:
       (sumCols.map(c =>
         sum(col(c).cast(acc) * sign).cast(acc).as(s"sum_$c")) ++
         cntCols.map(c =>
-          sum(when(col(c).isNotNull, sign.toLong).otherwise(0L))
+          sum(when(col(c).isNotNull, sign).otherwise(0))
             .cast("long").as(s"cnt_$c")) ++
-        (if (sign > 0) mmCols.flatMap(c =>
-          Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-         else Seq.empty))
+        mmCols.flatMap(c => Seq(min(when(sign > 0, col(c))).as(s"min_$c"),
+          max(when(sign > 0, col(c))).as(s"max_$c"))))
     df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -188,8 +191,7 @@ object MatView {
     // the delete-maintainable denominator AVG needs (n_rows over-counts
     // when the column has NULLs) — a few longs per group row, and the
     // rewrite can then answer AVG(<c>) from the view
-    val mv = grouped(df, groupCols, sumCols, 1, minMaxCols,
-      cntCols = sumCols)
+    val mv = grouped(df, groupCols, sumCols, minMaxCols, cntCols = sumCols)
     Versioned.publishWith(spark, view) { dir =>
       mv.write.mode("overwrite").parquet(dir)
       writeSpec(spark, dir, s0)
@@ -222,25 +224,15 @@ object MatView {
   private def oldRows(spark: SparkSession, source: String, srcV: Long,
                       keyCol: String, keys: Seq[Long]): DataFrame = {
     val dir = preBatchDir(spark, source, srcV)
-    val f = fs(spark, dir)
+    // candidates: the data dir, plus a zero-copy MERGE version's own
+    // appended files (old rows for re-touched keys can be there)
+    val admitted =
+      if (keys.isEmpty) Seq.empty
+      else Dv.admit(spark, s"$source/v=$srcV", dir, keyCol, keys)
     // evolved sources hold mixed-schema files — pin via the version-aware
     // marker (an Evolve overlay's own marker wins over the data dir's)
-    val schema = Versioned.schemaAt(spark, source, srcV)
-    if (keys.isEmpty)
-      return spark.read.schema(schema).parquet(dir).limit(0)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val stats = StatsIndex.load(spark, dir)
-    // candidates: the data dir, plus a zero-copy MERGE version's own
-    // appended files (its updated/inserted rows live beside the _ref —
-    // old rows for re-touched keys can be there)
-    def admit(d: String): Seq[Path] =
-      Versioned.dataFilePaths(spark, d).map(new Path(_)).filter(
-        Forget.admitter(spark, d, keyCol, keys,
-          if (d == dir) stats else None))
-    val ownDir = s"$source/v=$srcV"
-    val admitted = admit(dir) ++
-      (if (ownDir == dir) Seq.empty else admit(ownDir))
-    if (admitted.isEmpty) spark.read.schema(schema).parquet(dir).limit(0)
+    if (admitted.isEmpty) spark.read
+      .schema(Versioned.schemaAt(spark, source, srcV)).parquet(dir).limit(0)
     else Dv.applyVector(spark, source, srcV,
       Versioned.readFiles(spark, dir, admitted.map(_.toString)))
       .filter(col(keyCol).isin(keys: _*))
@@ -395,27 +387,20 @@ object MatView {
             batch.select(col(s.keyCol).cast("long").as("_k")).distinct())
         }, s)
       val mm = s.minMaxCols
-      // the min/max leg reads the old rows twice (minus side + touched
-      // groups) — one materialization serves both
+      // the min/max leg reads the old rows twice (delta + touched groups)
+      // — one materialization serves both
       if (mm.nonEmpty) { oldOfBatch.persist(); oldCached = Some(oldOfBatch) }
-      val minus = grouped(oldOfBatch, s.groupCols, s.sumCols, -1,
-        cntCols = s.cntCols)
-      // plus side: the batch's new rows (I and U carry full rows) — the
-      // derived group columns materialize on the batch like any source
-      // frame ([[withDerived]])
-      val plus = grouped(
-        withDerived(batch.filter(col(opCol) =!= "D").drop(opCol), s),
-        s.groupCols, s.sumCols, 1, mm, cntCols = s.cntCols)
-      val deltaAggs = sum(col("n_rows")).as("n_rows") +:
-        (s.sumCols.map(c =>
-          sum(col(s"sum_$c")).cast(acc).as(s"sum_$c")) ++
-          s.cntCols.map(c =>
-            sum(col(s"cnt_$c")).cast("long").as(s"cnt_$c")) ++
-          mm.flatMap(c => Seq(min(col(s"min_$c")).as(s"min_$c"),
-            max(col(s"max_$c")).as(s"max_$c"))))
-      val delta = plus.unionByName(minus, allowMissingColumns = true)
-        .groupBy(s.groupCols.map(col): _*)
-        .agg(deltaAggs.head, deltaAggs.tail: _*)
+      // delta: ONE aggregate over the batch's new rows (I and U carry
+      // full rows; the derived group columns materialize on the batch
+      // like any source frame, [[withDerived]]) signed +1, and the old
+      // rows signed -1
+      val used = (s.groupCols ++ s.sumCols ++ s.cntCols ++ mm).distinct
+      def signed(df: DataFrame, sign: Int) =
+        df.select(used.map(col) :+ lit(sign).as(Sign): _*)
+      val delta = grouped(
+        signed(withDerived(batch.filter(col(opCol) =!= "D").drop(opCol), s), 1)
+          .unionByName(signed(oldOfBatch, -1)),
+        s.groupCols, s.sumCols, mm, s.cntCols)
       // merge: view is group-grain, delta is group-grain — full outer on
       // the group key, add, drop emptied groups (n_rows == 0 means every
       // underlying row left; sums are then exact zeros by construction).
@@ -476,8 +461,7 @@ object MatView {
             } else
               srcNow.join(touchedJ, matchCond(srcNow), "left_semi")
           val recomputed =
-            grouped(touchedRows, s.groupCols, s.sumCols, 1, mm,
-              cntCols = s.cntCols)
+            grouped(touchedRows, s.groupCols, s.sumCols, mm, s.cntCols)
           merged.join(touchedJ, matchCond(merged), "left_anti")
             .unionByName(recomputed)
         }

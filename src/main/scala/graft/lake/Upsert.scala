@@ -97,7 +97,7 @@ object Upsert {
             s"$table — an insert on a live key is an UPDATE (or a " +
             "MERGE); refusing to guess which was meant")
       }
-      applyChanges(spark, table, cs, mergeContract = true,
+      applyChanges(spark, table, cs, Some(keyCol), mergeContract = true,
         evolveSchema = evolveSchema, maxDriverKeys = maxDriverKeys)
     } finally cs.release()
   }
@@ -148,7 +148,7 @@ object Upsert {
     // once per statement, before any version claim
     Constraints.enforce(spark, table, cs.upserts, "applyCdc")
     Versioned.withWriteRetry() { // re-derive from the new live on conflict
-      applyChanges(spark, table, cs, mergeContract = false, batchTag,
+      applyChanges(spark, table, cs, Some(cs.keyCol), batchTag = batchTag,
         evolveSchema = evolveSchema, maxDriverKeys = maxDriverKeys)
     }
   }
@@ -279,14 +279,32 @@ object Upsert {
       }: _*)
   }
 
-  /** `mergeContract`: [[merge]]'s NULL-key and duplicate-key rejects,
+  /** The rewrite commit every merge and [[Forget.purge]] share: one
+    * version derived from the live one, its admitted files rewritten
+    * without the changeset's keys and with its upsert rows, every other
+    * file byte-copied.
+    *
+    * `cs.keyCol` is the MATCH column; `tableKey` is the key the table's
+    * indexes name (a merge passes its match column, a purge
+    * [[Dv.tableKey]]). One rule follows from the two: the rewritten files
+    * are range-laid out on the table key (the match column when none is
+    * known) and get Bloom sidecars only when a table key is known; the
+    * `_stats` manifest keeps its own key. The change feed names deleted
+    * rows by the match column when it is the table key, and by the
+    * victims' whole rows otherwise, so a consumer keyed on any column
+    * can name each deletion; a victim whose table key is NULL could not
+    * be named there and rejects.
+    *
+    * `mergeContract`: [[merge]]'s NULL-key and duplicate-key rejects,
     * checked after the schema checks as they always were; a CDC batch
     * was held to its contract before the retry. */
-  private def applyChanges(spark: SparkSession, table: String,
-                           cs: Changeset, mergeContract: Boolean,
-                           batchTag: Option[String] = None,
-                           evolveSchema: Boolean = false,
-                           maxDriverKeys: Int = MaxDriverKeysDefault): Long = {
+  private[lake] def applyChanges(spark: SparkSession, table: String,
+                                 cs: Changeset, tableKey: Option[String],
+                                 mergeContract: Boolean = false,
+                                 batchTag: Option[String] = None,
+                                 evolveSchema: Boolean = false,
+                                 maxDriverKeys: Int = MaxDriverKeysDefault)
+      : Long = {
     import spark.implicits._
     val keyCol = cs.keyCol
     val upserts = cs.upserts
@@ -378,15 +396,17 @@ object Upsert {
       //    the live version joined against the batch keys (exact
       //    admission), anti-join survivor filter — no key ever resides on
       //    the driver, right for restatement-sized batches.
-      val (affected, untouched, keepSurvivors, driverKeys) =
+      val (affected, untouched, keepSurvivors, victimsOf, driverKeys) =
         cs.keys.filter(_ => nKeys <= maxDriverKeys) match {
         case Some(ks) =>
           val (aff, unt) =
             parts.partition(Forget.admitter(spark, liveDir, keyCol, ks, stats))
-          // NULL-key guard as in Forget.purge — `!isin` is NULL for NULL
-          // keys, and NULL-key rows always survive (no key names them)
+          // NULL-key guard: `!isin` is NULL for NULL keys, and filter
+          // drops NULL predicates — NULL-key rows always survive (no key
+          // names them)
           (aff, unt, (df: DataFrame) =>
             df.filter(col(keyCol).isNull || !col(keyCol).isin(ks: _*)),
+            (df: DataFrame) => df.filter(col(keyCol).isin(ks: _*)),
             Some(ks))
         case None =>
           val keys = upserts.select(col(keyCol).cast("long").as("_k"))
@@ -403,15 +423,29 @@ object Upsert {
           val (aff, unt) = parts.partition(p => affNames.contains(p.getName))
           // anti-join survivors: NULL keys never match a join key, so
           // NULL-key rows survive exactly as under the driver path
-          (aff, unt, (df: DataFrame) =>
-            df.join(keys, df(keyCol).cast("long") === keys("_k"),
-              "left_anti"),
-            None)
+          def on(df: DataFrame) = df(keyCol).cast("long") === keys("_k")
+          (aff, unt, (df: DataFrame) => df.join(keys, on(df), "left_anti"),
+            (df: DataFrame) => df.join(keys, on(df), "left_semi"), None)
       }
-      // vacuous batch (e.g. a delete-only replay whose keys no file can
-      // hold, nothing to insert): Forget.purge's idempotent no-op — a
-      // publish here would byte-copy the WHOLE table for nothing
+      // vacuous batch (e.g. a delete-only replay or a re-submitted purge
+      // whose keys no file can hold, nothing to insert): the idempotent
+      // no-op — a publish here would byte-copy the WHOLE table for nothing
       if (affected.isEmpty && nUpserts == 0L) return live
+      // affected files are read under the OUTPUT schema: they may predate
+      // an evolution (new columns null-fill), and explicit-schema reads
+      // are exactly the plain read when no evolution ever happened
+      def affectedRows =
+        spark.read.schema(outSchema).parquet(affected.map(_.toString): _*)
+      val layoutKey = tableKey.getOrElse(keyCol)
+      val statsKey = stats.flatMap(_ => StatsIndex.keyOf(spark, liveDir))
+        .getOrElse(layoutKey)
+      val (feedDeletes, nFeedDeletes) =
+        if (tableKey.exists(_.equalsIgnoreCase(keyCol)) || affected.isEmpty)
+          (deletes, nDeletes)
+        else {
+          val victims = victimsOf(affectedRows)
+          (victims, Dv.countVictims(victims, keyCol, nKeys, tableKey))
+        }
 
       derivations.incrementAndGet()
       val ourRemoved = affected.map(_.getName).toSet
@@ -486,7 +520,7 @@ object Upsert {
                 TokenBloom.sidecar(stage, n), false, conf)
           }
           if (StatsIndex.exists(spark, stage))
-            StatsIndex.rebuildAfterRewrite(spark, compDir, stage, keyCol,
+            StatsIndex.rebuildAfterRewrite(spark, compDir, stage, statsKey,
               preloaded = compStats)
           carried = carried -- info.removed ++ info.added
           Versioned.writeCommitInfo(f, stage,
@@ -500,15 +534,11 @@ object Upsert {
       // throws so the retry wrapper re-derives (OCC)
       Versioned.publishFromRebasing(spark, table, live)({ newDir =>
         // survivors: affected-file rows not named by the changeset, plus
-        // the upsert rows, column-aligned to the table's order — read
-        // under the OUTPUT schema: affected files may predate an
-        // evolution (new columns null-fill), and explicit-schema reads are
-        // exactly the plain read when no evolution ever happened
+        // the upsert rows, column-aligned to the table's order
         val survivors =
           if (affected.isEmpty)
             spark.read.schema(outSchema).parquet(liveDir).limit(0)
-          else keepSurvivors(spark.read.schema(outSchema)
-            .parquet(affected.map(_.toString): _*))
+          else keepSurvivors(affectedRows)
         // Rewrite width: the affected-file count when files rewrite; for a
         // PURE-INSERT batch (no admitted files) that count is 0 and a
         // backfill-sized insert must not land in ONE oversized file — size
@@ -526,12 +556,12 @@ object Upsert {
           }
         survivors.select(outCols.map(col): _*)
           .unionByName(upserts.select(outCols.map(col): _*))
-          .repartitionByRange(rewriteParts, col(keyCol))
-          .sortWithinPartitions(col(keyCol))
+          .repartitionByRange(rewriteParts, col(layoutKey))
+          .sortWithinPartitions(col(layoutKey))
           .write.mode("overwrite").parquet(newDir)
-        BloomIndex.indexExisting(spark, newDir, keyCol)
+        tableKey.foreach(BloomIndex.indexExisting(spark, newDir, _))
         Forget.copyUntouched(f, conf, liveDir, newDir, untouched)
-        StatsIndex.rebuildAfterRewrite(spark, liveDir, newDir, keyCol,
+        StatsIndex.rebuildAfterRewrite(spark, liveDir, newDir, statsKey,
           preloaded = stats)
         // token-Bloom twin: untouched sidecars byte-copied above; rebuild
         // ONLY the rewritten files' from the carried recipe
@@ -555,7 +585,8 @@ object Upsert {
         // change feed: this version's OWN changeset, atomic with the swap
         // (row count == distinct keys, enforced above — no extra action)
         Cdf.record(spark, newDir, outSchema,
-          upserts.select(outCols.map(col): _*), nUpserts, deletes, nDeletes)
+          upserts.select(outCols.map(col): _*), nUpserts, feedDeletes,
+          nFeedDeletes)
         // an EVOLVING merge also poisons the streaming tail (one _op="S"
         // row — a fixed-schema raw tail would silently drop the new
         // columns from every later change; batch readers filter it)

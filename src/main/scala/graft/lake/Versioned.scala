@@ -346,7 +346,8 @@ object Versioned {
     * rebase: `base` (the version derived from), `removed` (base data
     * files NOT carried into this version: the rewritten-away admitted
     * set) and `added` (fresh files this commit wrote). Written by
-    * [[Upsert]] and [[Forget.purge]] inside the version dir (atomic with
+    * the rewrite commit [[Upsert.applyChanges]] (merges and
+    * [[Forget.purge]]) inside the version dir (atomic with
     * the commit rename); absent on blind publishes, layout maintenance
     * and DV versions — which therefore never rebase over. */
   private[lake] final case class CommitInfo(base: Long,
@@ -763,8 +764,9 @@ object Versioned {
   /** The `_table_schema` marker of a version DATA dir: the table's
     * authoritative [[org.apache.spark.sql.types.StructType]] (as Spark
     * schema JSON), written by the first schema-EVOLVING merge and carried
-    * forward by every later file-targeted rewrite
-    * ([[Upsert]]/[[Forget.purge]]/[[Compact.compactVersion]]). Absent on
+    * forward by every later file-targeted rewrite: the rewrite commit
+    * ([[Upsert.applyChanges]], which merges and [[Forget.purge]] share),
+    * [[Compact.compactVersion]], and the zero-copy commit's carry. Absent on
     * tables that never evolved — their files all agree, inference is
     * safe. */
   private[lake] def readSchemaMarker(
